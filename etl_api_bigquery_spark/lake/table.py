@@ -42,6 +42,7 @@ cost is never O(files) on one node.
 
 from __future__ import annotations
 
+import functools
 import glob
 import json
 import os
@@ -128,12 +129,14 @@ class Snapshot:
         return out
 
 
-def _schema_with_engine_cols(schema: T.StructType, kind: str = "base") -> T.StructType:
-    """All data files carry (_bucket, _lsn, _op). _op in BASE files encodes
-    delete tombstones: a deleted key keeps a row with _op='D' and the
-    delete's LSN, so an out-of-order OLDER event can never resurrect it
-    (found by the hypothesis property suite). Public reads filter tombstones;
-    expire_tombstones() GCs them once the feed's low-watermark passes."""
+def _schema_with_engine_cols(schema: T.StructType) -> T.StructType:
+    """Every data file, base or delta, carries (_bucket, _lsn, _op) after the
+    user columns, so files of both kinds share one layout and one scan. _op
+    in BASE files encodes delete tombstones: a deleted key keeps a row with
+    _op='D' and the delete's LSN, so an out-of-order OLDER event can never
+    resurrect it (found by the hypothesis property suite). Public reads
+    filter tombstones; expire_tombstones() GCs them once the feed's
+    low-watermark passes."""
     extra = [T.StructField(BUCKET_COL, T.IntegerType()),
              T.StructField(LSN_COL, T.LongType()),
              T.StructField(OP_COL, T.StringType())]
@@ -479,28 +482,24 @@ class LakeTable:
 
     # ----------------------------------------------------------------- reads
 
-    def _read_entries(self, snap: Snapshot, entries: list[FileEntry],
-                      kind: str) -> DataFrame:
-        """Read one kind of files, grouped by schema_id so old files are read
-        with the schema they were written with, then cast/padded to the
-        current one (safe widening reads)."""
-        cur_schema = _schema_with_engine_cols(snap.schema, kind)
-        sel = [e for e in entries if e.kind == kind]
-        if not sel:
-            return self.spark.createDataFrame([], cur_schema)
+    def _read_entries(self, snap: Snapshot,
+                      entries: list[FileEntry]) -> DataFrame:
+        """Read base and delta files alike in ONE parquet scan per schema_id:
+        old files are read with the schema they were written with, then
+        cast/padded to the current one (safe widening reads). No files
+        yields an empty relation with no RDD behind it."""
+        cur_schema = _schema_with_engine_cols(snap.schema)
+        if not entries:
+            return _conform(self.spark.range(0), cur_schema)
         by_sid: dict[int, list[str]] = {}
-        for e in sel:
+        for e in entries:
             by_sid.setdefault(e.schema_id, []).append(
                 os.path.join(self.location, e.path))
-        parts: list[DataFrame] = []
-        for sid, paths in sorted(by_sid.items()):
-            written = _schema_with_engine_cols(snap.schemas[sid], kind)
-            part = self.spark.read.schema(written).parquet(*paths)
-            parts.append(_conform(part, cur_schema))
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-        return df
+        return functools.reduce(DataFrame.unionByName, [
+            _conform(self.spark.read
+                     .schema(_schema_with_engine_cols(snap.schemas[sid]))
+                     .parquet(*paths), cur_schema)
+            for sid, paths in sorted(by_sid.items())])
 
     def prune_files(self, entries: list[FileEntry],
                     predicates: list[tuple[str, str, Any]]) -> list[FileEntry]:
@@ -533,12 +532,13 @@ class LakeTable:
         """Snapshot read. ``buckets`` prunes to the given bucket ids using the
         manifest (no file even opened for pruned buckets).
 
-        Merge-on-read resolution: if the selected snapshot contains delta
-        files (written by ``merge_cdc_batch(mode="mor")``), base and delta
-        rows are unioned and collapsed per key to the max-LSN row, dropping
-        delete tombstones — the same LWW rule the COW merge applies at write
-        time. Compaction (:meth:`compact_deltas`) bounds the number of deltas
-        so read amplification stays O(1) per bucket."""
+        Every selected file, base or delta, is read in one scan per
+        schema_id. If any is a delta (merge-on-read or raw L0 change file),
+        the rows are collapsed per key to the max-LSN row by
+        :meth:`_resolve_lww` — the same LWW rule the COW merge applies at
+        write time — and a caller's key predicates still reach the parquet
+        scan through it. Compaction (:meth:`compact_deltas`) bounds the
+        number of deltas so read amplification stays O(1) per bucket."""
         self.join_pending_commit()        # read-your-writes under async commit
         snap = self.snapshot(version)
         entries = snap.files_for_buckets(buckets)
@@ -550,37 +550,27 @@ class LakeTable:
                 raise ValueError("skip_predicates requires compacted buckets "
                                  "(run compact_deltas first)")
             entries = self.prune_files(entries, skip_predicates)
-        base = self._read_entries(snap, entries, "base")
-        has_delta = any(e.kind == "delta" for e in entries)
-        if not has_delta:
-            df = base
-        else:
-            delta = self._read_entries(snap, entries, "delta")
-            df = self._resolve_lww(base.unionByName(delta))
+        df = self._read_entries(snap, entries)
+        if any(e.kind == "delta" for e in entries):
+            df = self._resolve_lww(df)
         if not with_bucket:
             # public read: hide tombstones and engine columns
             df = (df.filter(F.coalesce(F.col(OP_COL), F.lit("U")) != "D")
                   .drop(BUCKET_COL, LSN_COL, OP_COL))
         return df
 
-    def _resolve_lww(self, unioned: DataFrame,
-                     drop_tombstones: bool = False) -> DataFrame:
-        """Collapse base+delta rows to the max-LSN row per key. Winning D
-        rows are KEPT as tombstones (public reads filter them; they guard
-        against resurrection by out-of-order older events). NULL keys group
-        via the same coalesce rule as bucketing."""
+    def _resolve_lww(self, rows: DataFrame) -> DataFrame:
+        """Collapse rows to the max-LSN row per key. Winning D rows are KEPT
+        as tombstones (public reads filter them; they guard against
+        resurrection by out-of-order older events). The window partitions by
+        the plain key columns, grouping NULL keys as :func:`lww_dedup` does,
+        so Spark can push a caller's key filter below it to the scan."""
         from pyspark.sql import Window
 
-        keys = self.key_cols
-        w = Window.partitionBy(*[
-            F.coalesce(F.col(k).cast("string"), F.lit("\x00null")) for k in keys
-        ]).orderBy(F.col(LSN_COL).desc(),
-                   F.coalesce(F.col(OP_COL), F.lit("U")).desc())
-        out = (unioned.withColumn("_rn", F.row_number().over(w))
-               .filter(F.col("_rn") == 1).drop("_rn"))
-        if drop_tombstones:
-            out = out.filter(F.coalesce(F.col(OP_COL), F.lit("U")) != "D")
-        return out
+        w = Window.partitionBy(*self.key_cols).orderBy(
+            F.col(LSN_COL).desc(), F.coalesce(F.col(OP_COL), F.lit("U")).desc())
+        return (rows.withColumn("_rn", F.row_number().over(w))
+                .filter(F.col("_rn") == 1).drop("_rn"))
 
     def expire_tombstones(self, below_lsn: int,
                           properties: dict[str, Any] | None = None) -> int:
@@ -655,7 +645,7 @@ class LakeTable:
         Stats come from parquet footers only.
         """
         abs_dir, rel_dir, wjs = self._run_write_job(
-            df, version, schema, kind=kind, repartition=repartition,
+            df, version, schema, repartition=repartition,
             bucket_pure=bucket_pure, bucket_groups=bucket_groups)
         _th = time.monotonic()
         entries = self._harvest_entries(abs_dir, rel_dir, schema_id, kind)
@@ -670,8 +660,8 @@ class LakeTable:
 
     def _run_write_job(
         self, df: DataFrame, version: int, schema: T.StructType,
-        kind: str = "base", repartition: bool = True,
-        bucket_pure: bool = True, bucket_groups: int | None = None,
+        repartition: bool = True, bucket_pure: bool = True,
+        bucket_groups: int | None = None,
     ) -> tuple[str, str, float]:
         """The Spark-job half of :meth:`_write_data_files`: materialize the
         data files and return ``(abs_dir, rel_dir, write_job_seconds)``
@@ -683,8 +673,7 @@ class LakeTable:
         if OP_COL not in out.columns:
             out = out.withColumn(OP_COL, F.lit("U"))
         # conform column order/types to the table schema + engine cols
-        target = _schema_with_engine_cols(schema, kind)
-        out = _conform(out, target)
+        out = _conform(out, _schema_with_engine_cols(schema))
         rel_dir = f"{_DATA_DIR}/c{version:010d}-{uuid.uuid4().hex[:8]}"
         abs_dir = os.path.join(self.location, rel_dir)
         _tw = time.monotonic()
@@ -943,7 +932,7 @@ class LakeTable:
             return v
         # run the parallel part now; defer the driver-serial tail
         abs_dir, rel_dir, wjs = self._run_write_job(
-            df, version, snap.schema, kind="delta", repartition=repartition,
+            df, version, snap.schema, repartition=repartition,
             bucket_pure=bucket_pure, bucket_groups=bucket_groups)
         # ordering: the previous async commit must be fully on disk before
         # this one may land (also bounds in-flight finalizers to one)
@@ -954,28 +943,32 @@ class LakeTable:
                                  int(props0["txn_batch"]))
 
         def _finalize() -> int:
-            _th = time.monotonic()
-            entries = self._harvest_entries(abs_dir, rel_dir,
-                                            snap.schema_id, "delta")
-            self.last_write_phases = {
-                "write_job_s": wjs,
-                "harvest_s": round(time.monotonic() - _th, 4),
-                "n_files": len(entries),
-                "out_bytes": sum(e.bytes for e in entries),
-            }
-            props = dict(props0)
-            if props_fn is not None:
-                props.update(props_fn(entries))
-            v = version
-            while True:
-                try:
-                    v = self._write_commit(v, "merge_mor", snap.schema,
-                                           snap.schema_id, entries, [], props)
-                    break
-                except CommitConflictError:
-                    v = self.snapshot().version + 1
-            # commit is durable: the log itself now carries the fence
-            self._pending_txn = None
+            try:
+                _th = time.monotonic()
+                entries = self._harvest_entries(abs_dir, rel_dir,
+                                                snap.schema_id, "delta")
+                self.last_write_phases = {
+                    "write_job_s": wjs,
+                    "harvest_s": round(time.monotonic() - _th, 4),
+                    "n_files": len(entries),
+                    "out_bytes": sum(e.bytes for e in entries),
+                }
+                props = dict(props0)
+                if props_fn is not None:
+                    props.update(props_fn(entries))
+                v = version
+                while True:
+                    try:
+                        v = self._write_commit(v, "merge_mor", snap.schema,
+                                               snap.schema_id, entries, [],
+                                               props)
+                        break
+                    except CommitConflictError:
+                        v = self.snapshot().version + 1
+            finally:
+                # landed: the log itself now carries the fence; failed: the
+                # batch is not in the table, so it must not count as fenced
+                self._pending_txn = None
             if post_commit is not None:
                 post_commit(v)
             return v
@@ -1002,7 +995,10 @@ class LakeTable:
         try:
             return f.result()
         finally:
-            self._commit_future = None
+            # compare-and-clear: a concurrent joiner (the lake-maint thread)
+            # must not drop a newer finalizer submitted while it waited
+            if self._commit_future is f:
+                self._commit_future = None
 
     # ------------------------------------------------------- maintenance
 

@@ -329,6 +329,63 @@ def test_async_finalize_failure_surfaces(spark, tmp_table_dir):
     assert t.read().count() == 0
 
 
+def test_async_finalize_failure_unfences_batch(spark, tmp_table_dir):
+    """A failed background commit must not leave its batch counted by the
+    fence: last_txn falls back to the last batch that actually landed."""
+    t = make_table(spark, tmp_table_dir)
+    t.append_deltas(_delta_df(spark, 5), repartition=False,
+                    properties={"txn_app": "a1", "txn_batch": 7},
+                    async_finalize=True)
+    t.join_pending_commit()
+
+    def boom(adds):
+        raise RuntimeError("lineage exploded")
+
+    t.append_deltas(_delta_df(spark, 5, "b"), repartition=False,
+                    properties={"txn_app": "a1", "txn_batch": 8},
+                    props_fn=boom, async_finalize=True)
+    with pytest.raises(RuntimeError, match="lineage exploded"):
+        t.join_pending_commit()
+    assert t.last_txn("a1") == 7
+
+
+def test_join_pending_commit_keeps_newer_finalizer(spark, tmp_table_dir):
+    """The maintenance thread joins finalizer N while the foreground submits
+    N+1: the maintenance join must not clear N+1's future, so a later join
+    still waits for N+1 and returns its version."""
+    import threading
+
+    t = make_table(spark, tmp_table_dir)
+    t.append_deltas(_delta_df(spark, 5), repartition=False,
+                    async_finalize=True)
+    inner, maint_waiting, release = (t._commit_future, threading.Event(),
+                                     threading.Event())
+
+    class HeldForMaint:
+        """Finalizer N's future; the maintenance thread's join of it stays
+        open until the foreground has submitted N+1."""
+
+        def result(self):
+            v = inner.result()
+            if threading.current_thread().name.startswith("lake-maint"):
+                maint_waiting.set()
+                release.wait(30)
+            return v
+
+    t._commit_future = HeldForMaint()
+    maint = threading.Thread(target=t.join_pending_commit,
+                             name="lake-maint-join")
+    maint.start()
+    assert maint_waiting.wait(30)
+    t.append_deltas(_delta_df(spark, 10, "b"), repartition=False,
+                    async_finalize=True)     # joins N, submits N+1
+    release.set()
+    maint.join(30)
+    assert not maint.is_alive()
+    assert t.join_pending_commit() == 2
+    assert t.read().count() == 10
+
+
 def test_async_finalize_requires_raw_mode(spark, tmp_table_dir):
     from etl_api_bigquery_spark.lake.merge import merge_cdc_batch
     t = make_table(spark, tmp_table_dir)

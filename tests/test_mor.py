@@ -2,6 +2,7 @@
 equivalence, auto-compaction trigger, COW/MOR interop, time travel."""
 
 import os
+import re
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -10,6 +11,7 @@ from etl_api_bigquery_spark.cdc import change_feed, expected_final_state
 from etl_api_bigquery_spark.cdc.oracle import assert_replay_match
 from etl_api_bigquery_spark.lake import LakeTable
 from etl_api_bigquery_spark.lake.merge import merge_cdc_batch
+from etl_api_bigquery_spark.plans.inspect import plan_text
 
 SILVER = T.StructType([
     T.StructField("repo", T.StringType()),
@@ -253,3 +255,79 @@ def test_raw_auto_l0_groups_end_to_end(spark, tmp_table_dir, tmp_path):
     assert 1 <= g <= t.num_buckets      # tiny batch -> coarse grouping
     assert 0 < t.l0_out_ratio           # trailing ratio now measured
     assert_replay_match(t.read(), expected_final_state(feed))
+
+
+def test_read_matches_oracle_on_every_file_layout(spark, tmp_table_dir):
+    """One-scan reads agree with the batch oracle whatever the selected files
+    are: all delta (raw L0), base plus delta, base only, and no files."""
+    feed = change_feed(spark, n_events=3000, n_keys=120, n_epochs=3).cache()
+    expected = expected_final_state(feed)
+    layouts = {"all_delta": ["raw", "raw", "raw"],
+               "mixed": ["cow", "raw", "raw"],
+               "base_only": ["cow", "cow", "cow"]}
+    for name, modes in layouts.items():
+        t = LakeTable.create(spark, os.path.join(tmp_table_dir, name), SILVER,
+                             key_cols=["repo", "path"], num_buckets=4)
+        for e, mode in enumerate(modes):
+            merge_cdc_batch(t, feed.filter(F.col("epoch") == e), e, name,
+                            mode=mode, auto_compact_deltas=10**6)
+        kinds = {e.kind for e in t.snapshot().files.values()}
+        assert kinds == {"all_delta": {"delta"}, "mixed": {"base", "delta"},
+                         "base_only": {"base"}}[name]
+        assert_replay_match(t.read(), expected)
+    fresh = make_table(spark, tmp_table_dir)
+    got = fresh.read()
+    assert [(f.name, f.dataType) for f in got.schema.fields] == \
+        [(f.name, f.dataType) for f in SILVER.fields]
+    assert_replay_match(got, expected_final_state(feed.limit(0)))
+    assert fresh.read(with_bucket=True).count() == 0
+    feed.unpersist()
+
+
+def test_read_resolves_across_schema_ids_in_one_bucket(spark, tmp_table_dir):
+    """A file written before evolve_schema shares its bucket with newer
+    deltas: each schema id gets its own scan, both are conformed to the
+    current schema, and LWW resolves across them."""
+    schema = T.StructType([T.StructField(c, T.StringType())
+                           for c in ("repo", "path", "content")])
+    t = LakeTable.create(spark, os.path.join(tmp_table_dir, "evo"), schema,
+                         key_cols=["repo", "path"], num_buckets=1)
+    old = spark.createDataFrame(
+        [(i, 0, "U", "r", f"p{i}", "old") for i in range(6)],
+        "lsn long, epoch long, op string, repo string, path string, "
+        "content string")
+    new = spark.createDataFrame(
+        [(10 + i, 1, "U", "r", f"p{i}", "new", 7) for i in range(3)]
+        + [(20, 1, "D", "r", "p3", None, None)],
+        "lsn long, epoch long, op string, repo string, path string, "
+        "content string, stars long")
+    merge_cdc_batch(t, old, 0, "evo", mode="raw", auto_compact_deltas=10**6)
+    merge_cdc_batch(t, new, 1, "evo", mode="raw", auto_compact_deltas=10**6)
+    files = t.snapshot().files.values()
+    assert {e.schema_id for e in files} == {0, 1}
+    assert t.buckets_of_entries(files) == {0}
+    got = sorted(tuple(r) for r in t.read().collect())
+    assert got == ([("r", f"p{i}", "new", 7) for i in range(3)]
+                   + [("r", f"p{i}", "old", None) for i in (4, 5)])
+    scans = re.findall(r"^\(\d+\) Scan parquet", plan_text(t.read()), re.M)
+    assert len(scans) == 2
+
+
+def test_null_key_and_sentinel_string_key_stay_distinct(spark, tmp_table_dir):
+    """A NULL key and the literal string "\\x00null" share a bucket but are
+    two keys, exactly as lww_dedup (and so the oracle) groups them."""
+    schema = T.StructType([T.StructField(c, T.StringType())
+                           for c in ("repo", "path", "content")])
+    t = LakeTable.create(spark, os.path.join(tmp_table_dir, "nk"), schema,
+                         key_cols=["repo", "path"], num_buckets=4)
+    feed = spark.createDataFrame(
+        [(1, 0, "U", None, "p", "null-v1"),
+         (2, 0, "U", "\x00null", "p", "sentinel"),
+         (3, 0, "U", None, "p", "null-v2")],
+        "lsn long, epoch long, op string, repo string, path string, "
+        "content string")
+    merge_cdc_batch(t, feed, 0, "nk", mode="raw", auto_compact_deltas=10**6)
+    want = {tuple(r) for r in expected_final_state(feed).collect()}
+    assert want == {(None, "p", "null-v2"), ("\x00null", "p", "sentinel")}
+    assert t.read().count() == 2
+    assert {tuple(r) for r in t.read().collect()} == want

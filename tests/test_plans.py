@@ -89,6 +89,42 @@ def test_merge_reads_only_touched_buckets(spark, tmp_table_dir):
     assert t.read().filter("path = 'p1'").collect()[0].content == "v1"
 
 
+def test_lsm_key_lookup_is_one_pushed_scan(spark, tmp_table_dir):
+    """A bucket-pruned key lookup on an unfolded raw (LSM) table plans as one
+    parquet scan per schema id, with no empty in-memory side relation, and
+    its key predicates pass the LWW window down to the scan."""
+    import re
+
+    from pyspark.sql import types as T
+
+    from etl_api_bigquery_spark.cdc import change_feed
+    from etl_api_bigquery_spark.lake import LakeTable
+    from etl_api_bigquery_spark.lake.merge import merge_cdc_batch
+
+    schema = T.StructType([T.StructField(c, T.StringType()) for c in
+                           ("repo", "path", "commit", "lang", "content")])
+    t = LakeTable.create(spark, tmp_table_dir + "/t", schema,
+                         key_cols=["repo", "path"], num_buckets=4)
+    feed = change_feed(spark, n_events=2000, n_keys=100, n_epochs=4)
+    for e in range(4):
+        merge_cdc_batch(t, feed.filter(F.col("epoch") == e), e, "plan",
+                        mode="raw", auto_compact_deltas=10**6)
+    key = feed.select("repo", "path").first()
+    b = (spark.createDataFrame([key], "repo string, path string")
+         .select(t.bucket_expr().alias("b")).first().b)
+    assert t.bucket_read_amplification()[b] >= 4
+    df = (t.read(buckets=[b])
+          .filter((F.col("repo") == key.repo) & (F.col("path") == key.path)))
+    p = plan_of(df)
+    sids = {e.schema_id for e in t.snapshot().files_for_buckets([b])}
+    assert len(re.findall(r"^\(\d+\) Scan parquet", p, re.M)) == len(sids)
+    assert "ExistingRDD" not in p
+    pushed = [ln for ln in p.splitlines() if "PushedFilters" in ln]
+    assert pushed and all(f"EqualTo(repo,{key.repo})" in ln
+                          and f"EqualTo(path,{key.path})" in ln
+                          for ln in pushed)
+
+
 def test_merge_dedup_pipeline_shuffle_budget(spark, tmp_table_dir):
     """The prefiltered dedup pipeline pays exactly: one NARROW (keys,lsn)
     exchange with map-side partial_max, one broadcast of the winner-LSN set,
