@@ -112,8 +112,8 @@ def _run_cdc_engine(spark: SparkSession, sf_dir: str,
                              key_cols=["repo", "path"], num_buckets=num_buckets)
     for epoch in range(3):
         merge_cdc_batch(table, events.filter(F.col("epoch") == epoch),
-                        batch_id=epoch, txn_app="entry", salt_buckets=4,
-                        mode=mode, **merge_kwargs)
+                        batch_id=epoch, txn_app="entry", mode=mode,
+                        **merge_kwargs)
     events.unpersist()
     final = table.read()
     return final.select(

@@ -128,11 +128,11 @@ def main() -> None:
                             num_buckets=num_buckets)
     merge_cdc_batch(wtab, change_feed(spark, n_events=200_000, n_keys=20_000,
                                       n_epochs=1),
-                    batch_id=0, txn_app="warmup", salt_buckets=8, mode="mor")
+                    batch_id=0, txn_app="warmup", mode="raw", prefilter=True)
 
     # ---- ingest config. BENCH_MODE: "raw" (default — the engine's
-    # high-throughput zero-shuffle LSM path, now the runner default) | "mor"
-    # | "cow". BENCH_PREFILTER: "on"/"off"; unset defaults to ON for raw
+    # high-throughput zero-shuffle LSM path, the runner default) | "cow".
+    # BENCH_PREFILTER: "on"/"off"; unset defaults to ON for raw
     # (keys-sized L0 — the benched throughput configuration; pass "off" to
     # keep full event history in L0) and merge-default otherwise.
     # BENCH_L0_GROUPS: raw L0 clustering (bucket ranges per task-file);
@@ -159,13 +159,11 @@ def main() -> None:
         # compaction threshold (per-bucket read amplification) sized so at
         # least one compaction lands INSIDE the timed window — steady ingest
         # pays amortized compaction. Raw L0 grows ~files_per_epoch per bucket
-        # per trigger (one file per task x group); mor exactly 1.
-        compact_at = (files_per_epoch * max(1, n_epochs - 1)
-                      if mode == "raw" else max(2, n_epochs - 1))
+        # per trigger (one file per task x group); cow never compacts.
+        compact_at = files_per_epoch * max(1, n_epochs - 1)
         runner = CdcStreamRunner(spark, table, feed_dir, rep_ckpt,
                                  txn_app="bench", prefilter=prefilter,
-                                 salt_buckets=8, mode=mode,
-                                 l0_groups=l0_groups,
+                                 mode=mode, l0_groups=l0_groups,
                                  auto_compact_deltas=compact_at,
                                  max_files_per_trigger=files_per_epoch,
                                  async_commit=os.environ.get(

@@ -9,8 +9,8 @@ keys ``(id,date)`` / ``(bill_id,product_id)``) plus its last-writer-wins dedup
 copy-on-write merge:
 
 1. **LWW dedup** the incoming change batch per key by monotonic LSN
-   (max_by over all columns; optional salted two-phase aggregation for
-   hot-key skew — SURVEY.md §4 custom item 1).
+   (max_by over all columns; the narrow winner prefilter's map-side partial
+   aggregation absorbs hot-key skew — SURVEY.md §4 custom item 1).
 2. **Bucket pruning**: collect the distinct buckets the batch touches
    (≤ num_buckets small ints) and read ONLY those target files via the
    manifest — the Spark analogue of the reference's partition-pruned MERGE
@@ -24,8 +24,8 @@ copy-on-write merge:
    exactly-once fence properties and lineage metrics.
 
 Scale: shuffle volume is bounded by (batch size) + (data in touched buckets);
-untouched buckets are never read. At 10^10 events the knobs are num_buckets
-(more buckets -> finer rewrite granularity) and salt_buckets.
+untouched buckets are never read. At 10^10 events the knob is num_buckets
+(more buckets -> finer rewrite granularity).
 """
 
 from __future__ import annotations
@@ -75,24 +75,18 @@ def lww_dedup(
     events: DataFrame,
     key_cols: list[str],
     lsn_col: str = "lsn",
-    salt_buckets: int = 0,
 ) -> DataFrame:
     """Keep the max-LSN event per key (deletes included — the winner's op
     decides the key's fate).
 
-    Default path: ``groupBy(keys).agg(max_by(struct(*), lsn))`` — Catalyst
-    plans this as partial+final hash aggregation, so map-side combine already
-    absorbs most duplicate traffic.
-
-    ``salt_buckets > 0`` adds an explicit two-phase salted aggregation for
-    pathological single-key floods: phase 1 reduces per (key, salt), phase 2
-    per key. Salt is derived from the LSN so it is deterministic.
+    ``groupBy(keys).agg(max_by(struct(*), lsn))`` — Catalyst plans this as
+    partial+final hash aggregation, so map-side combine already absorbs most
+    duplicate traffic.
     """
     from .table import session_expr_cache
     cols = events.columns
     cache = session_expr_cache(events.sparkSession)
-    ck = ("lww_dedup", tuple(cols), tuple(key_cols), lsn_col,
-          int(salt_buckets or 0))
+    ck = ("lww_dedup", tuple(cols), tuple(key_cols), lsn_col)
     tpl = cache.get(ck)
     if tpl is None:
         # Column templates reused across micro-batches (the merge DAG is
@@ -100,124 +94,18 @@ def lww_dedup(
         # saves ~100 py4j round trips of driver-serial time per batch
         row = F.struct(*[F.col(c) for c in cols]).alias("_row")
         tpl = {
-            "salt": F.pmod(F.xxhash64(F.col(lsn_col)), F.lit(salt_buckets))
-            if salt_buckets and salt_buckets > 1 else None,
-            "agg1": [F.max_by(row, F.col(lsn_col)).alias("_row"),
-                     F.max(lsn_col).alias("_mx")],
-            "agg2": F.max_by("_row", F.col("_mx")).alias("_row"),
             "agg": F.max_by(row, F.col(lsn_col)).alias("_row"),
             "unpack": [F.col(f"_row.{c}").alias(c) for c in cols],
         }
         cache[ck] = tpl
-    if salt_buckets and salt_buckets > 1:
-        salted = events.withColumn("_salt", tpl["salt"])
-        phase1 = salted.groupBy(*key_cols, "_salt").agg(*tpl["agg1"])
-        winner = phase1.groupBy(*key_cols).agg(tpl["agg2"])
-    else:
-        winner = events.groupBy(*key_cols).agg(tpl["agg"])
+    winner = events.groupBy(*key_cols).agg(tpl["agg"])
     return winner.select(*tpl["unpack"])
-
-
-# ---------------------------------------------------------------------------
-# Bloom prefilter plumbing. Spark ships distributed bloom-filter expressions
-# (BloomFilterAggregate / BloomFilterMightContain — the machinery behind its
-# own InjectRuntimeFilter optimizer rule, apache/spark
-# sql/catalyst/src/main/scala/org/apache/spark/sql/catalyst/expressions/
-# BloomFilterMightContain.scala) but does NOT register them in the public
-# function registry, so we construct the expressions through py4j. Everything
-# referenced is Apache Spark's own public source; if any handle is missing
-# (Spark Connect, future refactor) the capability probe fails closed and the
-# caller falls back to the exact broadcast semi-join.
-
-_BLOOM_DEFAULT_EXPECTED = 1 << 22   # first-batch guess; feedback-sized after
-_BLOOM_FPP = 0.008                  # ~10.4 bits/key; FPs are sound (see below)
-_BLOOM_MAX_BITS = 1 << 30           # 128 MB blob hard cap
-
-
-def _bloom_handles(spark) -> dict | None:
-    """py4j handles for the bloom expressions, or None if unavailable.
-
-    Probed once per session (cached in :func:`session_expr_cache`). Only
-    class/constructor SHAPE is probed here; a runtime failure during the
-    build action downgrades the session to the broadcast strategy too.
-    """
-    from .table import session_expr_cache
-    cache = session_expr_cache(spark)
-    h = cache.get(("bloom_handles",), False)
-    if h is not False:
-        return h
-    try:
-        jvm = spark._jvm
-        eu = jvm.org.apache.spark.sql.classic.ExpressionUtils
-        h = {
-            "eu": eu,
-            "agg": jvm.org.apache.spark.sql.catalyst.expressions.aggregate
-                      .BloomFilterAggregate,
-            "probe": jvm.org.apache.spark.sql.catalyst.expressions
-                        .BloomFilterMightContain,
-        }
-        # shape check: Column -> Expression bridge must exist
-        eu.expression(F.lit(1)._jc)
-    except Exception:
-        h = None
-    cache[("bloom_handles",)] = h
-    return h
-
-
-def _bloom_num_bits(expected: int, fpp: float = _BLOOM_FPP) -> int:
-    import math
-    bits = int(-expected * math.log(fpp) / (math.log(2) ** 2)) + 1
-    return max(1 << 16, min(bits, _BLOOM_MAX_BITS))
-
-
-def _build_token_bloom(winners_tok: DataFrame, tok_col: str,
-                       expected: int) -> tuple[bytes, int]:
-    """Distributed bloom build over the winner-token column.
-
-    One Spark action: the groupBy winner agg runs as usual, then a
-    BloomFilterAggregate stage merges per-partition partial blooms on an
-    EXECUTOR (single reduce task) — the driver only receives the final
-    ~(bits/8)-byte blob plus an exact winner count (ridden on the same agg,
-    feeding the next batch's sizing). Replaces the broadcast variant's
-    driver-serial LongHashedRelation build, which at ~7M winner keys costs
-    ~1 s per micro-batch and does not shrink with executors.
-    """
-    from pyspark.sql.column import Column
-    spark = winners_tok.sparkSession
-    h = _bloom_handles(spark)
-    assert h is not None
-    # BloomFilterAggregate validates its sizing args against these session
-    # confs (defaults 4M items / 67M bits — sized for join runtime filters);
-    # raise them so OUR explicitly-chosen sizes always pass.
-    spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.maxNumItems",
-                   str(1 << 31))
-    spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.maxNumBits",
-                   str(_BLOOM_MAX_BITS))
-    expected = max(1024, expected)
-    jexpr = h["eu"].expression
-    ba = h["agg"](jexpr(winners_tok[tok_col]._jc),
-                  jexpr(F.lit(expected).cast("long")._jc),
-                  jexpr(F.lit(_bloom_num_bits(expected)).cast("long")._jc))
-    bloom_col = Column(h["eu"].column(ba.toAggregateExpression()))
-    row = winners_tok.agg(bloom_col.alias("_bf"),
-                          F.count(F.lit(1)).alias("_n")).head()
-    return bytes(row[0]), int(row[1])
-
-
-def _bloom_might_contain(df: DataFrame, blob: bytes, tok_col):
-    from pyspark.sql.column import Column
-    h = _bloom_handles(df.sparkSession)
-    mc = h["probe"](h["eu"].expression(F.lit(blob)._jc),
-                    h["eu"].expression(tok_col._jc))
-    return df.filter(Column(h["eu"].column(mc)))
 
 
 def lww_prefilter(
     events: DataFrame,
     key_cols: list[str],
     lsn_col: str = "lsn",
-    strategy: str = "broadcast",
-    expected_winners: int | None = None,
 ) -> DataFrame:
     """Bandwidth-reducing first pass of LWW dedup: find each key's winning
     (max) LSN over a NARROW shuffle of just ``(key_hash, lsn)`` (Catalyst
@@ -247,37 +135,22 @@ def lww_prefilter(
     unfiltered path would mangle anyway (``max_by`` over a NULL ordering key).
 
     The winner set's only job is to pass each key's own max-LSN event, and a
-    key's own entry is in the set by construction — so any lossy-compressed
-    representation that can only ADD spurious passes (hash collisions, bloom
-    false positives) is sound: spurious survivors are folded by the
-    downstream :func:`lww_dedup` / read-side LWW exactly like LSN ties.
-    NULL keys hash via the same coalesce-to-sentinel rule as bucketing, so
-    NULL-keyed legacy rows are filtered consistently.
+    key's own entry is in the set by construction — so a compressed
+    representation that can only ADD spurious passes is sound: spurious
+    survivors are folded by the downstream :func:`lww_dedup` / read-side LWW
+    exactly like LSN ties. NULL keys hash via the same coalesce-to-sentinel
+    rule as bucketing, so NULL-keyed legacy rows are filtered consistently.
 
-    ``strategy="broadcast"``: the winner set is compressed to ONE 64-bit
-    token per key — ``xxhash64(xxhash64(keys), lsn)`` — and the semi-join
-    keys on that single long. 8 bytes/key in the broadcast, and (measured,
-    the reason for the single-column form) the broadcast relation build
-    becomes a primitive ``LongHashedRelation`` instead of a generic
-    two-column row map: the relation is built on the DRIVER once per batch,
-    a serial term that does not shrink with executors, so its constant
-    matters for scaling efficiency more than for wall time. Token collisions
-    are one-sided spurious PASSES (folded downstream, see above); a key's
-    own winner always matches its own token.
-
-    ``strategy="bloom"``: same winner tokens, but compressed into a bloom
-    filter built DISTRIBUTED (partial blooms merged in an executor-side
-    reduce task; the driver only relays the ~10-bits/key blob into the probe
-    expression as a literal — stage-probe-measured, this removes the ~1 s
-    per-batch driver-serial LongHashedRelation build, the largest
-    non-scaling term in the N→4N elastic pairs). Bloom false positives are
-    spurious PASSES, sound per the compression argument above; at the
-    default ~0.8% FP rate they add <1% spurious write volume. Sizing
-    feedback: the exact winner count rides on the build aggregate and sizes
-    the next batch's filter. Implemented with Spark's own runtime-filter
-    expressions via py4j (not in the public registry); if they are
-    unavailable or fail at runtime the session downgrades to "broadcast"
-    with a one-line warning.
+    The winner set is compressed to ONE 64-bit token per key —
+    ``xxhash64(xxhash64(keys), lsn)`` — and the broadcast semi-join keys on
+    that single long. 8 bytes/key in the broadcast, and (measured, the reason
+    for the single-column form) the broadcast relation build becomes a
+    primitive ``LongHashedRelation`` instead of a generic two-column row map:
+    the relation is built on the DRIVER once per batch, a serial term that
+    does not shrink with executors, so its constant matters for scaling
+    efficiency more than for wall time. Token collisions are one-sided
+    spurious PASSES (folded downstream, see above); a key's own winner always
+    matches its own token.
     """
     from .table import session_expr_cache
     cache = session_expr_cache(events.sparkSession)
@@ -307,20 +180,6 @@ def lww_prefilter(
                .select(tpl["wtok"]))
     left = (events.filter(tpl["notnull"])
             .select("*", tpl["ltok"]))
-    if strategy == "bloom" and _bloom_handles(events.sparkSession) is not None:
-        try:
-            blob, n = _build_token_bloom(
-                winners, "_wtok",
-                expected_winners or cache.get(("bloom_last_winners",))
-                or _BLOOM_DEFAULT_EXPECTED)
-            cache[("bloom_last_winners",)] = n
-            return _bloom_might_contain(left, blob,
-                                        left["_wtok"]).drop("_wtok")
-        except Exception as e:  # downgrade loudly, stay correct
-            import warnings
-            warnings.warn(f"bloom prefilter failed ({e!r}); session "
-                          "downgraded to broadcast strategy")
-            cache[("bloom_handles",)] = None
     return left.join(F.broadcast(winners), on="_wtok",
                      how="left_semi").drop("_wtok")
 
@@ -559,13 +418,11 @@ def merge_cdc_batch(
     txn_app: str | None = None,
     lsn_col: str = "lsn",
     op_col: str = "op",
-    salt_buckets: int = 0,
     allow_schema_evolution: bool = True,
     extra_props: dict[str, Any] | None = None,
     mode: str = "cow",
     auto_compact_deltas: int = 16,
     prefilter: bool | None = None,
-    prefilter_strategy: str = "broadcast",
     l0_groups: int | str | None = None,
     compact_async: bool = False,
     async_finalize: bool = False,
@@ -579,7 +436,7 @@ def merge_cdc_batch(
     prefilter drops them; without it ``max_by`` over a NULL ordering key
     would corrupt the winner row).
 
-    ``prefilter`` defaults to ON for cow/mor (losing events never reach the
+    ``prefilter`` defaults to ON for cow (losing events never reach the
     payload shuffle) and OFF for raw — raw mode's contract is "L0 preserves
     the full event history for audit/replay", which a prefilter would
     silently break; pass ``prefilter=True`` explicitly to trade that
@@ -596,20 +453,17 @@ def merge_cdc_batch(
     1M-event micro-batches — see BENCH/BASELINE.md). Pass ``mode``
     explicitly when benchmarking either path.
 
-    Write strategies (both yield identical read results):
+    Write strategies (both yield identical read results; any other ``mode``
+    raises ``ValueError``):
 
     * ``mode="cow"`` — copy-on-write: rewrite the touched buckets' files with
       survivors ∪ upserts. Best read performance; write cost O(touched data).
-    * ``mode="mor"`` — merge-on-read: append LWW-resolvable delta files,
-      O(batch) write cost regardless of table size; reads resolve max-LSN per
-      key and drop tombstones; compaction auto-triggers when any touched
-      bucket accumulates ``auto_compact_deltas`` delta files. This is the
-      high-throughput CDC-ingest path (the Hudi/Paimon-style tradeoff) —
-      at 10^10 events/day the per-batch rewrite of COW is unaffordable.
     * ``mode="raw"`` — LSM-style raw append: NO shuffle, NO dedup — the batch
-      is written exactly as scanned (bucket column computed map-side);
-      read-side LWW absorbs in-batch duplicates too. Maximum write
-      throughput. ``l0_groups=G`` clusters the L0 files into G contiguous
+      is written exactly as scanned (bucket column computed map-side) as
+      LWW-resolvable delta files; reads resolve max-LSN per key (in-batch
+      duplicates too) and drop tombstones. O(batch) write cost regardless of
+      table size — the high-throughput CDC-ingest path (the Hudi/Paimon-style
+      tradeoff). ``l0_groups=G`` clusters the L0 files into G contiguous
       bucket ranges per task (task-local sort, still no shuffle; G =
       table.num_buckets gives fully bucket-PURE L0), restoring per-bucket
       compaction/read locality at the cost of more, smaller files (tasks x G
@@ -617,12 +471,13 @@ def merge_cdc_batch(
       file-count budget). ``l0_groups="auto"`` sizes G per batch from the
       source bytes and a 16 MB L0 file-size floor (see
       :func:`_l0_groups_for`) — full purity at production per-task volumes,
-      graceful coarsening at bench scale instead of KB-size files. Compaction triggers when any bucket's delta read
-      amplification reaches ``auto_compact_deltas`` and folds only the
-      closure of the hot buckets' file spans (ungrouped L0 spans everything,
-      degrading to the full L0 fold).
+      graceful coarsening at bench scale instead of KB-size files.
+      Compaction triggers when any bucket's delta read amplification reaches
+      ``auto_compact_deltas`` and folds only the closure of the hot buckets'
+      file spans (ungrouped L0 spans everything, degrading to the full L0
+      fold).
 
-    ``compact_async=True`` (mor/raw only): auto-compaction runs on a
+    ``compact_async=True`` (raw only): auto-compaction runs on a
     background driver thread overlapping the next trigger's scan instead of
     extending this batch's critical path — the per-trigger serial tail no
     longer idles the cluster while a fold is due. See
@@ -642,6 +497,8 @@ def merge_cdc_batch(
     :meth:`~etl_api_bigquery_spark.streaming.runner.CdcStreamRunner.repair_fence_gap`.
     """
     t0 = time.monotonic()
+    if mode not in ("cow", "raw"):
+        raise ValueError(f"unknown mode {mode!r}: expected 'cow' or 'raw'")
     if async_finalize and mode != "raw":
         raise ValueError(
             "async_finalize requires mode='raw' (the LSM append path)")
@@ -684,13 +541,7 @@ def merge_cdc_batch(
         if l0_groups == "auto":
             l0_groups = _adaptive_l0_groups(table, events)
             props["l0_groups"] = l0_groups
-        _t_bloom0 = time.monotonic()
-        src = (lww_prefilter(events, key_cols, lsn_col,
-                             strategy=prefilter_strategy)
-               if prefilter else events)
-        # bloom strategy runs its build action inside lww_prefilter — time it
-        # so the phase telemetry separates build from the write job proper
-        _t_bloom = time.monotonic() - _t_bloom0
+        src = lww_prefilter(events, key_cols, lsn_col) if prefilter else events
         raw = src.withColumn(BUCKET_COL, table.bucket_expr())
         delta = raw.select(*_delta_select_exprs(
             table, snap0, set(events.columns) | {BUCKET_COL},
@@ -751,7 +602,6 @@ def merge_cdc_batch(
             m.version = version
             m.extra["phases"] = {
                 "plan_build_s": round(_t_plan, 4),
-                "prefilter_build_s": round(_t_bloom, 4),
                 **_write_phases,
                 "compact_s": round(time.monotonic() - _t_post0, 4),
             }
@@ -764,115 +614,34 @@ def merge_cdc_batch(
             # callers read them after LakeTable.join_pending_commit().
             m.extra["async_commit"] = True
             table.append_deltas(delta, properties=props,
-                                repartition=False, bucket_pure=False,
                                 bucket_groups=l0_groups,
                                 props_fn=lineage_props,
                                 async_finalize=True, post_commit=_post)
         else:
             _post(table.append_deltas(delta, properties=props,
-                                      repartition=False, bucket_pure=False,
                                       bucket_groups=l0_groups,
                                       props_fn=lineage_props))
         m.duration_sec = time.monotonic() - t0
         return m
 
-    # ---- 1. ONE shuffle for the whole batch: repartition by bucket, then
+    # ---- 1. ONE payload shuffle for the dedup: repartition by bucket, then
     # dedup grouped by (bucket, keys) — HashPartitioning(_bucket) satisfies
     # ClusteredDistribution(_bucket, keys) because _bucket is a function of
-    # the keys, so Catalyst inserts no second exchange; the bucket-pure write
-    # then needs no repartition either. (Was: dedup shuffle + write shuffle.)
+    # the keys, so Catalyst inserts no second exchange.
     #
     # After the prefilter the surviving batch is ~1 row per key (only LSN
-    # ties remain), so hot-key skew is already defused and the salted
-    # two-phase aggregation would be a pure extra pass over the payload —
-    # skip it. The narrow (hash, lsn) prefilter aggregation itself is
-    # skew-immune: its partial (map-side) aggregation collapses a hot key's
-    # flood before the 16-byte rows ever shuffle.
-    src = (lww_prefilter(events, key_cols, lsn_col,
-                         strategy=prefilter_strategy)
-           if prefilter else events)
-    effective_salt = 0 if prefilter else salt_buckets
+    # ties remain), so hot-key skew is already defused. The narrow
+    # (hash, lsn) prefilter aggregation itself is skew-immune: its partial
+    # (map-side) aggregation collapses a hot key's flood before the 16-byte
+    # rows ever shuffle.
+    src = lww_prefilter(events, key_cols, lsn_col) if prefilter else events
     evb = src.withColumn(BUCKET_COL, table.bucket_expr())
     evb = evb.repartition(table.num_buckets, F.col(BUCKET_COL))
-    winners = lww_dedup(evb, [BUCKET_COL] + key_cols, lsn_col, effective_salt)
+    winners = lww_dedup(evb, [BUCKET_COL] + key_cols, lsn_col)
     # winners' columns == events' + _bucket (lww_dedup is column-preserving);
     # derive them instead of calling winners.columns, which would force an
     # extra driver-side analysis of the whole dedup subtree per trigger
     winner_cols = set(events.columns) | {BUCKET_COL}
-
-    if mode == "mor":
-        # ---- merge-on-read: ONE Spark job for the whole batch. Counts ride
-        # on the write via Observation (no separate stats pass, no cache);
-        # per-bucket key counts / skew come from the bucket-pure delta files'
-        # harvested footers. Empty batches still commit — the fence advances.
-        from pyspark.sql import Observation
-        from .table import session_expr_cache
-        cache = session_expr_cache(events.sparkSession)
-        obs_aggs = cache.get(("mor_obs", op_col))
-        if obs_aggs is None:
-            obs_aggs = [
-                F.count(F.lit(1)).alias("keys"),
-                F.sum(F.when(F.col(op_col) == OP_DELETE, 1).otherwise(0)
-                      ).alias("deletes")]
-            cache[("mor_obs", op_col)] = obs_aggs
-        obs = Observation()
-        observed = winners.observe(obs, *obs_aggs)
-        delta = observed.select(*_delta_select_exprs(
-            table, snap, winner_cols, lsn_col, op_col))
-
-        props: dict[str, Any] = dict(extra_props or {})
-        if txn_app is not None:
-            props["txn_app"] = txn_app
-            props["txn_batch"] = batch_id
-
-        def lineage_props(adds):
-            got = obs.get  # available: the write action just finished
-            m.keys = int(got.get("keys") or 0)
-            m.deletes = int(got.get("deletes") or 0)
-            m.upserts = m.keys - m.deletes
-            per_bucket: dict[int, int] = {}
-            for e in adds:
-                per_bucket[e.bucket] = per_bucket.get(e.bucket, 0) + e.rows
-            m.buckets_touched = len(per_bucket)
-            mean_k = m.keys / len(per_bucket) if per_bucket else 0.0
-            m.skew_factor = (round(max(per_bucket.values()) / mean_k, 3)
-                             if mean_k else 0.0)
-            elapsed = max(time.monotonic() - t0, 1e-9)
-            return {"lineage": {
-                "batch_id": batch_id, "keys": m.keys, "deletes": m.deletes,
-                "upserts": m.upserts, "buckets_touched": m.buckets_touched,
-                "skew_factor": m.skew_factor, "mode": mode,
-                "target_rows_read": 0,
-                # reference metric parity: records_per_second per job
-                # (src/monitoring/metrics.py:100), write-inclusive
-                "events_per_sec": round(m.keys / elapsed, 1),
-            }}
-
-        _t_plan = time.monotonic() - t0   # fence + snapshot + DAG build
-        m.version = table.append_deltas(delta, properties=props,
-                                        repartition=False,
-                                        props_fn=lineage_props)
-        _t_commit_done = time.monotonic()
-        _write_phases = dict(table.last_write_phases)  # before compaction
-        # amortized compaction keeps read amplification bounded
-        counts = table.bucket_read_amplification()
-        hot = [b for b, c in counts.items() if c >= auto_compact_deltas]
-        if hot:
-            cprops = {"auto_compact_for_batch": batch_id}
-            if compact_async:
-                table.compact_deltas_async(hot, properties=cprops)
-            else:
-                table.compact_deltas(buckets=hot, properties=cprops)
-        m.duration_sec = time.monotonic() - t0
-        # driver-serial decomposition for the scaling evidence: everything
-        # except write_job_s is constant per trigger and amortizes with
-        # batch size
-        m.extra["phases"] = {
-            "plan_build_s": round(_t_plan, 4),
-            **_write_phases,
-            "compact_s": round(time.monotonic() - _t_commit_done, 4),
-        }
-        return m
 
     # ---- copy-on-write: needs the touched-bucket list BEFORE reading the
     # target (manifest pruning), so winners is cached and stats collected
@@ -924,7 +693,7 @@ def merge_cdc_batch(
         # LSN-aware apply: a batch event only wins against table rows it
         # actually beats. Without this, an OLDER event redelivered in a
         # LATER micro-batch would clobber newer data (found by the
-        # hypothesis property suite; MOR is immune because it resolves
+        # hypothesis property suite; raw is immune because it resolves
         # global max-LSN at read). cur_lsn per batch key is small
         # (≤ batch keys), so every join here broadcasts — the target is
         # never shuffled for the probe.

@@ -619,34 +619,33 @@ class LakeTable:
 
     def _write_data_files(
         self, df: DataFrame, version: int, schema: T.StructType, schema_id: int,
-        repartition: bool = True, kind: str = "base", bucket_pure: bool = True,
-        bucket_groups: int | None = None, record_phases: bool = True,
+        kind: str = "base", bucket_groups: int | None = None,
+        record_phases: bool = True,
     ) -> list[FileEntry]:
         """Write df (must already carry BUCKET_COL) as parquet data files.
 
-        ``bucket_pure=True`` (default): ``partitionBy`` on a duplicated
-        ``_bkt`` column yields one directory per bucket; ``_bucket`` itself
-        stays as a data column so snapshot reads need no basePath
-        reconstruction. ``bucket_pure=False`` (raw-append deltas): files are
+        ``kind="base"``: repartition by bucket, then ``partitionBy`` on a
+        duplicated ``_bkt`` column yields one directory per bucket;
+        ``_bucket`` itself stays as a data column so snapshot reads need no
+        basePath reconstruction. ``kind="delta"`` (raw-append L0): files are
         written as-scanned with NO shuffle; per-file _bucket min/max stats
         still allow coarse pruning.
 
-        ``bucket_groups=G`` (raw-append path, requires ``bucket_pure=False``):
-        bucket-CLUSTERED L0 with no shuffle — each task's rows are split into
-        G contiguous bucket ranges via ``partitionBy`` on a derived group
-        column (Spark's dynamic-partition writer adds a task-local sort, no
-        exchange). With G = num_buckets the L0 files are fully bucket-pure
-        (labeled with real bucket ids via their footer stats), restoring
-        MOR-grade compaction/read locality; smaller G trades file count
-        (tasks x G per write) for locality. ``record_phases=False`` skips the
+        ``bucket_groups=G`` (delta files only): bucket-CLUSTERED L0 with no
+        shuffle — each task's rows are split into G contiguous bucket ranges
+        via ``partitionBy`` on a derived group column (Spark's
+        dynamic-partition writer adds a task-local sort, no exchange). With
+        G = num_buckets the L0 files are fully bucket-pure (labeled with real
+        bucket ids via their footer stats), restoring per-bucket
+        compaction/read locality; smaller G trades file count (tasks x G per
+        write) for locality. ``record_phases=False`` skips the
         telemetry side channel (background maintenance writes must not clobber
         the foreground merge's phase decomposition).
 
         Stats come from parquet footers only.
         """
         abs_dir, rel_dir, wjs = self._run_write_job(
-            df, version, schema, repartition=repartition,
-            bucket_pure=bucket_pure, bucket_groups=bucket_groups)
+            df, version, schema, kind, bucket_groups)
         _th = time.monotonic()
         entries = self._harvest_entries(abs_dir, rel_dir, schema_id, kind)
         if record_phases:
@@ -660,8 +659,7 @@ class LakeTable:
 
     def _run_write_job(
         self, df: DataFrame, version: int, schema: T.StructType,
-        repartition: bool = True, bucket_pure: bool = True,
-        bucket_groups: int | None = None,
+        kind: str = "base", bucket_groups: int | None = None,
     ) -> tuple[str, str, float]:
         """The Spark-job half of :meth:`_write_data_files`: materialize the
         data files and return ``(abs_dir, rel_dir, write_job_seconds)``
@@ -677,9 +675,8 @@ class LakeTable:
         rel_dir = f"{_DATA_DIR}/c{version:010d}-{uuid.uuid4().hex[:8]}"
         abs_dir = os.path.join(self.location, rel_dir)
         _tw = time.monotonic()
-        if bucket_pure:
-            if repartition:
-                out = out.repartition(self.num_buckets, F.col(BUCKET_COL))
+        if kind == "base":
+            out = out.repartition(self.num_buckets, F.col(BUCKET_COL))
             out = out.withColumn("_bkt", F.col(BUCKET_COL))
             out.write.mode("overwrite").partitionBy("_bkt").parquet(abs_dir)
         elif bucket_groups and bucket_groups > 1:
@@ -823,7 +820,6 @@ class LakeTable:
         schema: T.StructType,
         schema_id: int,
         properties: dict[str, Any] | None = None,
-        repartition: bool = True,
         props_fn: Any = None,
         record_phases: bool = True,
         retry_conflicts: bool = False,
@@ -844,7 +840,6 @@ class LakeTable:
         version = snap.version + 1
         adds = self._write_data_files(self._with_bucket(new_data), version,
                                       schema, schema_id,
-                                      repartition=repartition,
                                       record_phases=record_phases)
         props = dict(properties or {})
         if props_fn is not None:
@@ -865,26 +860,23 @@ class LakeTable:
 
     def append_deltas(self, df: DataFrame,
                       properties: dict[str, Any] | None = None,
-                      repartition: bool = True,
-                      bucket_pure: bool = True,
                       bucket_groups: int | None = None,
                       props_fn: Any = None,
                       async_finalize: bool = False,
                       post_commit: Any = None) -> int:
         """Merge-on-read write path: append LWW-resolvable change files
-        (rows carry BUCKET_COL, LSN_COL, OP_COL). O(batch) cost — no target
-        read, no rewrite; reads resolve via :meth:`_resolve_lww` and
-        :meth:`compact_deltas` folds deltas into base files. Pass
-        ``repartition=False`` when df is already bucket-partitioned (the
-        merge path) to skip the extra shuffle.
+        (rows carry BUCKET_COL, LSN_COL, OP_COL), written as scanned with no
+        shuffle. O(batch) cost — no target read, no rewrite; reads resolve
+        via :meth:`_resolve_lww` and :meth:`compact_deltas` folds deltas into
+        base files.
 
         ``props_fn(adds) -> dict`` (optional) is called after the data files
         are written but before the commit doc: lineage derived from the write
         itself (Observation metrics, per-bucket file stats) lands in the SAME
         atomic commit with no extra Spark job.
 
-        ``bucket_groups`` (with ``bucket_pure=False``): bucket-clustered L0 —
-        see :meth:`_write_data_files`. Pure appends always retry a lost
+        ``bucket_groups``: bucket-clustered L0 — see
+        :meth:`_write_data_files`. Pure appends always retry a lost
         commit race (adds only — nothing to re-validate), so delta writes are
         safe concurrent with background compaction.
 
@@ -913,9 +905,7 @@ class LakeTable:
         version = snap.version + 1
         if not async_finalize:
             adds = self._write_data_files(df, version, snap.schema,
-                                          snap.schema_id,
-                                          kind="delta", repartition=repartition,
-                                          bucket_pure=bucket_pure,
+                                          snap.schema_id, kind="delta",
                                           bucket_groups=bucket_groups)
             props = dict(properties or {})
             if props_fn is not None:
@@ -932,8 +922,7 @@ class LakeTable:
             return v
         # run the parallel part now; defer the driver-serial tail
         abs_dir, rel_dir, wjs = self._run_write_job(
-            df, version, snap.schema, repartition=repartition,
-            bucket_pure=bucket_pure, bucket_groups=bucket_groups)
+            df, version, snap.schema, "delta", bucket_groups)
         # ordering: the previous async commit must be fully on disk before
         # this one may land (also bounds in-flight finalizers to one)
         self.join_pending_commit()
@@ -1017,7 +1006,7 @@ class LakeTable:
         resolution over the compacted base; commit races are retried with
         victim re-validation. NOT safe concurrent with COW rewrites (a COW
         merge derived from a pre-compaction snapshot would duplicate rows) —
-        callers gate this on delta-append modes (mor/raw), which is also why
+        callers gate this on the delta-append mode (raw), which is also why
         :class:`~..streaming.CdcStreamRunner` joins maintenance before
         returning. Returns the Future, or None if one was already running."""
         if self._maint_future is not None and not self._maint_future.done():

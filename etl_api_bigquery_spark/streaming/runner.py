@@ -56,14 +56,10 @@ class CdcStreamRunner:
     target_events_per_sec: float | None = None
     _rate_t0: float | None = field(default=None, repr=False)
     _rate_events: int = field(default=0, repr=False)
-    salt_buckets: int = 0
     # write strategy: "raw" (default — LSM append, zero full-row shuffle,
-    # bucket-clustered L0, the high-throughput ingest mode) | "mor" | "cow"
+    # bucket-clustered L0, the high-throughput ingest mode) | "cow"
     mode: str = "raw"
     prefilter: bool | None = None          # None = merge_cdc_batch default
-    # "broadcast" (exact winner-token semi-join) | "bloom" (distributed
-    # bloom build, no driver-serial relation build — see lww_prefilter)
-    prefilter_strategy: str = "broadcast"
     auto_compact_deltas: int = 16
     # raw L0 clustering: None = adaptive ("auto" — per-batch group count from
     # source bytes and a 16 MB L0 file-size floor, bucket-pure when per-task
@@ -107,27 +103,35 @@ class CdcStreamRunner:
                 [m for m in self.metrics if not m.skipped_fence]
         ) >= self.fail_after_batches:
             raise RuntimeError("injected failure (test hook)")
-        if self.transform is not None:
-            batch_df = self.transform(batch_df)
-        groups = self.l0_groups
-        if groups is None and self.mode == "raw":
-            groups = "auto"                       # file-size-floor adaptive
-        m = merge_cdc_batch(
-            self.table, batch_df, batch_id=batch_id, txn_app=self.txn_app,
-            salt_buckets=self.salt_buckets, mode=self.mode,
-            auto_compact_deltas=self.auto_compact_deltas,
-            prefilter=self.prefilter,
-            prefilter_strategy=self.prefilter_strategy, l0_groups=groups,
-            compact_async=self.async_compact and self.mode != "cow",
-            async_finalize=self.async_commit and self.mode == "raw",
-        )
-        self.metrics.append(m)
+        m = self._merge(batch_df, batch_id, background=True)
         if self.target_events_per_sec is not None:
             # pacing reads the batch's event counts, which settle only when
             # an async commit lands — join first (the pace sleep would have
             # covered the finalize anyway)
             self.table.join_pending_commit()
             self._pace(m)
+
+    def _merge(self, batch_df: DataFrame, batch_id: int,
+               background: bool) -> MergeMetrics:
+        """One batch through :func:`merge_cdc_batch` with this runner's
+        write config. ``background=False`` forces a synchronous commit and
+        inline compaction; otherwise raw mode follows ``async_commit`` and
+        ``async_compact``."""
+        if self.transform is not None:
+            batch_df = self.transform(batch_df)
+        raw = self.mode == "raw"
+        groups = self.l0_groups
+        if groups is None and raw:
+            groups = "auto"                       # file-size-floor adaptive
+        m = merge_cdc_batch(
+            self.table, batch_df, batch_id=batch_id, txn_app=self.txn_app,
+            mode=self.mode, auto_compact_deltas=self.auto_compact_deltas,
+            prefilter=self.prefilter, l0_groups=groups,
+            compact_async=background and raw and self.async_compact,
+            async_finalize=background and raw and self.async_commit,
+        )
+        self.metrics.append(m)
+        return m
 
     def _pace(self, m: MergeMetrics) -> None:
         """Token-bucket pacing: sleep so cumulative events / elapsed wall
@@ -168,9 +172,10 @@ class CdcStreamRunner:
             reader = reader.option("maxFilesPerTrigger",
                                    self.max_files_per_trigger)
         stream = reader.parquet(self.feed_dir)
-        if self.async_commit and self.mode == "raw":
-            # close any fence-vs-checkpoint gap a crash inside the async
-            # commit window left behind (no-op on a healthy checkpoint)
+        if self.mode == "raw":
+            # close any fence-vs-checkpoint gap a crash inside an async
+            # commit window left behind — also when this run commits
+            # synchronously (no-op on a healthy checkpoint)
             self.repair_fence_gap()
         if self.stateful_staleness_filter:
             from .stateful import lww_staleness_filter
@@ -213,7 +218,7 @@ class CdcStreamRunner:
 
     # ------------------------------------------------------------ recovery
 
-    def repair_fence_gap(self, timeout_sec: int = 600) -> list[MergeMetrics]:
+    def repair_fence_gap(self) -> list[MergeMetrics]:
         """Close the async-commit crash window: re-apply any batch the
         streaming checkpoint committed but the table fence never saw.
 
@@ -222,8 +227,9 @@ class CdcStreamRunner:
         that window loses the batch from the table while Spark considers it
         done and will never re-deliver it. The file source is replayable,
         though: the checkpoint's ``sources/0`` log records exactly which
-        feed files each batch admitted. On restart, call this BEFORE
-        :meth:`run_available_now` — it compares the table fence
+        feed files each batch admitted. On restart,
+        :meth:`run_available_now` calls this in raw mode before the stream
+        starts — it compares the table fence
         (``last_txn``) with the checkpoint's committed batches and replays
         each missing batch's file list through the same
         :func:`merge_cdc_batch` sink (sync commits). The fence makes it
@@ -246,21 +252,7 @@ class CdcStreamRunner:
             if not files:  # empty batch (possible with availableNow tails)
                 continue
             batch_df = self.spark.read.schema(feed_schema()).parquet(*files)
-            if self.transform is not None:
-                batch_df = self.transform(batch_df)
-            groups = self.l0_groups
-            if groups is None and self.mode == "raw":
-                groups = "auto"
-            m = merge_cdc_batch(
-                self.table, batch_df, batch_id=b, txn_app=self.txn_app,
-                salt_buckets=self.salt_buckets, mode=self.mode,
-                auto_compact_deltas=self.auto_compact_deltas,
-                prefilter=self.prefilter,
-                prefilter_strategy=self.prefilter_strategy, l0_groups=groups,
-                compact_async=False,
-            )
-            out.append(m)
-            self.metrics.append(m)
+            out.append(self._merge(batch_df, b, background=False))
         self.table.join_maintenance()
         return out
 
@@ -269,7 +261,12 @@ class CdcStreamRunner:
         checkpoint's FileStreamSource metadata log (``sources/0/<batch>`` —
         JSON lines of ``{path, timestamp, batchId}``; compacted log files
         carry every entry with its original batchId, so filtering on
-        batchId works for both plain and ``.compact`` log files)."""
+        batchId works for both plain and ``.compact`` log files).
+
+        A plain log file only covers its own batch: when the nearest file at
+        or above ``batch_id`` is a later plain file (the batch's own entry
+        was purged), the batch's files are unknown and this raises instead
+        of replaying the batch as empty."""
         sdir = os.path.join(self.checkpoint_dir, "sources", "0")
         cand = None
         best = None
@@ -280,7 +277,8 @@ class CdcStreamRunner:
             v = int(stem)
             if v >= batch_id and (best is None or v < best):
                 best, cand = v, os.path.join(sdir, f)
-        if cand is None:
+        if cand is None or (best != batch_id
+                            and not cand.endswith(".compact")):
             raise FileNotFoundError(
                 f"no source log entry covers batch {batch_id} in {sdir}")
         files: list[str] = []

@@ -6,10 +6,13 @@ jobs/ingest.py --feed-dir ... --table-dir ... --checkpoint ...`` on a
 multi-executor cluster; in this sandbox it runs on local[N]. The job is
 restart-safe: the checkpoint resumes the source and the commit fence drops
 replayed batches, so rerunning after any crash converges to the same state.
+In ``raw`` mode (the default) a restart first re-applies any batch the
+checkpoint committed but an async table commit lost, whatever
+``--async-commit`` is set to this time.
 
 Example (sandbox):
     python jobs/ingest.py --generate 100000 --table-dir /tmp/ingest/t \\
-        --feed-dir /tmp/ingest/feed --checkpoint /tmp/ingest/ckpt --mode mor
+        --feed-dir /tmp/ingest/feed --checkpoint /tmp/ingest/ckpt --mode raw
 """
 
 from __future__ import annotations
@@ -28,14 +31,12 @@ def main() -> None:
     ap.add_argument("--feed-dir", required=True)
     ap.add_argument("--table-dir", required=True)
     ap.add_argument("--checkpoint", required=True)
-    ap.add_argument("--mode", choices=["cow", "mor", "raw"], default="mor")
+    ap.add_argument("--mode", choices=["cow", "raw"], default="raw")
     ap.add_argument("--num-buckets", type=int, default=64)
-    ap.add_argument("--salt-buckets", type=int, default=8)
-    ap.add_argument("--prefilter", choices=["default", "on", "off", "bloom"],
+    ap.add_argument("--prefilter", choices=["default", "on", "off"],
                     default="default",
-                    help="LWW winner prefilter: on/off, or 'bloom' for the "
-                         "distributed bloom strategy (no driver-serial "
-                         "broadcast build)")
+                    help="LWW winner prefilter (default: on for cow, off "
+                         "for raw)")
     ap.add_argument("--stateful-filter", action="store_true",
                     help="stateful LWW staleness pre-filter "
                          "(applyInPandasWithState) before the MERGE sink")
@@ -44,9 +45,9 @@ def main() -> None:
                     default=True,
                     help="pipeline each batch's commit finalization with the "
                          "next trigger (raw mode; see CdcStreamRunner."
-                         "async_commit; default on). On startup, any "
-                         "fence-vs-checkpoint gap a crash in the async "
-                         "window left behind is repaired first")
+                         "async_commit; default on). In raw mode, any "
+                         "fence-vs-checkpoint gap a crash in an async "
+                         "window left behind is repaired on startup")
     ap.add_argument("--txn-app", default="cdc-ingest")
     ap.add_argument("--generate", type=int, default=0,
                     help="generate N synthetic events into --feed-dir first")
@@ -81,25 +82,17 @@ def main() -> None:
 
     runner = CdcStreamRunner(
         spark, table, args.feed_dir, args.checkpoint, txn_app=args.txn_app,
-        max_files_per_trigger=args.max_files_per_trigger,
-        salt_buckets=args.salt_buckets, mode=args.mode,
-        prefilter={"on": True, "off": False, "bloom": True,
-                   "default": None}[args.prefilter],
-        prefilter_strategy=("bloom" if args.prefilter == "bloom"
-                            else "broadcast"),
+        max_files_per_trigger=args.max_files_per_trigger, mode=args.mode,
+        prefilter={"on": True, "off": False, "default": None}[args.prefilter],
         stateful_staleness_filter=args.stateful_filter,
         async_commit=args.async_commit)
     t0 = time.monotonic()
-    repaired = (runner.repair_fence_gap() if args.async_commit
-                and args.mode == "raw"
-                and os.path.exists(args.checkpoint) else [])
     metrics = runner.run_available_now()
     dt = time.monotonic() - t0
     applied = [m for m in metrics if not m.skipped_fence]
     events = sum(m.keys for m in applied)
 
-    result = {"batches": len(applied), "repaired": len(repaired),
-              "keys_applied": events,
+    result = {"batches": len(applied), "keys_applied": events,
               "duration_sec": round(dt, 2), "table_version": table.current_version(),
               "rows": table.snapshot().num_rows}
     if args.verify:

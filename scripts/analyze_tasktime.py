@@ -66,7 +66,7 @@ def main() -> None:
             os.path.join(feed_dir, f"epoch_{i:05d}_p*.parquet"))
         t0 = time.monotonic()
         merge_cdc_batch(table, batch, batch_id=i, txn_app="tt",
-                        salt_buckets=8, mode="mor", auto_compact_deltas=10**9)
+                        mode="raw", auto_compact_deltas=10**9)
         walls.append(round(time.monotonic() - t0, 3))
         if i == 0:
             # steady-state boundary: exclude warmup-batch tasks (codegen

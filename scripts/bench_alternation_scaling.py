@@ -198,9 +198,8 @@ def campaign_warmup(spark, level_execs: int = 4) -> None:
                             num_buckets=ev2.NUM_BUCKETS)
     merge_cdc_batch(wtab, change_feed(spark, n_events=n_ev,
                                       n_keys=n_ev // 10, n_epochs=2),
-                    batch_id=0, txn_app="alt-warm", salt_buckets=8,
+                    batch_id=0, txn_app="alt-warm",
                     mode=ev2.MODE, prefilter=ev2.PREFILTER,
-                    prefilter_strategy=ev2.PREFILTER_STRATEGY,
                     l0_groups=ev2.L0_GROUPS, auto_compact_deltas=10 ** 9)
 
 
@@ -222,8 +221,7 @@ def timed_merge(spark, table, epoch: int, batch_id: int,
     try:
         m = merge_cdc_batch(
             table, events, batch_id=batch_id, txn_app="alt",
-            salt_buckets=8, mode=ev2.MODE, prefilter=ev2.PREFILTER,
-            prefilter_strategy=ev2.PREFILTER_STRATEGY,
+            mode=ev2.MODE, prefilter=ev2.PREFILTER,
             l0_groups=ev2.L0_GROUPS,
             auto_compact_deltas=10 ** 9)     # folds are a separate workload
     finally:
@@ -543,9 +541,8 @@ def main() -> None:
                                str(4 * ev2.EXEC_CORES))
                 from etl_api_bigquery_spark.lake.merge import merge_cdc_batch
                 merge_cdc_batch(table, spark.read.parquet(*epoch_files(0)),
-                                batch_id=0, txn_app="alt", salt_buckets=8,
+                                batch_id=0, txn_app="alt",
                                 mode=ev2.MODE, prefilter=ev2.PREFILTER,
-                                prefilter_strategy=ev2.PREFILTER_STRATEGY,
                                 l0_groups=ev2.L0_GROUPS,
                                 auto_compact_deltas=10 ** 9)
                 scale_to(order[0])

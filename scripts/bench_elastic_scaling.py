@@ -97,18 +97,13 @@ EXPECTED_DIR = os.path.join(FEED_DIR, "_expected_state")
 WORK = "/tmp/bench_elastic"
 NUM_BUCKETS = int(os.environ.get("BENCH_NUM_BUCKETS", "32"))
 BATCH_EVENTS = N_EVENTS // N_EPOCHS
-# write strategy under test: "mor" (default; bucket shuffle + delta write)
-# or "raw" (LSM append, NO full-row shuffle; prefilter keeps L0 keys-sized;
-# read-side LWW resolves). ELASTIC_COMPACT overrides the auto-compaction
+# write strategy under test: "raw" (default; LSM append, NO full-row
+# shuffle; prefilter keeps L0 keys-sized; read-side LWW resolves) or "cow". ELASTIC_COMPACT overrides the auto-compaction
 # threshold — raw counts TOTAL L0 files, so one compaction lands in-window
 # at files_per_epoch * (epochs - 1).
-MODE = os.environ.get("ELASTIC_MODE", "mor")
-PREFILTER = {"on": True, "off": False, "bloom": True}.get(
+MODE = os.environ.get("ELASTIC_MODE", "raw")
+PREFILTER = {"on": True, "off": False}.get(
     os.environ.get("ELASTIC_PREFILTER", ""), None)
-# "bloom" selects the distributed bloom winner-set strategy (no per-batch
-# driver-serial broadcast-relation build); anything else = exact broadcast
-PREFILTER_STRATEGY = ("bloom" if os.environ.get("ELASTIC_PREFILTER") ==
-                      "bloom" else "broadcast")
 # raw L0 clustering (bucket ranges per task-file); 1 = unclustered
 # single-file-per-task L0 (the r3-comparable configuration); "auto" = the
 # adaptive file-size-floor controller (the r4 production default)
@@ -346,7 +341,7 @@ def warmup_merge(spark) -> None:
                             num_buckets=NUM_BUCKETS)
     merge_cdc_batch(wtab, change_feed(spark, n_events=200_000, n_keys=20_000,
                                       n_epochs=1),
-                    batch_id=0, txn_app="warmup", salt_buckets=8, mode="mor")
+                    batch_id=0, txn_app="warmup", mode="raw", prefilter=True)
 
 
 def _cpu_counters(cores: set[int] | None = None) -> tuple[int, int, int]:
@@ -441,8 +436,7 @@ def run_phase(spark, level_execs: int) -> dict:
     table = LakeTable.create(spark, tdir, schema, key_cols=["repo", "path"],
                              num_buckets=NUM_BUCKETS)
     runner = CdcStreamRunner(spark, table, FEED_DIR, ckpt, txn_app="bench",
-                             salt_buckets=8, mode=MODE, prefilter=PREFILTER,
-                             prefilter_strategy=PREFILTER_STRATEGY,
+                             mode=MODE, prefilter=PREFILTER,
                              l0_groups=L0_GROUPS,
                              auto_compact_deltas=COMPACT_AT,
                              max_files_per_trigger=FILES_PER_EPOCH)
@@ -778,7 +772,6 @@ def main() -> None:
                          "num_buckets": NUM_BUCKETS, "mode": MODE,
                          "n_events": N_EVENTS, "n_epochs": N_EPOCHS,
                          "prefilter": PREFILTER,
-                         "prefilter_strategy": PREFILTER_STRATEGY,
                          "l0_groups": L0_GROUPS,
                          "ts": round(time.time(), 1),
                          "order": f"{order[0]}->{order[1]}", "gap_gbps": []}

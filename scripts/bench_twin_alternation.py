@@ -288,9 +288,8 @@ def main() -> None:
                                str(4 * ev2.EXEC_CORES))
                 merge_cdc_batch(table, spark.read.parquet(
                     *alt.epoch_files(0)),
-                    batch_id=0, txn_app="alt", salt_buckets=8,
+                    batch_id=0, txn_app="alt",
                     mode=ev2.MODE, prefilter=ev2.PREFILTER,
-                    prefilter_strategy=ev2.PREFILTER_STRATEGY,
                     l0_groups=ev2.L0_GROUPS,
                     auto_compact_deltas=10 ** 9)
 

@@ -96,7 +96,7 @@ def main() -> None:
                                      num_buckets=ev2.NUM_BUCKETS)
             runner = CdcStreamRunner(
                 spark, table, ev2.FEED_DIR, f"{WORK}/ckpt", txn_app="audit",
-                salt_buckets=8, mode="raw", prefilter=True, l0_groups="auto",
+                mode="raw", prefilter=True, l0_groups="auto",
                 auto_compact_deltas=10 ** 9, async_commit=use_async,
                 max_files_per_trigger=ev2.FILES_PER_EPOCH)
             runner.run_available_now(timeout_sec=1800)
@@ -113,13 +113,12 @@ def main() -> None:
                 wj = ph.get("write_job_s")
                 if not wall or wj is None:
                     continue
-                # engine-attributable caller-path serial: plan + prefilter
-                # build (harvest/lineage/fsync/compact ride the finalizer
+                # engine-attributable caller-path serial: plan build
+                # (harvest/lineage/fsync/compact ride the finalizer
                 # thread under async); the rest of outside_s is the
                 # streaming WRAPPER (Spark offset/commit metadata logs,
                 # file-source listing) — not the engine's commit path
-                eng = round(ph.get("plan_build_s", 0)
-                            + ph.get("prefilter_build_s", 0), 4)
+                eng = round(ph.get("plan_build_s", 0), 4)
                 rows.append({"batch": m.batch_id,
                              "trigger_wall_s": round(wall, 3),
                              "write_job_s": wj,

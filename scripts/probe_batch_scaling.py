@@ -60,8 +60,7 @@ def main() -> None:
         t_read = time.monotonic() - t0
         t0 = time.monotonic()
         m = merge_cdc_batch(table, batch, batch_id=i, txn_app="probe",
-                            salt_buckets=8,
-                            mode=os.environ.get("BENCH_MODE", "mor"),
+                            mode=os.environ.get("BENCH_MODE", "raw"),
                             auto_compact_deltas=10**9)
         t_merge = time.monotonic() - t0
         per_batch.append({"epoch": ep, "read_plan_s": round(t_read, 3),

@@ -74,8 +74,7 @@ def main() -> None:
         r["analyze_s"] = round(time.monotonic() - t0, 3)
         t0 = time.monotonic()
         adds = table._write_data_files(delta, snap.version + 1 + i, snap.schema,
-                                       snap.schema_id, repartition=False,
-                                       kind="delta")
+                                       snap.schema_id, kind="delta")
         r["write_job_s"] = round(time.monotonic() - t0, 3)
         t0 = time.monotonic()
         _ = obs.get

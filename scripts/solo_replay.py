@@ -78,7 +78,7 @@ def main() -> None:
                             num_buckets=NUM_BUCKETS)
     merge_cdc_batch(wtab, change_feed(spark, n_events=200_000, n_keys=20_000,
                                       n_epochs=1),
-                    batch_id=0, txn_app="warmup", salt_buckets=8, mode="mor")
+                    batch_id=0, txn_app="warmup", mode="raw")
 
     # barrier: signal warmed-up readiness, then wait for the coordinated GO
     ready, go = os.environ.get("WAIT_READY"), os.environ.get("WAIT_GO")
@@ -100,7 +100,7 @@ def main() -> None:
                              key_cols=["repo", "path"],
                              num_buckets=NUM_BUCKETS)
     runner = CdcStreamRunner(spark, table, FEED_DIR, f"{WORK}/ckpt",
-                             txn_app="bench", salt_buckets=8, mode="mor",
+                             txn_app="bench", mode="raw",
                              auto_compact_deltas=max(2, N_EPOCHS - 1),
                              max_files_per_trigger=FILES_PER_EPOCH)
     t0 = time.monotonic()

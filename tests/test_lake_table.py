@@ -128,7 +128,7 @@ def test_stats_file_skipping(spark, tmp_table_dir):
     b = spark.createDataFrame([(1, 0, "U", "rz", "pz", "x", 5000)],
                               ["lsn", "epoch", "op", "repo", "path",
                                "content", "seq"])
-    merge_cdc_batch(t, b, 0, "sp", mode="mor")
+    merge_cdc_batch(t, b, 0, "sp", mode="raw")
     with pytest.raises(ValueError):
         t.read(skip_predicates=[("seq", "=", 5000)])
 
@@ -272,7 +272,7 @@ def test_checkpointed_table_state_matches_after_merges(spark, tmp_table_dir,
     feed = change_feed(spark, n_events=6000, n_keys=200, n_epochs=3).cache()
     for e in range(3):
         merge_cdc_batch(t, feed.filter(F.col("epoch") == e), e, "ckm",
-                        mode="mor", auto_compact_deltas=2)
+                        mode="raw", auto_compact_deltas=2, l0_groups=4)
     assert t._checkpoint_versions()
     cold = LakeTable.load(spark, t.location)
     assert cold.snapshot().files == t.snapshot().files
@@ -296,7 +296,7 @@ def test_async_finalize_read_your_writes(spark, tmp_table_dir):
     any other table op) joins the pending commit first, so the caller always
     observes its own write, and last_txn counts the pending fence."""
     t = make_table(spark, tmp_table_dir)
-    v = t.append_deltas(_delta_df(spark, 30), repartition=False,
+    v = t.append_deltas(_delta_df(spark, 30),
                         properties={"txn_app": "a1", "txn_batch": 7},
                         async_finalize=True)
     assert v == -1
@@ -304,7 +304,7 @@ def test_async_finalize_read_your_writes(spark, tmp_table_dir):
     assert t.read().count() == 30          # read joined the finalizer
     assert t.current_version() == 1
     # a second async append after the first settled
-    t.append_deltas(_delta_df(spark, 10, "b"), repartition=False,
+    t.append_deltas(_delta_df(spark, 10, "b"),
                     properties={"txn_app": "a1", "txn_batch": 8},
                     async_finalize=True)
     got = t.join_pending_commit()
@@ -320,8 +320,8 @@ def test_async_finalize_failure_surfaces(spark, tmp_table_dir):
     def boom(adds):
         raise RuntimeError("lineage exploded")
 
-    v = t.append_deltas(_delta_df(spark, 5), repartition=False,
-                        props_fn=boom, async_finalize=True)
+    v = t.append_deltas(_delta_df(spark, 5), props_fn=boom,
+                        async_finalize=True)
     assert v == -1
     with pytest.raises(RuntimeError, match="lineage exploded"):
         t.join_pending_commit()
@@ -333,7 +333,7 @@ def test_async_finalize_failure_unfences_batch(spark, tmp_table_dir):
     """A failed background commit must not leave its batch counted by the
     fence: last_txn falls back to the last batch that actually landed."""
     t = make_table(spark, tmp_table_dir)
-    t.append_deltas(_delta_df(spark, 5), repartition=False,
+    t.append_deltas(_delta_df(spark, 5),
                     properties={"txn_app": "a1", "txn_batch": 7},
                     async_finalize=True)
     t.join_pending_commit()
@@ -341,7 +341,7 @@ def test_async_finalize_failure_unfences_batch(spark, tmp_table_dir):
     def boom(adds):
         raise RuntimeError("lineage exploded")
 
-    t.append_deltas(_delta_df(spark, 5, "b"), repartition=False,
+    t.append_deltas(_delta_df(spark, 5, "b"),
                     properties={"txn_app": "a1", "txn_batch": 8},
                     props_fn=boom, async_finalize=True)
     with pytest.raises(RuntimeError, match="lineage exploded"):
@@ -356,8 +356,7 @@ def test_join_pending_commit_keeps_newer_finalizer(spark, tmp_table_dir):
     import threading
 
     t = make_table(spark, tmp_table_dir)
-    t.append_deltas(_delta_df(spark, 5), repartition=False,
-                    async_finalize=True)
+    t.append_deltas(_delta_df(spark, 5), async_finalize=True)
     inner, maint_waiting, release = (t._commit_future, threading.Event(),
                                      threading.Event())
 
@@ -377,7 +376,7 @@ def test_join_pending_commit_keeps_newer_finalizer(spark, tmp_table_dir):
                              name="lake-maint-join")
     maint.start()
     assert maint_waiting.wait(30)
-    t.append_deltas(_delta_df(spark, 10, "b"), repartition=False,
+    t.append_deltas(_delta_df(spark, 10, "b"),
                     async_finalize=True)     # joins N, submits N+1
     release.set()
     maint.join(30)

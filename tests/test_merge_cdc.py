@@ -1,9 +1,9 @@
 """MERGE-apply semantics: LWW, deletes, delete-then-reinsert, duplicate-LSN
 redelivery, NULL keys, fence idempotence, schema evolution mid-stream,
-salted dedup equivalence, full replay sha256 match.
+winner prefilter, full replay sha256 match.
 
 The semantic tests are parameterized over both write strategies — COW
-(rewrite touched buckets) and MOR (append delta files, resolve at read) —
+(rewrite touched buckets) and raw (append delta files, resolve at read) —
 which must be read-indistinguishable."""
 
 import os
@@ -12,12 +12,12 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MODES = ["cow", "mor", "raw"]
+MODES = ["cow", "raw"]
 
 from etl_api_bigquery_spark.cdc import change_feed, expected_final_state
 from etl_api_bigquery_spark.cdc.oracle import assert_replay_match
 from etl_api_bigquery_spark.lake import LakeTable
-from etl_api_bigquery_spark.lake.merge import lww_dedup, merge_cdc_batch
+from etl_api_bigquery_spark.lake.merge import lww_prefilter, merge_cdc_batch
 
 SILVER = T.StructType([
     T.StructField("repo", T.StringType()),
@@ -188,11 +188,43 @@ def test_expire_tombstones(spark, tmp_table_dir):
     assert t.read().count() == 1  # live data untouched
 
 
-def test_salted_dedup_equivalence(spark):
-    feed = change_feed(spark, n_events=5000, n_keys=200, n_epochs=3)
-    a = lww_dedup(feed, ["repo", "path"], salt_buckets=0)
-    b = lww_dedup(feed, ["repo", "path"], salt_buckets=8)
-    assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
+@pytest.mark.parametrize("mode", ["mor", "rwa"])
+def test_unknown_mode_rejected(spark, tmp_table_dir, mode):
+    """Only cow and raw exist; any other mode fails before touching the
+    table instead of silently running cow."""
+    t = make_table(spark, tmp_table_dir)
+    with pytest.raises(ValueError, match="unknown mode"):
+        merge_cdc_batch(t, events_df(spark, [evt(1, "I", "r1", "a", "v1")]),
+                        0, "x", mode=mode)
+    assert t.current_version() == 0 and t.last_txn("x") is None
+
+
+def test_prefilter_drops_null_lsn(spark):
+    """The broadcast winner-token prefilter drops NULL-lsn events (they
+    never match a winner token) and keeps the key's real winner."""
+    ev = events_df(spark, [(None, 0, "U", "r1", "p1", "c", "py", "x"),
+                           (5, 0, "U", "r1", "p1", "c", "py", "y")])
+    got = lww_prefilter(ev, ["repo", "path"], "lsn").collect()
+    assert len(got) == 1 and got[0]["lsn"] == 5
+
+
+def test_raw_prefilter_final_state_parity(spark, tmp_table_dir):
+    """raw with prefilter=True (the scaling-campaign config) and without it
+    resolve to the same table, which equals the batch oracle."""
+    feed = change_feed(spark, n_events=30_000, n_keys=3_000, n_epochs=3,
+                       seed=7).cache()
+    cols = [f.name for f in SILVER.fields]
+    got = {}
+    for pf in (True, False):
+        t = LakeTable.create(spark, os.path.join(tmp_table_dir, f"pf{pf}"),
+                             SILVER, key_cols=["repo", "path"], num_buckets=8)
+        for e in range(3):
+            merge_cdc_batch(t, feed.filter(F.col("epoch") == e), e, "pf",
+                            mode="raw", prefilter=pf)
+        got[pf] = t.read().select(*cols).orderBy("repo", "path").collect()
+    exp = expected_final_state(feed).select(*cols).orderBy("repo", "path")
+    assert got[True] == got[False] == exp.collect()
+    feed.unpersist()
 
 
 @pytest.mark.parametrize("mode", MODES)
@@ -202,7 +234,7 @@ def test_full_replay_sha256_match(spark, tmp_table_dir, mode):
     feed = change_feed(spark, n_events=20000, n_keys=800, n_epochs=4).cache()
     for e in range(4):
         merge_cdc_batch(t, feed.filter(F.col("epoch") == e), e, "replay",
-                        salt_buckets=4, mode=mode)
+                        mode=mode)
     res = assert_replay_match(t.read(), expected_final_state(feed))
     assert res["sha_mismatch"] == 0 and res["missing"] == 0 and res["extra"] == 0
     feed.unpersist()
@@ -312,7 +344,7 @@ def test_runner_max_bytes_per_trigger(spark, tmp_table_dir):
     t = make_table(spark, tmp_table_dir)
     runner = CdcStreamRunner(
         spark, t, feed_dir, os.path.join(tmp_table_dir, "ck"),
-        txn_app="thr", mode="mor",
+        txn_app="thr", mode="raw",
         max_bytes_per_trigger=1,  # 1 byte bound -> 1 file per trigger
     )
     runner.run_available_now()
@@ -325,7 +357,7 @@ def test_lineage_events_per_sec(spark, tmp_table_dir):
     from etl_api_bigquery_spark.meta.lineage import lineage_df
     t = make_table(spark, tmp_table_dir)
     merge_cdc_batch(t, events_df(spark, [evt(1, "I", "r1", "a", "v1")]),
-                    0, "x", mode="mor")
+                    0, "x", mode="raw")
     merge_cdc_batch(t, events_df(spark, [evt(2, "U", "r1", "a", "v2")]),
                     1, "x", mode="cow")
     lin = lineage_df(spark, t).filter("events_per_sec IS NOT NULL").collect()

@@ -1,5 +1,7 @@
-"""Merge-on-read specifics: delta accumulation, read resolution, compaction
-equivalence, auto-compaction trigger, COW/MOR interop, time travel."""
+"""Merge-on-read specifics of the raw (LSM append) path: delta
+accumulation, read resolution, compaction equivalence, auto-compaction
+trigger, COW/raw interop, time travel. Tests that need per-bucket delta
+files write bucket-pure L0 (``l0_groups=num_buckets``)."""
 
 import os
 import re
@@ -32,7 +34,7 @@ def test_mor_accumulates_deltas_then_compacts_equal_state(spark, tmp_table_dir):
     feed = change_feed(spark, n_events=8000, n_keys=300, n_epochs=4).cache()
     for e in range(4):
         merge_cdc_batch(t, feed.filter(F.col("epoch") == e), e, "mor",
-                        mode="mor", auto_compact_deltas=1000)
+                        mode="raw", auto_compact_deltas=1000, l0_groups=4)
     assert sum(t.delta_file_counts().values()) > 0
     before = t.read()
     expected = expected_final_state(feed)
@@ -51,7 +53,7 @@ def test_mor_auto_compaction_triggers(spark, tmp_table_dir):
     feed = change_feed(spark, n_events=4000, n_keys=100, n_epochs=8).cache()
     for e in range(8):
         merge_cdc_batch(t, feed.filter(F.col("epoch") == e), e, "mor",
-                        mode="mor", auto_compact_deltas=3)
+                        mode="raw", auto_compact_deltas=3, l0_groups=2)
     # auto-compaction kept per-bucket delta count below the threshold
     assert all(c < 3 for c in t.delta_file_counts().values())
     assert_replay_match(t.read(), expected_final_state(feed))
@@ -62,10 +64,10 @@ def test_cow_after_mor_interop(spark, tmp_table_dir):
     """A COW batch on a table with outstanding deltas must resolve them."""
     t = make_table(spark, tmp_table_dir)
     feed = change_feed(spark, n_events=6000, n_keys=200, n_epochs=3).cache()
-    merge_cdc_batch(t, feed.filter("epoch = 0"), 0, "mix", mode="mor",
-                    auto_compact_deltas=1000)
-    merge_cdc_batch(t, feed.filter("epoch = 1"), 1, "mix", mode="mor",
-                    auto_compact_deltas=1000)
+    merge_cdc_batch(t, feed.filter("epoch = 0"), 0, "mix", mode="raw",
+                    auto_compact_deltas=1000, l0_groups=4)
+    merge_cdc_batch(t, feed.filter("epoch = 1"), 1, "mix", mode="raw",
+                    auto_compact_deltas=1000, l0_groups=4)
     merge_cdc_batch(t, feed.filter("epoch = 2"), 2, "mix", mode="cow")
     assert_replay_match(t.read(), expected_final_state(feed))
     feed.unpersist()
@@ -78,9 +80,9 @@ def test_mor_time_travel(spark, tmp_table_dir):
                                 "commit", "lang", "content"])
     b1 = spark.createDataFrame([(2, 1, "U", "r", "p", "c", "py", "v2")],
                                b0.schema)
-    merge_cdc_batch(t, b0, 0, "tt", mode="mor")
+    merge_cdc_batch(t, b0, 0, "tt", mode="raw")
     v1 = t.current_version()
-    merge_cdc_batch(t, b1, 1, "tt", mode="mor")
+    merge_cdc_batch(t, b1, 1, "tt", mode="raw")
     assert t.read(version=v1).collect()[0].content == "v1"
     assert t.read().collect()[0].content == "v2"
 
@@ -117,16 +119,16 @@ def test_cow_after_raw_full_rewrite_no_dupes(spark, tmp_table_dir):
 
 
 def test_mor_write_cost_independent_of_table_size(spark, tmp_table_dir):
-    """The point of MOR: a 1-key batch adds O(1) files and reads 0 target
-    rows even on a populated table."""
+    """The point of merge-on-read: a 1-key batch adds O(1) files and reads 0
+    target rows even on a populated table."""
     t = make_table(spark, tmp_table_dir, buckets=8)
     feed = change_feed(spark, n_events=20000, n_keys=2000, n_epochs=1)
-    merge_cdc_batch(t, feed, 0, "sz", mode="mor")
+    merge_cdc_batch(t, feed, 0, "sz", mode="raw", l0_groups=8)
     t.compact_deltas(max_delta_files=1)
     one = spark.createDataFrame([(99999, 1, "U", "repo_1", "x", "c", "py", "nv")],
                                 ["lsn", "epoch", "op", "repo", "path",
                                  "commit", "lang", "content"])
-    m = merge_cdc_batch(t, one, 1, "sz", mode="mor")
+    m = merge_cdc_batch(t, one, 1, "sz", mode="raw", l0_groups=8)
     assert m.target_rows_read == 0
     assert m.buckets_touched == 1
     got = t.read().filter("repo = 'repo_1' and path = 'x'").collect()

@@ -147,7 +147,7 @@ def test_merge_dedup_pipeline_shuffle_budget(spark, tmp_table_dir):
     src = lww_prefilter(ev, ["repo", "path"], "lsn")
     evb = (src.withColumn(BUCKET_COL, t.bucket_expr())
            .repartition(t.num_buckets, F.col(BUCKET_COL)))
-    winners = lww_dedup(evb, [BUCKET_COL, "repo", "path"], "lsn", 4)
+    winners = lww_dedup(evb, [BUCKET_COL, "repo", "path"], "lsn")
     plan = executed_plan_text(winners)
     assert count_exchanges(winners) == 2
     assert plan.count("BroadcastExchange") == 1

@@ -52,7 +52,7 @@ def prop_spark(spark):
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(seq=events_strategy, n_batches=splits_strategy,
        dup=st.booleans())
-@pytest.mark.parametrize("mode", ["cow", "mor", "raw"])
+@pytest.mark.parametrize("mode", ["cow", "raw"])
 def test_any_sequence_matches_oracle(spark, tmp_path_factory, seq, n_batches,
                                      dup, mode):
     rows = []

@@ -118,7 +118,7 @@ def test_lineage_df(spark, tmp_table_dir):
                          key_cols=["repo", "path"], num_buckets=2)
     b = spark.createDataFrame([(1, 0, "I", "r", "p", "v")],
                               ["lsn", "epoch", "op", "repo", "path", "content"])
-    merge_cdc_batch(t, b, 0, "lin-app", mode="mor")
+    merge_cdc_batch(t, b, 0, "lin-app", mode="raw")
     lin = lineage_df(spark, t)
     rows = [r for r in lin.collect() if r.action == "merge_mor"]
     assert len(rows) == 1
@@ -162,3 +162,13 @@ def test_source_log_files_plain_and_compact(spark, tmp_path):
     assert r._source_log_files(2) == ["/feed/d.parquet"]
     with pytest.raises(FileNotFoundError):
         r._source_log_files(3)
+    # a later PLAIN file covers only its own batch: batches 3-4 (their plain
+    # entries purged) must fail loudly, not replay as empty
+    with open(os.path.join(sdir, "5"), "w") as fh:
+        fh.write("v1\n")
+        fh.write(json.dumps({"path": "file:///feed/e.parquet",
+                             "timestamp": 1, "batchId": 5}) + "\n")
+    assert r._source_log_files(5) == ["/feed/e.parquet"]
+    for b in (3, 4):
+        with pytest.raises(FileNotFoundError):
+            r._source_log_files(b)

@@ -85,12 +85,12 @@ def test_stateful_staleness_filter_preserves_state(spark, staged):
     the per-key state store."""
     feed, feed_dir, table, ckpt = staged
     r = CdcStreamRunner(spark, table, feed_dir, ckpt, txn_app="sf1",
-                        mode="mor", stateful_staleness_filter=True)
+                        mode="raw", stateful_staleness_filter=True)
     r.run_available_now()
     assert_replay_match(table.read(), expected_final_state(feed))
     # second drain on the same checkpoint: nothing new, state intact
     r2 = CdcStreamRunner(spark, table, feed_dir, ckpt, txn_app="sf1",
-                         mode="mor", stateful_staleness_filter=True)
+                         mode="raw", stateful_staleness_filter=True)
     m2 = r2.run_available_now()
     assert all(m.skipped_fence or m.keys == 0 for m in m2)
     assert_replay_match(table.read(), expected_final_state(feed))
@@ -148,8 +148,9 @@ def test_async_commit_stream_matches_oracle(spark, staged):
 def test_repair_fence_gap_recovers_lost_async_commit(spark, staged):
     """The async-commit crash window: checkpoint committed batch N but the
     table commit never fsynced. Simulate by deleting the table's last commit
-    log entry after a clean drain, then repair from the checkpoint's
-    file-source log and verify the final state matches the oracle."""
+    log entry after a clean drain, then restart with SYNC commits: the
+    restart still repairs from the checkpoint's file-source log, and the
+    final state matches the oracle."""
     feed, feed_dir, table, ckpt = staged
     r = CdcStreamRunner(spark, table, feed_dir, ckpt, txn_app="gap1",
                         mode="raw", async_commit=True)
@@ -164,8 +165,8 @@ def test_repair_fence_gap_recovers_lost_async_commit(spark, staged):
     fresh = LakeTable(spark, table.location)
     assert fresh.last_txn("gap1") == 4
     r2 = CdcStreamRunner(spark, fresh, feed_dir, ckpt, txn_app="gap1",
-                         mode="raw")
-    repaired = r2.repair_fence_gap()
+                         mode="raw", async_commit=False)
+    repaired = r2.run_available_now()
     assert [m.batch_id for m in repaired] == [5]
     assert not any(m.skipped_fence for m in repaired)
     assert_replay_match(fresh.read(), expected_final_state(feed))
