@@ -675,17 +675,21 @@ class LakeTable:
         rel_dir = f"{_DATA_DIR}/c{version:010d}-{uuid.uuid4().hex[:8]}"
         abs_dir = os.path.join(self.location, rel_dir)
         _tw = time.monotonic()
+        part = None
         if kind == "base":
             out = out.repartition(self.num_buckets, F.col(BUCKET_COL))
             out = out.withColumn("_bkt", F.col(BUCKET_COL))
-            out.write.mode("overwrite").partitionBy("_bkt").parquet(abs_dir)
+            part = "_bkt"
         elif bucket_groups and bucket_groups > 1:
             gsz = -(-self.num_buckets // int(bucket_groups))   # ceil
             out = out.withColumn(
                 "_bgrp", (F.col(BUCKET_COL) / F.lit(gsz)).cast("int"))
-            out.write.mode("overwrite").partitionBy("_bgrp").parquet(abs_dir)
-        else:
-            out.write.mode("overwrite").parquet(abs_dir)
+            part = "_bgrp"
+        # no _SUCCESS marker: the commit doc in _log/ is the table's success
+        # marker and nothing reads data/**/_SUCCESS (one file op less a write)
+        w = out.write.mode("overwrite").option(
+            "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+        (w.partitionBy(part) if part else w).parquet(abs_dir)
         return abs_dir, rel_dir, round(time.monotonic() - _tw, 4)
 
     # above this file count the footer harvest runs as a Spark job on
@@ -713,13 +717,18 @@ class LakeTable:
                     .map(lambda fp: _harvest_footer(fp, abs_dir, rel_dir,
                                                     schema_id, kind))
                     .collect())
-            return [FileEntry.from_json(d) for d in docs]
-        # driver thread pool: footer reads release the GIL in pyarrow I/O,
-        # dropping per-commit cost from O(files) serial to ~O(files/16)
-        with ThreadPoolExecutor(max_workers=min(16, len(paths))) as pool:
-            return [FileEntry.from_json(d) for d in pool.map(
-                lambda fp: _harvest_footer(fp, abs_dir, rel_dir,
-                                           schema_id, kind), paths)]
+        else:
+            # driver thread pool: footer reads release the GIL in pyarrow
+            # I/O, dropping per-commit cost from O(files) serial to
+            # ~O(files/16)
+            with ThreadPoolExecutor(max_workers=min(16, len(paths))) as pool:
+                docs = list(pool.map(
+                    lambda fp: _harvest_footer(fp, abs_dir, rel_dir,
+                                               schema_id, kind), paths))
+        # a write task with no rows still writes a file (Spark's partition 0
+        # always does); committed, it has no _bucket stats and would count
+        # toward the read amplification of every bucket
+        return [FileEntry.from_json(d) for d in docs if d["rows"]]
 
     def _with_bucket(self, df: DataFrame) -> DataFrame:
         if BUCKET_COL in df.columns:
@@ -1177,8 +1186,14 @@ class LakeTable:
 
     def vacuum(self, keep_versions: int = 2) -> int:
         """Physically delete data files not referenced by the newest
-        ``keep_versions`` snapshots. Returns #files removed."""
+        ``keep_versions`` snapshots. Returns #files removed.
+
+        Background maintenance is joined first: an in-flight
+        :meth:`compact_deltas_async` fold has written files its commit has
+        not referenced yet, and deleting them would leave that commit
+        pointing at missing files."""
         self.join_pending_commit()
+        self.join_maintenance()
         vs = self._commit_versions()
         keep = set()
         for v in vs[-keep_versions:]:

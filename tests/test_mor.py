@@ -135,6 +135,78 @@ def test_mor_write_cost_independent_of_table_size(spark, tmp_table_dir):
     assert len(got) == 1 and got[0].content == "nv"
 
 
+def test_raw_tiny_batch_commits_no_empty_file(spark, tmp_table_dir):
+    """An unclustered raw write of a one-row batch from a multi-partition
+    source: Spark's partition 0 writes a parquet file even when it holds no
+    rows. Committed, that file has no _bucket stats and would count toward
+    every bucket's read amplification; harvest must drop it."""
+    t = make_table(spark, tmp_table_dir, buckets=8)
+    one = spark.createDataFrame(
+        [(1, 0, "U", "repo_1", "x", "c", "py", "v")],
+        ["lsn", "epoch", "op", "repo", "path", "commit", "lang", "content"]
+    ).repartition(4)
+    m = merge_cdc_batch(t, one, 0, "tiny", mode="raw", l0_groups=1)
+    assert m.buckets_touched == 1
+    assert [e.rows for e in t.snapshot().files.values()] == [1]
+    assert list(t.bucket_read_amplification().values()) == [1]
+    assert t.read().collect()[0].content == "v"
+
+
+def test_data_writes_leave_no_success_marker(spark, tmp_table_dir):
+    """The commit doc in _log/ is the table's success marker: raw merges,
+    appends and folds write no _SUCCESS file under data/."""
+    t = make_table(spark, tmp_table_dir)
+    feed = change_feed(spark, n_events=2000, n_keys=100, n_epochs=1)
+    merge_cdc_batch(t, feed, 0, "ok", mode="raw", l0_groups=4)
+    t.append(spark.createDataFrame(
+        [("repo_x", "p", "c", "py", "a")], SILVER))
+    assert t.compact_deltas(max_delta_files=1) is not None
+    data = os.path.join(t.location, "data")
+    marks = [os.path.join(d, f) for d, _, fs in os.walk(data) for f in fs
+             if f == "_SUCCESS"]
+    assert marks == []
+
+
+def test_vacuum_waits_for_inflight_fold(spark, tmp_table_dir):
+    """vacuum() must not delete the written-but-uncommitted output of a
+    background fold: the fold is held just before its commit, vacuum is
+    started, then the fold is released. vacuum blocks until the fold lands
+    and the table still reads equal to the oracle."""
+    import threading
+
+    t = make_table(spark, tmp_table_dir)
+    feed = change_feed(spark, n_events=4000, n_keys=150, n_epochs=2).cache()
+    for e in range(2):
+        merge_cdc_batch(t, feed.filter(F.col("epoch") == e), e, "vac",
+                        mode="raw", auto_compact_deltas=10**6, l0_groups=4)
+    written, release = threading.Event(), threading.Event()
+    commit = t._write_commit
+
+    def held_commit(*a, **kw):
+        if threading.current_thread().name.startswith("lake-maint"):
+            written.set()
+            assert release.wait(120)
+        return commit(*a, **kw)
+
+    t._write_commit = held_commit
+    fold = t.compact_deltas_async(buckets=range(t.num_buckets))
+    assert written.wait(120)              # fold output is on disk, uncommitted
+    removed = []
+    vac = threading.Thread(
+        target=lambda: removed.append(t.vacuum(keep_versions=1)))
+    vac.start()
+    try:
+        vac.join(2)
+        assert vac.is_alive()             # vacuum waits for the fold
+    finally:
+        release.set()
+        vac.join(120)
+    assert fold.result() is not None
+    assert removed and removed[0] > 0     # the folded L0 files went
+    assert_replay_match(t.read(), expected_final_state(feed))
+    feed.unpersist()
+
+
 def test_raw_bucket_pure_l0_compacts_per_bucket(spark, tmp_table_dir):
     """l0_groups=num_buckets: raw L0 files are bucket-PURE (labeled with real
     bucket ids via footer stats, no shuffle added), so compaction folds ONLY

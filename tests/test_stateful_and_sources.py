@@ -155,6 +155,12 @@ def test_source_log_files_plain_and_compact(spark, tmp_path):
                            ("repo", "path", "commit", "lang", "content")])
     table = LakeTable.create(spark, os.path.join(str(tmp_path), "t"), schema,
                              key_cols=["repo", "path"], num_buckets=4)
+    # side files a crash mid log write leaves behind: the checkpoint
+    # manager's temp file and the local filesystem's checksum file
+    for junk in (".3.1b2c.tmp", ".0.crc", ".2.compact.crc"):
+        with open(os.path.join(sdir, junk), "w") as fh:
+            fh.write("v1\n" + json.dumps({"path": "file:///feed/z.parquet",
+                                          "timestamp": 1, "batchId": 3}))
     r = CdcStreamRunner(spark, table, "/feed", ckpt, txn_app="x")
     assert r._source_log_files(0) == ["/feed/a.parquet"]      # plain file
     # batch 1 has no plain file -> resolved from the compact, filtered by id

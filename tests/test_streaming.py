@@ -172,3 +172,21 @@ def test_repair_fence_gap_recovers_lost_async_commit(spark, staged):
     assert_replay_match(fresh.read(), expected_final_state(feed))
     # and on a healthy table the repair is a no-op
     assert r2.repair_fence_gap() == []
+
+
+def test_session_checkpoint_manager_default_and_override(spark):
+    """get_spark writes streaming checkpoint logs through Spark's
+    FileSystem-based manager; extra_conf still overrides it."""
+    from etl_api_bigquery_spark.session import get_spark
+
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    pkg = "org.apache.spark.sql.execution.streaming.checkpointing."
+    fs_mgr = pkg + "FileSystemBasedCheckpointFileManager"
+    fc_mgr = pkg + "FileContextBasedCheckpointFileManager"
+    assert spark.conf.get(key, None) == fs_mgr
+    try:
+        s = get_spark(app_name="tests", master="local[8]",
+                      shuffle_partitions=8, extra_conf={key: fc_mgr})
+        assert s.conf.get(key) == fc_mgr
+    finally:
+        spark.conf.set(key, fs_mgr)
