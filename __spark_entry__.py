@@ -103,8 +103,9 @@ def _run_cdc_engine(spark: SparkSession, sf_dir: str,
     epoch) on the derived feed and return the final silver state.
 
     ``mode`` selects the write strategy under test: "cow" exercises the
-    read-optimized copy-on-write path; "raw" exercises the LSM append path
-    that is `CdcStreamRunner`'s shipped ingest default (runner.py:60)."""
+    append plus the synchronous fold of the touched buckets; "raw" exercises
+    the LSM append path that is `CdcStreamRunner`'s shipped ingest default
+    (runner.py:60)."""
     events = _cdc_events_from_documents(spark, sf_dir).cache()
     loc = tempfile.mkdtemp(prefix="cdc_entry_", dir="/tmp")
     shutil.rmtree(loc, ignore_errors=True)
@@ -143,7 +144,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def cdc_merge_apply_raw(spark, sf):
         # The SHIPPED ingest default (CdcStreamRunner: mode="raw", adaptive
-        # bucket-clustered L0, prefilter at the raw-mode engine default)
+        # bucket-clustered L0, no prefilter)
         # against the same LWW oracle — the raw/LSM write path must read
         # back identically to cow (VERDICT r4 "What's missing" #3).
         return _run_cdc_engine(spark, sf, mode="raw", l0_groups="auto")

@@ -134,13 +134,12 @@ def main() -> None:
     # high-throughput zero-shuffle LSM path, the runner default) | "cow".
     # BENCH_PREFILTER: "on"/"off"; unset defaults to ON for raw
     # (keys-sized L0 — the benched throughput configuration; pass "off" to
-    # keep full event history in L0) and merge-default otherwise.
+    # keep full event history in L0) and OFF for cow.
     # BENCH_L0_GROUPS: raw L0 clustering (bucket ranges per task-file);
     # default 8 — bounded file count with group-local compaction.
     mode = os.environ.get("BENCH_MODE", "raw")
     pf_env = os.environ.get("BENCH_PREFILTER", "")
-    prefilter = {"off": False, "on": True}.get(
-        pf_env, True if mode == "raw" else None)
+    prefilter = {"off": False, "on": True}.get(pf_env, mode == "raw")
     l0_groups = int(os.environ.get("BENCH_L0_GROUPS", "8"))
 
     # Best-of-N replay reps: the host is a shared VM with 1.4-3x
@@ -159,7 +158,7 @@ def main() -> None:
         # compaction threshold (per-bucket read amplification) sized so at
         # least one compaction lands INSIDE the timed window — steady ingest
         # pays amortized compaction. Raw L0 grows ~files_per_epoch per bucket
-        # per trigger (one file per task x group); cow never compacts.
+        # per trigger (one file per task x group); cow folds every trigger.
         compact_at = files_per_epoch * max(1, n_epochs - 1)
         runner = CdcStreamRunner(spark, table, feed_dir, rep_ckpt,
                                  txn_app="bench", prefilter=prefilter,

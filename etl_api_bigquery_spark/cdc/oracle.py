@@ -13,7 +13,25 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..lake.merge import ENVELOPE_COLS, OP_DELETE, lww_dedup
+from ..lake.merge import ENVELOPE_COLS, OP_DELETE
+
+
+def lww_dedup(
+    events: DataFrame,
+    key_cols: list[str],
+    lsn_col: str = "lsn",
+) -> DataFrame:
+    """Keep the max-LSN event per key (deletes included — the winner's op
+    decides the key's fate).
+
+    ``groupBy(keys).agg(max_by(struct(*), lsn))`` — Catalyst plans this as
+    partial+final hash aggregation, so map-side combine already absorbs most
+    duplicate traffic. NULL keys group together.
+    """
+    row = F.struct(*[F.col(c) for c in events.columns])
+    winner = events.groupBy(*key_cols).agg(
+        F.max_by(row, F.col(lsn_col)).alias("_row"))
+    return winner.select("_row.*")
 
 
 def expected_final_state(

@@ -5,27 +5,26 @@ src/features/nhanh/bills/components/loader.py:327-583 —
 ``WHEN MATCHED THEN UPDATE SET <all cols> / WHEN NOT MATCHED THEN INSERT``,
 keys ``(id,date)`` / ``(bill_id,product_id)``) plus its last-writer-wins dedup
 (W1/J4: ROW_NUMBER() OVER (PARTITION BY key ORDER BY extraction_timestamp DESC)
-... rn=1, src/scripts/remove_duplicates.py:47-63) as one Spark-native
-copy-on-write merge:
+... rn=1, src/scripts/remove_duplicates.py:47-63) as one LSM write path:
 
-1. **LWW dedup** the incoming change batch per key by monotonic LSN
-   (max_by over all columns; the narrow winner prefilter's map-side partial
-   aggregation absorbs hot-key skew — SURVEY.md §4 custom item 1).
-2. **Bucket pruning**: collect the distinct buckets the batch touches
-   (≤ num_buckets small ints) and read ONLY those target files via the
+1. **Append** the change batch exactly as scanned — bucket column computed
+   map-side, no shuffle, no dedup — as LWW-resolvable delta files, with the
+   exactly-once fence properties and lineage metrics in the same commit.
+2. **Resolve at read**: every read collapses a key to its max-LSN row
+   (:meth:`LakeTable._resolve_lww`); a winning DELETE stays as a tombstone
+   that keeps guarding the key against older redelivered events.
+   Delete-then-reinsert inside one batch resolves correctly because the
+   max-LSN event's op decides (SURVEY.md §7.5 item 2).
+3. **Fold** (:meth:`LakeTable.compact_deltas`): rewrite the resolved state of
+   a bucket set as base files, reading ONLY those buckets' files via the
    manifest — the Spark analogue of the reference's partition-pruned MERGE
-   ("Partition filtering trong MERGE để tối ưu", loader.py:27).
-3. **Apply**: survivors = target rows whose key is NOT in the batch
-   (broadcast anti-join — target is never shuffled for the probe), unioned
-   with batch rows whose final op is not DELETE. Delete-then-reinsert inside
-   one batch resolves correctly because the max-LSN event's op decides
-   (SURVEY.md §7.5 item 2).
-4. **Atomic swap** of the touched buckets' files in one commit, carrying the
-   exactly-once fence properties and lineage metrics.
+   ("Partition filtering trong MERGE để tối ưu", loader.py:27). ``mode="cow"``
+   folds the touched buckets right after the append; ``mode="raw"`` folds
+   when a bucket's read amplification reaches a threshold.
 
-Scale: shuffle volume is bounded by (batch size) + (data in touched buckets);
-untouched buckets are never read. At 10^10 events the knob is num_buckets
-(more buckets -> finer rewrite granularity).
+Scale: the append is O(batch) with no shuffle; a fold reads and rewrites only
+its buckets, so untouched buckets are never read. At 10^10 events the knob is
+num_buckets (more buckets -> finer fold granularity).
 """
 
 from __future__ import annotations
@@ -33,6 +32,7 @@ from __future__ import annotations
 import os
 import time
 import urllib.parse
+from collections import Counter
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -40,7 +40,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .table import BUCKET_COL, LSN_COL, OP_COL, LakeTable, widen_type
+from .table import (BUCKET_COL, LSN_COL, MIXED_BUCKET, OP_COL, LakeTable,
+                    widen_type)
 
 # CDC envelope columns that never land in the silver table.
 ENVELOPE_COLS = ("lsn", "epoch", "op", "event_ts")
@@ -58,7 +59,8 @@ class MergeMetrics:
     upserts: int = 0
     buckets_touched: int = 0
     target_rows_read: int = 0
-    skew_factor: float = 0.0       # max keys per bucket / mean keys per bucket
+    # max events per bucket / mean events per bucket (bucket-pure writes)
+    skew_factor: float = 0.0
     duration_sec: float = 0.0
     version: int = -1
     skipped_fence: bool = False
@@ -69,37 +71,6 @@ class MergeMetrics:
         d = dict(self.__dict__)
         d.update(d.pop("extra"))
         return d
-
-
-def lww_dedup(
-    events: DataFrame,
-    key_cols: list[str],
-    lsn_col: str = "lsn",
-) -> DataFrame:
-    """Keep the max-LSN event per key (deletes included — the winner's op
-    decides the key's fate).
-
-    ``groupBy(keys).agg(max_by(struct(*), lsn))`` — Catalyst plans this as
-    partial+final hash aggregation, so map-side combine already absorbs most
-    duplicate traffic.
-    """
-    from .table import session_expr_cache
-    cols = events.columns
-    cache = session_expr_cache(events.sparkSession)
-    ck = ("lww_dedup", tuple(cols), tuple(key_cols), lsn_col)
-    tpl = cache.get(ck)
-    if tpl is None:
-        # Column templates reused across micro-batches (the merge DAG is
-        # identical every trigger; only the source partition changes) —
-        # saves ~100 py4j round trips of driver-serial time per batch
-        row = F.struct(*[F.col(c) for c in cols]).alias("_row")
-        tpl = {
-            "agg": F.max_by(row, F.col(lsn_col)).alias("_row"),
-            "unpack": [F.col(f"_row.{c}").alias(c) for c in cols],
-        }
-        cache[ck] = tpl
-    winner = events.groupBy(*key_cols).agg(tpl["agg"])
-    return winner.select(*tpl["unpack"])
 
 
 def lww_prefilter(
@@ -120,8 +91,7 @@ def lww_prefilter(
 
     Not exact on its own: two events of one key sharing the max LSN would both
     survive (LSNs are unique in a real log, but we don't rely on it) — the
-    caller still runs :func:`lww_dedup` on the filtered rows, which is cheap
-    because survivors ≈ distinct keys.
+    read-side LWW resolution (:meth:`LakeTable._resolve_lww`) folds them.
 
     The membership test is on ``(key, lsn)`` composites (not lsn alone):
     testing the bare LSN would let an event of a DIFFERENT key sharing a
@@ -131,15 +101,14 @@ def lww_prefilter(
 
     Events with NULL lsn never match and are filtered out here — by
     contract (documented on :func:`merge_cdc_batch`) the CDC envelope requires
-    a total, non-NULL LSN order; NULL-lsn rows are undefined input that the
-    unfiltered path would mangle anyway (``max_by`` over a NULL ordering key).
+    a total, non-NULL LSN order; NULL-lsn rows are undefined input.
 
     The winner set's only job is to pass each key's own max-LSN event, and a
     key's own entry is in the set by construction — so a compressed
     representation that can only ADD spurious passes is sound: spurious
-    survivors are folded by the downstream :func:`lww_dedup` / read-side LWW
-    exactly like LSN ties. NULL keys hash via the same coalesce-to-sentinel
-    rule as bucketing, so NULL-keyed legacy rows are filtered consistently.
+    survivors are folded by the read-side LWW exactly like LSN ties. NULL
+    keys hash via the same coalesce-to-sentinel rule as bucketing, so
+    NULL-keyed legacy rows are filtered consistently.
 
     The winner set is compressed to ONE 64-bit token per key —
     ``xxhash64(xxhash64(keys), lsn)`` — and the broadcast semi-join keys on
@@ -174,7 +143,7 @@ def lww_prefilter(
     # the other key's latest event would be silently DROPPED (one-sided error
     # in the wrong direction: a loss, not a spurious pass). Hashing after the
     # exact group keeps the soundness claim above true: a collision can only
-    # let extra rows through, which lww_dedup folds.
+    # let extra rows through, which the read-side LWW folds.
     winners = (events.groupBy(*key_cols)
                .agg(tpl["agg"])
                .select(tpl["wtok"]))
@@ -370,17 +339,13 @@ def merge_backfill(
     cannot contain a matching row and rides through untouched. Pruning is
     bucket-granular (not per-file) for the same MOR-delta-resolution reason
     as :meth:`LakeTable.delete_where`."""
-    from .table import MIXED_BUCKET
     keys = join_keys or table.key_cols
     snap = table.snapshot()
     if keys == table.key_cols:
         kb = (source.select(table.bucket_expr(keys).alias("b"))
               .distinct().collect())
-        buckets: list[int] | None = sorted(int(r.b) for r in kb)
+        buckets = table.expand_bucket_closure(snap, (int(r.b) for r in kb))
         victims = snap.files_for_buckets(buckets)
-        if any(e.bucket == MIXED_BUCKET for e in victims):
-            buckets = table.expand_bucket_closure(snap, buckets)
-            victims = snap.files_for_buckets(buckets)
     else:
         buckets, victims = None, list(snap.files.values())
         # FK-range stats pruning: one tiny agg over the (already small)
@@ -422,7 +387,7 @@ def merge_cdc_batch(
     extra_props: dict[str, Any] | None = None,
     mode: str = "cow",
     auto_compact_deltas: int = 16,
-    prefilter: bool | None = None,
+    prefilter: bool = False,
     l0_groups: int | str | None = None,
     compact_async: bool = False,
     async_finalize: bool = False,
@@ -433,54 +398,54 @@ def merge_cdc_batch(
     op semantics: I/U upsert (U on an absent key inserts — same as the
     reference MERGE), D deletes. LWW by lsn. **Contract: lsn is non-NULL and
     totally ordered per key** — NULL-lsn rows are undefined input (the
-    prefilter drops them; without it ``max_by`` over a NULL ordering key
-    would corrupt the winner row).
+    prefilter drops them; read-side resolution orders them last).
 
-    ``prefilter`` defaults to ON for cow (losing events never reach the
-    payload shuffle) and OFF for raw — raw mode's contract is "L0 preserves
-    the full event history for audit/replay", which a prefilter would
-    silently break; pass ``prefilter=True`` explicitly to trade that
-    history for ~r× less L0 write volume.
+    There is one write path: the batch is appended exactly as scanned (NO
+    shuffle, NO dedup; bucket column computed map-side) as LWW-resolvable
+    delta files, with the fence and lineage in the same commit. Reads
+    resolve max-LSN per key (in-batch duplicates too) and drop tombstones.
+    ``mode`` picks when the touched buckets are folded back into base files
+    (both modes yield identical read results; any other ``mode`` raises
+    ``ValueError``):
+
+    * ``mode="raw"`` — LSM-style: fold lazily. O(batch) write cost
+      regardless of table size — the high-throughput CDC-ingest path (the
+      Hudi/Paimon-style tradeoff). ``l0_groups=G`` clusters the L0 files
+      into G contiguous bucket ranges per task (task-local sort, still no
+      shuffle; G = table.num_buckets gives fully bucket-PURE L0), restoring
+      per-bucket compaction/read locality at the cost of more, smaller files
+      (tasks x G per trigger). ``l0_groups="auto"`` sizes G per batch from
+      the source bytes and a 16 MB L0 file-size floor (see
+      :func:`_l0_groups_for`). Compaction triggers when any bucket's delta
+      read amplification reaches ``auto_compact_deltas`` and folds only the
+      closure of the hot buckets' file spans (ungrouped L0 spans
+      everything, degrading to the full L0 fold).
+    * ``mode="cow"`` — fold eagerly: the append is always bucket-pure
+      (``l0_groups`` is ignored), then :meth:`LakeTable.compact_deltas`
+      rewrites exactly the buckets it touched (widened only by mixed raw L0
+      already sharing files with them), synchronously. Write cost
+      O(batch + touched data); reads of those buckets open base files only.
+      ``target_rows_read`` counts the fold's victim rows and ``m.version``
+      is the fold's commit. If the fold fails the error propagates, but the
+      append and its fence have landed: reads are already correct and a
+      rerun of ``batch_id`` is fence-skipped.
 
     Default-mode note: this function defaults to ``mode="cow"`` while
     :class:`~etl_api_bigquery_spark.streaming.runner.CdcStreamRunner`
     defaults to ``mode="raw"`` — deliberately. A direct ``merge_cdc_batch``
     call is the library/batch API (one-shot backfills, tests, oracle
-    queries), where the read-optimized copy-on-write result is the least
-    surprising default; the runner is the sustained-ingest pipeline, where
-    the zero-shuffle LSM append is the right production default (raw wins
-    ~25-30% at 24M-event batches and, since round 5's clean bench, also at
-    1M-event micro-batches — see BENCH/BASELINE.md). Pass ``mode``
-    explicitly when benchmarking either path.
+    queries), where a folded, read-optimized table is the least surprising
+    result; the runner is the sustained-ingest pipeline, where deferring
+    the fold to read amplification keeps each trigger O(batch). Pass
+    ``mode`` explicitly when benchmarking either.
 
-    Write strategies (both yield identical read results; any other ``mode``
-    raises ``ValueError``):
-
-    * ``mode="cow"`` — copy-on-write: rewrite the touched buckets' files with
-      survivors ∪ upserts. Best read performance; write cost O(touched data).
-    * ``mode="raw"`` — LSM-style raw append: NO shuffle, NO dedup — the batch
-      is written exactly as scanned (bucket column computed map-side) as
-      LWW-resolvable delta files; reads resolve max-LSN per key (in-batch
-      duplicates too) and drop tombstones. O(batch) write cost regardless of
-      table size — the high-throughput CDC-ingest path (the Hudi/Paimon-style
-      tradeoff). ``l0_groups=G`` clusters the L0 files into G contiguous
-      bucket ranges per task (task-local sort, still no shuffle; G =
-      table.num_buckets gives fully bucket-PURE L0), restoring per-bucket
-      compaction/read locality at the cost of more, smaller files (tasks x G
-      per trigger — the knob a 1000-executor deployment tunes against its
-      file-count budget). ``l0_groups="auto"`` sizes G per batch from the
-      source bytes and a 16 MB L0 file-size floor (see
-      :func:`_l0_groups_for`) — full purity at production per-task volumes,
-      graceful coarsening at bench scale instead of KB-size files.
-      Compaction triggers when any bucket's delta read amplification reaches
-      ``auto_compact_deltas`` and folds only the closure of the hot buckets'
-      file spans (ungrouped L0 spans everything, degrading to the full L0
-      fold).
+    ``prefilter=True`` drops each key's losing events before the write
+    (:func:`lww_prefilter`): ~r× less L0 volume, traded against the full
+    event history L0 otherwise keeps for audit/replay.
 
     ``compact_async=True`` (raw only): auto-compaction runs on a
     background driver thread overlapping the next trigger's scan instead of
-    extending this batch's critical path — the per-trigger serial tail no
-    longer idles the cluster while a fold is due. See
+    extending this batch's critical path. See
     :meth:`LakeTable.compact_deltas_async` for the correctness argument.
 
     ``async_finalize=True`` (raw only): the batch's Spark write job runs
@@ -502,8 +467,6 @@ def merge_cdc_batch(
     if async_finalize and mode != "raw":
         raise ValueError(
             "async_finalize requires mode='raw' (the LSM append path)")
-    if prefilter is None:
-        prefilter = mode != "raw"
     m = MergeMetrics(batch_id=batch_id)
 
     # ---- exactly-once fence: skip batches already committed (idempotent
@@ -519,78 +482,97 @@ def merge_cdc_batch(
     if allow_schema_evolution:
         m.schema_evolved = evolve_for_batch(table, events)
 
-    snap = table.snapshot()
-    key_cols = table.key_cols
+    from pyspark.sql import Observation
+    from .table import session_expr_cache
+    props: dict[str, Any] = dict(extra_props or {})
+    if txn_app is not None:
+        props["txn_app"] = txn_app
+        props["txn_batch"] = batch_id
+    if mode == "cow":
+        # bucket-pure L0 keeps the fold's closure to the touched buckets; no
+        # background fold may race this one over the same victims, and snap0
+        # must be the snapshot the append lands on (lineage counts its files)
+        l0_groups = table.num_buckets
+        table.join_pending_commit()
+        table.join_maintenance()
+    snap0 = table.snapshot()
+    if l0_groups == "auto":
+        l0_groups = _adaptive_l0_groups(table, events)
+        props["l0_groups"] = l0_groups
+    src = (lww_prefilter(events, table.key_cols, lsn_col) if prefilter
+           else events)
+    raw = src.withColumn(BUCKET_COL, table.bucket_expr())
+    delta = raw.select(*_delta_select_exprs(
+        table, snap0, set(events.columns) | {BUCKET_COL}, lsn_col, op_col))
+    # counts ride on the write job via Observation — no extra stats pass
+    cache = session_expr_cache(events.sparkSession)
+    obs_aggs = cache.get(("raw_obs",))
+    if obs_aggs is None:
+        obs_aggs = [
+            F.count(F.lit(1)).alias("keys"),
+            F.sum(F.when(F.col(OP_COL) == OP_DELETE, 1).otherwise(0)
+                  ).alias("deletes")]
+        cache[("raw_obs",)] = obs_aggs
+    obs = Observation()
+    delta = delta.observe(obs, *obs_aggs)
+    touched: list[int] = []
 
-    # ---- raw mode: append with NO full-row shuffle; no per-batch stats jobs.
-    # Per-bucket lineage comes free from the harvested file entries.
-    # Prefilter is OFF by default here (L0 keeps the full event history);
-    # with an explicit ``prefilter=True`` the only shuffle in the whole batch
-    # is the NARROW (keys, lsn) aggregation — losing LWW events are dropped
-    # by a broadcast semi-join BEFORE any payload bytes move, so L0 stays
-    # ~keys-sized; read-side max-LSN resolution absorbs any residual
-    # same-max-LSN ties exactly as it absorbs cross-file duplicates.
-    if mode == "raw":
-        from pyspark.sql import Observation
-        from .table import session_expr_cache
-        props: dict[str, Any] = dict(extra_props or {})
-        if txn_app is not None:
-            props["txn_app"] = txn_app
-            props["txn_batch"] = batch_id
-        snap0 = table.snapshot()
-        if l0_groups == "auto":
-            l0_groups = _adaptive_l0_groups(table, events)
-            props["l0_groups"] = l0_groups
-        src = lww_prefilter(events, key_cols, lsn_col) if prefilter else events
-        raw = src.withColumn(BUCKET_COL, table.bucket_expr())
-        delta = raw.select(*_delta_select_exprs(
-            table, snap0, set(events.columns) | {BUCKET_COL},
-            lsn_col, op_col))
-        # counts ride on the write job via Observation — no extra stats pass
-        cache = session_expr_cache(events.sparkSession)
-        obs_aggs = cache.get(("raw_obs",))
-        if obs_aggs is None:
-            obs_aggs = [
-                F.count(F.lit(1)).alias("keys"),
-                F.sum(F.when(F.col(OP_COL) == OP_DELETE, 1).otherwise(0)
-                      ).alias("deletes")]
-            cache[("raw_obs",)] = obs_aggs
-        obs = Observation()
-        delta = delta.observe(obs, *obs_aggs)
+    def lineage_props(adds):
+        # per-bucket lineage comes free from the harvested file entries
+        got = obs.get
+        m.keys = int(got.get("keys") or 0)     # events appended
+        m.deletes = int(got.get("deletes") or 0)
+        m.upserts = m.keys - m.deletes
+        touched[:] = sorted(table.buckets_of_entries(adds))
+        m.buckets_touched = len(touched)
+        if adds and all(e.bucket != MIXED_BUCKET for e in adds):
+            # bucket-pure write: max events per bucket / mean events per bucket
+            per = Counter()
+            for e in adds:
+                per[e.bucket] += e.rows
+            m.skew_factor = round(
+                max(per.values()) * len(per) / sum(per.values()), 3)
+        if mode == "cow" and touched:
+            # the fold's victims: the touched buckets' live files (closed
+            # under mixed-file spans) plus this append's own files
+            closure = table.expand_bucket_closure(snap0, touched)
+            m.target_rows_read = (
+                sum(e.rows for e in snap0.files_for_buckets(closure))
+                + sum(e.rows for e in adds))
+        elapsed = max(time.monotonic() - t0, 1e-9)
+        return {"lineage": {
+            "batch_id": batch_id, "keys": m.keys, "deletes": m.deletes,
+            "upserts": m.upserts, "buckets_touched": m.buckets_touched,
+            "skew_factor": m.skew_factor, "mode": mode,
+            "target_rows_read": m.target_rows_read,
+            "events_per_sec": round(m.keys / elapsed, 1),
+        }}
 
-        def lineage_props(adds):
-            got = obs.get
-            m.keys = int(got.get("keys") or 0)     # events appended
-            m.deletes = int(got.get("deletes") or 0)
-            m.upserts = m.keys - m.deletes
-            m.buckets_touched = len(table.buckets_of_entries(adds))
-            elapsed = max(time.monotonic() - t0, 1e-9)
-            return {"lineage": {
-                "batch_id": batch_id, "keys": m.keys, "deletes": m.deletes,
-                "upserts": m.upserts, "buckets_touched": m.buckets_touched,
-                "skew_factor": 0.0, "mode": mode, "target_rows_read": 0,
-                "events_per_sec": round(m.keys / elapsed, 1),
-            }}
+    _t_plan = time.monotonic() - t0
 
-        _t_plan = time.monotonic() - t0
-
-        def _post(version: int) -> None:
-            # everything after the data-file commit: l0 feedback, the
-            # auto-compaction trigger, and the phase telemetry. Runs inline
-            # (sync) or on the commit-finalizer thread (async_finalize).
-            _t_post0 = time.monotonic()
-            _write_phases = dict(table.last_write_phases)
-            # trailing write stats feeding the next batch's l0_groups="auto":
-            # out/in byte ratio (batch path) + (bytes, files, G) feedback
-            # (streaming path, where the batch DF exposes no input files)
-            in_b = getattr(table, "_last_l0_in_bytes", 0)
-            if in_b and _write_phases.get("out_bytes"):
-                table.l0_out_ratio = _write_phases["out_bytes"] / in_b
-            if _write_phases.get("out_bytes"):
-                table._last_l0_write = (_write_phases["out_bytes"],
-                                        _write_phases.get("n_files", 1),
-                                        l0_groups if isinstance(l0_groups, int)
-                                        else 1)
+    def _post(version: int) -> None:
+        # everything after the data-file commit: l0 feedback, the fold, and
+        # the phase telemetry. Runs inline (sync) or on the commit-finalizer
+        # thread (async_finalize).
+        _t_post0 = time.monotonic()
+        _write_phases = dict(table.last_write_phases)
+        # trailing write stats feeding the next batch's l0_groups="auto":
+        # out/in byte ratio (batch path) + (bytes, files, G) feedback
+        # (streaming path, where the batch DF exposes no input files)
+        in_b = getattr(table, "_last_l0_in_bytes", 0)
+        if in_b and _write_phases.get("out_bytes"):
+            table.l0_out_ratio = _write_phases["out_bytes"] / in_b
+        if _write_phases.get("out_bytes"):
+            table._last_l0_write = (_write_phases["out_bytes"],
+                                    _write_phases.get("n_files", 1),
+                                    l0_groups if isinstance(l0_groups, int)
+                                    else 1)
+        m.version = version
+        if mode == "cow":
+            if touched:
+                m.version = table.compact_deltas(
+                    buckets=touched, properties={"fold_for_batch": batch_id})
+        else:
             counts = table.bucket_read_amplification()
             hot = [b for b, c in counts.items() if c >= auto_compact_deltas]
             if hot:
@@ -599,152 +581,26 @@ def merge_cdc_batch(
                     table.compact_deltas_async(hot, properties=cprops)
                 else:
                     table.compact_deltas(buckets=hot, properties=cprops)
-            m.version = version
-            m.extra["phases"] = {
-                "plan_build_s": round(_t_plan, 4),
-                **_write_phases,
-                "compact_s": round(time.monotonic() - _t_post0, 4),
-            }
-
-        if async_finalize:
-            # write job runs inline (the parallel part); footer harvest +
-            # lineage + commit fsync + compaction trigger land on the
-            # finalizer thread, overlapping the caller's next batch. m's
-            # version/lineage/phases fields settle when the commit lands —
-            # callers read them after LakeTable.join_pending_commit().
-            m.extra["async_commit"] = True
-            table.append_deltas(delta, properties=props,
-                                bucket_groups=l0_groups,
-                                props_fn=lineage_props,
-                                async_finalize=True, post_commit=_post)
-        else:
-            _post(table.append_deltas(delta, properties=props,
-                                      bucket_groups=l0_groups,
-                                      props_fn=lineage_props))
-        m.duration_sec = time.monotonic() - t0
-        return m
-
-    # ---- 1. ONE payload shuffle for the dedup: repartition by bucket, then
-    # dedup grouped by (bucket, keys) — HashPartitioning(_bucket) satisfies
-    # ClusteredDistribution(_bucket, keys) because _bucket is a function of
-    # the keys, so Catalyst inserts no second exchange.
-    #
-    # After the prefilter the surviving batch is ~1 row per key (only LSN
-    # ties remain), so hot-key skew is already defused. The narrow
-    # (hash, lsn) prefilter aggregation itself is skew-immune: its partial
-    # (map-side) aggregation collapses a hot key's flood before the 16-byte
-    # rows ever shuffle.
-    src = lww_prefilter(events, key_cols, lsn_col) if prefilter else events
-    evb = src.withColumn(BUCKET_COL, table.bucket_expr())
-    evb = evb.repartition(table.num_buckets, F.col(BUCKET_COL))
-    winners = lww_dedup(evb, [BUCKET_COL] + key_cols, lsn_col)
-    # winners' columns == events' + _bucket (lww_dedup is column-preserving);
-    # derive them instead of calling winners.columns, which would force an
-    # extra driver-side analysis of the whole dedup subtree per trigger
-    winner_cols = set(events.columns) | {BUCKET_COL}
-
-    # ---- copy-on-write: needs the touched-bucket list BEFORE reading the
-    # target (manifest pruning), so winners is cached and stats collected
-    # up front.
-    winners = winners.cache()
-    try:
-        # one pass for counts + touched buckets + skew factor (small result)
-        bstats = (
-            winners.groupBy(BUCKET_COL)
-            .agg(F.count("*").alias("k"),
-                 F.sum(F.when(F.col(op_col) == OP_DELETE, 1).otherwise(0)).alias("d"))
-            .collect()
-        )
-        if not bstats:
-            m.duration_sec = time.monotonic() - t0
-            return m
-        buckets = [int(r[BUCKET_COL]) for r in bstats]
-        m.keys = sum(int(r["k"]) for r in bstats)
-        m.deletes = sum(int(r["d"]) for r in bstats)
-        m.upserts = m.keys - m.deletes
-        m.buckets_touched = len(buckets)
-        mean_k = m.keys / len(buckets)
-        m.skew_factor = round(max(int(r["k"]) for r in bstats) / mean_k, 3) if mean_k else 0.0
-
-        props = dict(extra_props or {})
-        props["lineage"] = {
-            "batch_id": batch_id, "keys": m.keys, "deletes": m.deletes,
-            "upserts": m.upserts, "buckets_touched": m.buckets_touched,
-            "skew_factor": m.skew_factor, "mode": mode,
+        m.extra["phases"] = {
+            "plan_build_s": round(_t_plan, 4),
+            **_write_phases,
+            "compact_s": round(time.monotonic() - _t_post0, 4),
         }
-        if txn_app is not None:
-            props["txn_app"] = txn_app
-            props["txn_batch"] = batch_id
 
-        # bucket-pruned target read (manifest skipping)
-        target_files = snap.files_for_buckets(buckets)
-        from .table import MIXED_BUCKET
-        if any(e.bucket == MIXED_BUCKET for e in target_files):
-            # raw-append deltas span buckets: a partial rewrite would leave
-            # their foreign-bucket rows duplicated -> widen to the closure
-            # of the mixed files' bucket spans (grouped L0 stays local;
-            # only full-span ungrouped L0 degrades to a full rewrite)
-            buckets = table.expand_bucket_closure(snap, buckets)
-            target_files = snap.files_for_buckets(buckets)
-        m.target_rows_read = sum(e.rows for e in target_files)
-        props["lineage"]["target_rows_read"] = m.target_rows_read
-        target = table.read(buckets=buckets, with_bucket=True)
-
-        # LSN-aware apply: a batch event only wins against table rows it
-        # actually beats. Without this, an OLDER event redelivered in a
-        # LATER micro-batch would clobber newer data (found by the
-        # hypothesis property suite; raw is immune because it resolves
-        # global max-LSN at read). cur_lsn per batch key is small
-        # (≤ batch keys), so every join here broadcasts — the target is
-        # never shuffled for the probe.
-        batch_keys = winners.select(*key_cols).distinct()
-        cur = (target.join(F.broadcast(batch_keys), on=key_cols,
-                           how="left_semi")
-               .groupBy(*key_cols)
-               .agg(F.max(LSN_COL).alias("_cur_lsn")))
-        effective = (
-            winners.join(F.broadcast(cur), on=key_cols, how="left")
-            .filter(F.col("_cur_lsn").isNull()
-                    | (F.col(lsn_col) > F.col("_cur_lsn")))
-            .drop("_cur_lsn")
-        ).cache()
-        survivors = target.join(
-            F.broadcast(effective.select(*key_cols)), on=key_cols,
-            how="left_anti")
-        fields = (list(snap.schema.fields)
-                  + [T.StructField(BUCKET_COL, T.IntegerType()),
-                     T.StructField(LSN_COL, T.LongType()),
-                     T.StructField(OP_COL, T.StringType())])
-        data_cols = [f.name for f in fields]
-        payload = lambda f: (  # noqa: E731
-            F.col(f.name).cast(f.dataType).alias(f.name)
-            if f.name in winner_cols
-            else F.lit(None).cast(f.dataType).alias(f.name))
-        # effective D events are written as TOMBSTONE rows (kept in base,
-        # filtered by public reads) so their LSN keeps guarding the key
-        applied = (
-            effective
-            .withColumn(LSN_COL, F.col(lsn_col).cast("long"))
-            .withColumn(OP_COL, F.col(op_col))
-            .select(*[payload(f)
-                      if f.name not in (BUCKET_COL, LSN_COL, OP_COL)
-                      else F.col(f.name) for f in fields])
-        )
-        merged = survivors.select(*data_cols).unionByName(applied)
-
-        def add_rate(adds):
-            elapsed = max(time.monotonic() - t0, 1e-9)
-            lin = dict(props["lineage"])
-            lin["events_per_sec"] = round(m.keys / elapsed, 1)
-            return {"lineage": lin}
-
-        m.version = table.commit_rewrite(
-            merged, target_files, "merge", snap.schema, snap.schema_id, props,
-            props_fn=add_rate)
-        effective.unpersist()
-    finally:
-        winners.unpersist()
-
+    if async_finalize:
+        # write job runs inline (the parallel part); footer harvest +
+        # lineage + commit fsync + compaction trigger land on the
+        # finalizer thread, overlapping the caller's next batch. m's
+        # version/lineage/phases fields settle when the commit lands —
+        # callers read them after LakeTable.join_pending_commit().
+        m.extra["async_commit"] = True
+        table.append_deltas(delta, properties=props,
+                            bucket_groups=l0_groups,
+                            props_fn=lineage_props,
+                            async_finalize=True, post_commit=_post)
+    else:
+        _post(table.append_deltas(delta, properties=props,
+                                  bucket_groups=l0_groups,
+                                  props_fn=lineage_props))
     m.duration_sec = time.monotonic() - t0
-    # lineage goes into the commit log too (cheap, driver-side JSON)
     return m

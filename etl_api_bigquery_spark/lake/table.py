@@ -535,8 +535,8 @@ class LakeTable:
         Every selected file, base or delta, is read in one scan per
         schema_id. If any is a delta (merge-on-read or raw L0 change file),
         the rows are collapsed per key to the max-LSN row by
-        :meth:`_resolve_lww` — the same LWW rule the COW merge applies at
-        write time — and a caller's key predicates still reach the parquet
+        :meth:`_resolve_lww` — the same LWW rule a fold bakes into base
+        files — and a caller's key predicates still reach the parquet
         scan through it. Compaction (:meth:`compact_deltas`) bounds the
         number of deltas so read amplification stays O(1) per bucket."""
         self.join_pending_commit()        # read-your-writes under async commit
@@ -563,7 +563,8 @@ class LakeTable:
         """Collapse rows to the max-LSN row per key. Winning D rows are KEPT
         as tombstones (public reads filter them; they guard against
         resurrection by out-of-order older events). The window partitions by
-        the plain key columns, grouping NULL keys as :func:`lww_dedup` does,
+        the plain key columns, grouping NULL keys as the oracle's
+        :func:`~..cdc.oracle.lww_dedup` does,
         so Spark can push a caller's key filter below it to the scan."""
         from pyspark.sql import Window
 
@@ -829,15 +830,11 @@ class LakeTable:
         schema: T.StructType,
         schema_id: int,
         properties: dict[str, Any] | None = None,
-        props_fn: Any = None,
         record_phases: bool = True,
         retry_conflicts: bool = False,
     ) -> int:
         """Low-level: atomically swap ``remove_entries`` for the files of
-        ``new_data`` (used by MERGE and compaction). ``props_fn(adds)`` (if
-        given) runs after the write job but before the commit doc, so
-        write-inclusive lineage (e.g. events/sec) lands in the same atomic
-        commit.
+        ``new_data`` (used by compaction, backfill and deletes).
 
         ``retry_conflicts=True``: a lost optimistic-concurrency race (another
         writer took our version number) is retried at the next version AFTER
@@ -851,8 +848,6 @@ class LakeTable:
                                       schema, schema_id,
                                       record_phases=record_phases)
         props = dict(properties or {})
-        if props_fn is not None:
-            props.update(props_fn(adds))
         removes = [e.path for e in remove_entries]
         while True:
             try:
@@ -1013,11 +1008,11 @@ class LakeTable:
         a PINNED snapshot version and only removes that snapshot's files;
         concurrent delta appends land at later versions and win LWW
         resolution over the compacted base; commit races are retried with
-        victim re-validation. NOT safe concurrent with COW rewrites (a COW
-        merge derived from a pre-compaction snapshot would duplicate rows) —
-        callers gate this on the delta-append mode (raw), which is also why
-        :class:`~..streaming.CdcStreamRunner` joins maintenance before
-        returning. Returns the Future, or None if one was already running."""
+        victim re-validation. Two folds over the same victims do conflict
+        (the loser raises), so a synchronous fold (``merge_cdc_batch``'s
+        ``mode="cow"``) joins maintenance first, and
+        :class:`~..streaming.CdcStreamRunner` joins it before returning.
+        Returns the Future, or None if one was already running."""
         if self._maint_future is not None and not self._maint_future.done():
             return None
         from concurrent.futures import ThreadPoolExecutor
@@ -1114,9 +1109,11 @@ class LakeTable:
                        record_phases: bool = True) -> int | None:
         """Fold delta files into base files for buckets whose delta count
         reached ``max_delta_files`` (or an explicit bucket list). Content
-        preserving: resolved LWW state is rewritten as base; tombstones
-        physically disappear. The MOR analogue of Iceberg rewrite_data_files /
-        Hudi compaction.
+        preserving: resolved LWW state is rewritten as base. Winning DELETE
+        rows stay in it as tombstones (``read(with_bucket=True)`` shows them)
+        so they keep blocking the resurrection of a key by an older
+        redelivered event; :meth:`expire_tombstones` removes them. The MOR
+        analogue of Iceberg rewrite_data_files / Hudi compaction.
 
         Raw-append (mixed-bucket) delta files span buckets, so removing one
         requires compacting every bucket it covers — the target set expands
@@ -1139,10 +1136,8 @@ class LakeTable:
             targets = list(buckets)
         if not targets:
             return None
+        targets = self.expand_bucket_closure(snap, targets)
         victims = snap.files_for_buckets(targets)
-        if any(e.bucket == MIXED_BUCKET for e in victims):
-            targets = self.expand_bucket_closure(snap, targets)
-            victims = snap.files_for_buckets(targets)
         resolved = self.read(version=snap.version, buckets=targets,
                              with_bucket=True)
         props = dict(properties or {})

@@ -57,9 +57,11 @@ class CdcStreamRunner:
     _rate_t0: float | None = field(default=None, repr=False)
     _rate_events: int = field(default=0, repr=False)
     # write strategy: "raw" (default — LSM append, zero full-row shuffle,
-    # bucket-clustered L0, the high-throughput ingest mode) | "cow"
+    # bucket-clustered L0, the high-throughput ingest mode) | "cow" (the
+    # same append, bucket-pure, plus a synchronous fold of the touched
+    # buckets)
     mode: str = "raw"
-    prefilter: bool | None = None          # None = merge_cdc_batch default
+    prefilter: bool = False                # see merge_cdc_batch
     auto_compact_deltas: int = 16
     # raw L0 clustering: None = adaptive ("auto" — per-batch group count from
     # source bytes and a 16 MB L0 file-size floor, bucket-pure when per-task

@@ -33,10 +33,10 @@ def main() -> None:
     ap.add_argument("--checkpoint", required=True)
     ap.add_argument("--mode", choices=["cow", "raw"], default="raw")
     ap.add_argument("--num-buckets", type=int, default=64)
-    ap.add_argument("--prefilter", choices=["default", "on", "off"],
-                    default="default",
-                    help="LWW winner prefilter (default: on for cow, off "
-                         "for raw)")
+    ap.add_argument("--prefilter", choices=["on", "off"], default="off",
+                    help="LWW winner prefilter: drop each key's losing "
+                         "events before the write (default off, so L0 keeps "
+                         "the full event history)")
     ap.add_argument("--stateful-filter", action="store_true",
                     help="stateful LWW staleness pre-filter "
                          "(applyInPandasWithState) before the MERGE sink")
@@ -83,7 +83,7 @@ def main() -> None:
     runner = CdcStreamRunner(
         spark, table, args.feed_dir, args.checkpoint, txn_app=args.txn_app,
         max_files_per_trigger=args.max_files_per_trigger, mode=args.mode,
-        prefilter={"on": True, "off": False, "default": None}[args.prefilter],
+        prefilter=args.prefilter == "on",
         stateful_staleness_filter=args.stateful_filter,
         async_commit=args.async_commit)
     t0 = time.monotonic()

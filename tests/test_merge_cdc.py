@@ -2,9 +2,9 @@
 redelivery, NULL keys, fence idempotence, schema evolution mid-stream,
 winner prefilter, full replay sha256 match.
 
-The semantic tests are parameterized over both write strategies — COW
-(rewrite touched buckets) and raw (append delta files, resolve at read) —
-which must be read-indistinguishable."""
+The semantic tests are parameterized over both modes — cow (append, then a
+synchronous fold of the touched buckets) and raw (append delta files,
+resolve at read) — which must be read-indistinguishable."""
 
 import os
 
@@ -171,6 +171,28 @@ def test_tombstone_blocks_resurrection(spark, tmp_table_dir, mode):
                     2, "x", mode=mode)
     rows = t.read().collect()
     assert len(rows) == 1 and rows[0].content == "fresh"
+
+
+def test_cow_fold_failure_surfaces_after_append_landed(spark, tmp_table_dir,
+                                                       monkeypatch):
+    """mode="cow" is an append plus a fold of the touched buckets. A fold
+    that fails after the append committed must raise (no silent skip),
+    reads must already match the oracle (the append and its fence landed),
+    and a rerun of the same batch_id must be fence-skipped."""
+    t = make_table(spark, tmp_table_dir)
+    feed = change_feed(spark, n_events=2000, n_keys=100, n_epochs=1).cache()
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("fold exploded")
+
+    monkeypatch.setattr(t, "compact_deltas", boom)
+    with pytest.raises(RuntimeError, match="fold exploded"):
+        merge_cdc_batch(t, feed, 0, "x", mode="cow")
+    monkeypatch.undo()
+    assert t.last_txn("x") == 0
+    assert_replay_match(t.read(), expected_final_state(feed))
+    assert merge_cdc_batch(t, feed, 0, "x", mode="cow").skipped_fence
+    feed.unpersist()
 
 
 def test_expire_tombstones(spark, tmp_table_dir):

@@ -125,16 +125,16 @@ def test_lsm_key_lookup_is_one_pushed_scan(spark, tmp_table_dir):
                           for ln in pushed)
 
 
-def test_merge_dedup_pipeline_shuffle_budget(spark, tmp_table_dir):
-    """The prefiltered dedup pipeline pays exactly: one NARROW (keys,lsn)
-    exchange with map-side partial_max, one broadcast of the winner-LSN set,
-    and one full-row bucket exchange — nothing more. Regression guard for the
-    shuffle budget documented in README 'Scale design'."""
+def test_prefilter_write_shuffle_budget(spark, tmp_table_dir):
+    """A prefiltered append (``merge_cdc_batch(prefilter=True)``) pays
+    exactly one NARROW (keys, lsn) exchange with map-side partial_max and one
+    broadcast of the winner tokens; no full-row exchange. Regression guard
+    for the shuffle budget documented in README 'Scale design'."""
     from pyspark.sql import types as T
 
     from etl_api_bigquery_spark.cdc import change_feed
     from etl_api_bigquery_spark.lake import LakeTable
-    from etl_api_bigquery_spark.lake.merge import lww_dedup, lww_prefilter
+    from etl_api_bigquery_spark.lake.merge import lww_prefilter
     from etl_api_bigquery_spark.lake.table import BUCKET_COL
     from etl_api_bigquery_spark.plans.inspect import (count_exchanges,
                                                       executed_plan_text)
@@ -144,14 +144,16 @@ def test_merge_dedup_pipeline_shuffle_budget(spark, tmp_table_dir):
     t = LakeTable.create(spark, tmp_table_dir + "/t", schema,
                          key_cols=["repo", "path"], num_buckets=16)
     ev = change_feed(spark, n_events=20_000, n_keys=2_000, n_epochs=2)
-    src = lww_prefilter(ev, ["repo", "path"], "lsn")
-    evb = (src.withColumn(BUCKET_COL, t.bucket_expr())
-           .repartition(t.num_buckets, F.col(BUCKET_COL)))
-    winners = lww_dedup(evb, [BUCKET_COL, "repo", "path"], "lsn")
-    plan = executed_plan_text(winners)
-    assert count_exchanges(winners) == 2
+    delta = (lww_prefilter(ev, ["repo", "path"], "lsn")
+             .withColumn(BUCKET_COL, t.bucket_expr()))
+    plan = executed_plan_text(delta)
+    assert count_exchanges(delta) == 1
     assert plan.count("BroadcastExchange") == 1
-    assert "partial_max" in plan  # map-side combine on the narrow agg
+    # the one hash exchange is fed by the narrow partial aggregate
+    lines = plan.splitlines()
+    ex = next(i for i, ln in enumerate(lines)
+              if "Exchange hashpartitioning" in ln)
+    assert "partial_max" in lines[ex + 1]
 
 
 def test_near_dup_lsh_has_no_cartesian(spark):
