@@ -76,7 +76,7 @@ def main() -> None:
     # ---- CDC replay sizing: 40M events/sf-unit => 4M at sf0.1, in few
     # large micro-batches — the compute-dominated regime that represents
     # 10^10-event production, where per-trigger fixed costs amortize away.
-    # (BENCH_EVENTS / BENCH_EPOCHS override for scaling runs.)
+    # (BENCH_EVENTS / BENCH_EPOCHS resize the feed.)
     n_events = int(os.environ.get("BENCH_EVENTS", 0)) or max(
         50_000, int(40_000_000 * sf))
     n_keys = max(5_000, n_events // 10)
@@ -85,19 +85,17 @@ def main() -> None:
     shutil.rmtree(work, ignore_errors=True)
     table_dir, ckpt = (f"{work}/silver", f"{work}/ckpt")
 
-    # keep the per-batch scan parallel; overridable so scaling runs use
-    # byte-identical staging at both parallelism levels
+    # keep the per-batch scan parallel; overridable so runs at different
+    # parallelism levels can share byte-identical staging
     files_per_epoch = int(os.environ.get("BENCH_FILES_PER_EPOCH", 0)) \
         or max(4, CPUS // 2)
-    # bucket count = write/compact task granularity (one task per bucket).
-    # Scaling campaigns pin it identically at both levels so the work is
-    # byte-identical; finer buckets = more waves per stage = less straggler
-    # rounding when slots quadruple.
+    # bucket count = write/compact task granularity (one task per bucket);
+    # finer buckets = more waves per stage = less straggler rounding.
     num_buckets = int(os.environ.get("BENCH_NUM_BUCKETS", 0)) \
         or max(32, CPUS * 2)
     # the feed is deterministic in (n_events, n_keys, n_epochs, files) — stage
-    # it ONCE and share across runs/parallelism levels: literally "the same
-    # input" for the two-cluster-size rule, and no per-run staging wall-clock
+    # it ONCE and share across runs/parallelism levels: the same input for
+    # every run, and no per-run staging wall-clock
     feed_dir = f"/tmp/bench_feed_{n_events}_{n_keys}_{n_epochs}_{files_per_epoch}"
     marker = os.path.join(feed_dir, "_STAGED")
     if not os.path.exists(marker):
@@ -128,26 +126,17 @@ def main() -> None:
                             num_buckets=num_buckets)
     merge_cdc_batch(wtab, change_feed(spark, n_events=200_000, n_keys=20_000,
                                       n_epochs=1),
-                    batch_id=0, txn_app="warmup", mode="raw", prefilter=True)
+                    batch_id=0, txn_app="warmup", mode="raw")
 
-    # ---- ingest config. BENCH_MODE: "raw" (default — the engine's
-    # high-throughput zero-shuffle LSM path, the runner default) | "cow".
-    # BENCH_PREFILTER: "on"/"off"; unset defaults to ON for raw
-    # (keys-sized L0 — the benched throughput configuration; pass "off" to
-    # keep full event history in L0) and OFF for cow.
-    # BENCH_L0_GROUPS: raw L0 clustering (bucket ranges per task-file);
-    # default 8 — bounded file count with group-local compaction.
-    mode = os.environ.get("BENCH_MODE", "raw")
-    pf_env = os.environ.get("BENCH_PREFILTER", "")
-    prefilter = {"off": False, "on": True}.get(pf_env, mode == "raw")
-    l0_groups = int(os.environ.get("BENCH_L0_GROUPS", "8"))
-
+    # ---- ingest config: CdcStreamRunner's shipped defaults (raw append,
+    # no prefilter, l0_groups="auto", async commit and compaction); only the
+    # fold threshold and the trigger size follow the feed shape.
     # Best-of-N replay reps: the host is a shared VM with 1.4-3x
     # minute-to-minute throughput swings, so a single-shot wall time is a
     # noise sample, not a measurement. Each rep replays the SAME staged feed
     # into a fresh table+checkpoint and is sha256-verified before it may
-    # score; the reported numbers are the best rep's. Scaling campaigns
-    # (run_pairs.py) set reps=1 and interleave levels instead.
+    # score; the reported numbers are the best rep's. BENCH_REPLAY_REPS=1
+    # gives one sample per process for callers that interleave runs.
     replay_reps = int(os.environ.get("BENCH_REPLAY_REPS", "2"))
     best = None
     for rep in range(replay_reps):
@@ -158,15 +147,12 @@ def main() -> None:
         # compaction threshold (per-bucket read amplification) sized so at
         # least one compaction lands INSIDE the timed window — steady ingest
         # pays amortized compaction. Raw L0 grows ~files_per_epoch per bucket
-        # per trigger (one file per task x group); cow folds every trigger.
+        # per trigger (one file per scan task in each bucket group).
         compact_at = files_per_epoch * max(1, n_epochs - 1)
         runner = CdcStreamRunner(spark, table, feed_dir, rep_ckpt,
-                                 txn_app="bench", prefilter=prefilter,
-                                 mode=mode, l0_groups=l0_groups,
+                                 txn_app="bench",
                                  auto_compact_deltas=compact_at,
-                                 max_files_per_trigger=files_per_epoch,
-                                 async_commit=os.environ.get(
-                                     "BENCH_ASYNC_COMMIT", "1") != "0")
+                                 max_files_per_trigger=files_per_epoch)
         t0 = time.monotonic()
         runner.run_available_now(timeout_sec=3600)
         rep_sec = time.monotonic() - t0
@@ -234,7 +220,7 @@ def main() -> None:
                         "n_allpairs": n_vec * (n_vec - 1) // 2}
 
     # streaming-wrapper vs merge-core decomposition from the query's own
-    # per-trigger durationMs (driver-serial phases the scaling report audits)
+    # per-trigger durationMs (the driver-serial streaming phases)
     prog = runner.progress
     wrapper_ms: dict[str, float] = {}
     for p in prog:
@@ -263,11 +249,10 @@ def main() -> None:
         "n_events": n_events,
         "n_epochs": n_epochs,
         "cpus": CPUS,
-        "mode": mode,
-        "async_commit": os.environ.get("BENCH_ASYNC_COMMIT", "1") != "0"
-        and mode == "raw",
-        "prefilter": prefilter,
-        "l0_groups": l0_groups if mode == "raw" else None,
+        "mode": runner.mode,
+        "async_commit": runner.async_commit,
+        "prefilter": runner.prefilter,
+        "l0_groups": runner.l0_groups or "auto",
         "replay_rows_matched": match["total"],
         "n_compactions_in_window": sum(
             1 for h in table.history() if h["action"] == "compact_deltas"),

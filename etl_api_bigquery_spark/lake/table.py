@@ -763,18 +763,23 @@ class LakeTable:
         """Replace exactly the buckets present in df — the reference's
         partition-overwrite semantics (delete matching files then upload one
         fresh file, src/shared/gcs/loader.py:173-224 + 277-282) expressed as
-        one atomic commit instead of delete-then-write."""
+        one atomic commit instead of delete-then-write. Mixed files widen the
+        swap to the closure, whose untouched rows are written back."""
         self.join_pending_commit()
         snap = self.snapshot()
-        version = snap.version + 1
         dfb = self._with_bucket(df)
-        touched = [r[0] for r in dfb.select(BUCKET_COL).distinct().collect()]
-        adds = self._write_data_files(dfb, version, snap.schema, snap.schema_id)
-        removes = [e.path for e in snap.files_for_buckets(touched)]
-        props = dict(properties or {})
-        props["overwritten_buckets"] = sorted(touched)
-        return self._write_commit(version, "overwrite_buckets", snap.schema,
-                                  snap.schema_id, adds, removes, props)
+        touched = sorted(r[0] for r in
+                         dfb.select(BUCKET_COL).distinct().collect())
+        closure = self.expand_bucket_closure(snap, touched)
+        others = self.read(version=snap.version, buckets=closure,
+                           with_bucket=True)
+        new = (dfb.unionByName(others.filter(~F.col(BUCKET_COL).isin(touched)),
+                               allowMissingColumns=True)
+               .fillna({LSN_COL: 0, OP_COL: "U"}))
+        props = dict(properties or {}, overwritten_buckets=touched)
+        return self.commit_rewrite(new, snap.files_for_buckets(closure),
+                                   "overwrite_buckets", snap.schema,
+                                   snap.schema_id, props)
 
     def delete_where(self, condition: str,
                      properties: dict[str, Any] | None = None,
@@ -1163,21 +1168,17 @@ class LakeTable:
                 properties: dict[str, Any] | None = None) -> int | None:
         """Rewrite buckets fragmented across many files into one file each
         (reference analogue: single-file-per-partition compaction,
-        gcs/loader.py:173-224; Iceberg rewrite_data_files)."""
+        gcs/loader.py:173-224; Iceberg rewrite_data_files): the
+        :meth:`compact_deltas` of buckets whose read opens at least
+        ``min_files_per_bucket`` files, mixed files counting per bucket."""
         self.join_pending_commit()
-        snap = self.snapshot()
-        by_bucket: dict[int, list[FileEntry]] = {}
-        for e in snap.files.values():
-            by_bucket.setdefault(e.bucket, []).append(e)
-        frag = {b: es for b, es in by_bucket.items() if len(es) >= min_files_per_bucket}
-        if not frag:
-            return None
-        victims = [e for es in frag.values() for e in es]
-        df = self.read(buckets=list(frag.keys()), with_bucket=True)
-        props = dict(properties or {})
-        props["compacted_buckets"] = sorted(frag.keys())
-        return self.commit_rewrite(df, victims, "compact", snap.schema,
-                                   snap.schema_id, props)
+        counts: dict[int, int] = {}
+        for e in self.snapshot().files.values():
+            for b in self.buckets_of_entries([e]):
+                counts[b] = counts.get(b, 0) + 1
+        return self.compact_deltas(
+            buckets=[b for b, c in counts.items() if c >= min_files_per_bucket],
+            properties=properties)
 
     def vacuum(self, keep_versions: int = 2) -> int:
         """Physically delete data files not referenced by the newest

@@ -92,8 +92,7 @@ def _ship_package(spark: SparkSession) -> None:
     functions (the distributed footer harvest, table.py:_harvest_footer)
     pickle BY REFERENCE, so the worker must be able to import the package.
     ``addPyFile`` ships the zip to every current executor AND to executors
-    that join later — which elastic scale-up (scripts/bench_elastic_scaling)
-    does ~30x per campaign."""
+    that join later, as they do under dynamic allocation."""
     import zipfile
 
     if getattr(spark, "_pkg_shipped", False):

@@ -96,7 +96,7 @@ class CdcStreamRunner:
     # per-trigger durationMs breakdown from StreamingQueryProgress
     # (addBatch / getBatch / latestOffset / queryPlanning / walCommit /
     # commitOffsets / triggerExecution) — the measured cost of the streaming
-    # wrapper vs the merge core, used by the scaling-evidence reports
+    # wrapper vs the merge core, reported by bench.py
     progress: list[dict[str, Any]] = field(default_factory=list)
     fail_after_batches: int | None = None  # test hook: crash mid-stream
 

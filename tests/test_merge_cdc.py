@@ -231,7 +231,7 @@ def test_prefilter_drops_null_lsn(spark):
 
 
 def test_raw_prefilter_final_state_parity(spark, tmp_table_dir):
-    """raw with prefilter=True (the scaling-campaign config) and without it
+    """raw with prefilter=True and without it (the shipped default)
     resolve to the same table, which equals the batch oracle."""
     feed = change_feed(spark, n_events=30_000, n_keys=3_000, n_epochs=3,
                        seed=7).cache()

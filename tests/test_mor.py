@@ -405,3 +405,56 @@ def test_null_key_and_sentinel_string_key_stay_distinct(spark, tmp_table_dir):
     assert want == {(None, "p", "null-v2"), ("\x00null", "p", "sentinel")}
     assert t.read().count() == 2
     assert {tuple(r) for r in t.read().collect()} == want
+
+
+def _cow_then_mixed_l0(spark, tmp_table_dir, raw_epochs):
+    """An 8-bucket table holding one folded (cow) batch under
+    ``raw_epochs`` unclustered raw batches, whose L0 files each span many
+    buckets."""
+    from etl_api_bigquery_spark.lake.table import MIXED_BUCKET
+
+    t = make_table(spark, tmp_table_dir, buckets=8)
+    feed = change_feed(spark, n_events=4000, n_keys=200,
+                       n_epochs=1 + raw_epochs).cache()
+    merge_cdc_batch(t, feed.filter(F.col("epoch") == 0), 0, "mix",
+                    mode="cow")
+    for e in range(1, 1 + raw_epochs):
+        merge_cdc_batch(t, feed.filter(F.col("epoch") == e), e, "mix",
+                        mode="raw", l0_groups=1, auto_compact_deltas=10**6)
+    assert any(e.bucket == MIXED_BUCKET for e in t.snapshot().files.values())
+    return t, feed
+
+
+def test_compact_resolves_mixed_l0_against_base(spark, tmp_table_dir):
+    """compact() over mixed-bucket L0 folds each fragmented bucket's base
+    and deltas together: no duplicate keys, no resurrected deletes."""
+    t, feed = _cow_then_mixed_l0(spark, tmp_table_dir, raw_epochs=3)
+    expected = expected_final_state(feed)
+    assert_replay_match(t.read(), expected)
+    assert t.compact() is not None
+    assert not any(e.kind == "delta" for e in t.snapshot().files.values())
+    assert_replay_match(t.read(), expected)
+    feed.unpersist()
+
+
+def test_overwrite_buckets_keeps_untouched_buckets(spark, tmp_table_dir):
+    """Overwriting one bucket that shares mixed L0 files with others leaves
+    every other bucket's rows as they were."""
+    from etl_api_bigquery_spark.lake.table import BUCKET_COL
+
+    t, feed = _cow_then_mixed_l0(spark, tmp_table_dir, raw_epochs=1)
+
+    def rows_by_bucket():
+        out = {}
+        for r in t.read(with_bucket=True).filter("coalesce(_op, 'U') != 'D'") \
+                .select(BUCKET_COL, *SILVER.fieldNames()).collect():
+            out.setdefault(r[0], set()).add(tuple(r[1:]))
+        return out
+
+    before = rows_by_bucket()
+    patched = next(iter(before.pop(0)))[:-1] + ("patched",)
+    t.overwrite_buckets(spark.createDataFrame([patched], SILVER))
+    after = rows_by_bucket()
+    assert after.pop(0) == {patched}
+    assert after == before
+    feed.unpersist()
