@@ -174,9 +174,8 @@ def _l0_groups_for(in_bytes: int, n_tasks: int, out_ratio: float,
     return max(1, min(num_buckets, int(per_task_out // max(target_bytes, 1))))
 
 
-# default L0 file-size floor for l0_groups="auto" (env-tunable for tests)
-L0_TARGET_FILE_BYTES = int(
-    os.environ.get("LAKE_L0_TARGET_FILE_MB", "16")) << 20
+# L0 file-size floor for l0_groups="auto"
+L0_TARGET_FILE_BYTES = 16 << 20
 
 
 def _adaptive_l0_groups(table: LakeTable, events: DataFrame) -> int:
@@ -327,7 +326,10 @@ def merge_backfill(
 ) -> int:
     """Transactional backfill into a LakeTable: window-dedup ``source``,
     update ONLY NULL target values of ``set_cols`` (see
-    :func:`backfill_columns`), commit as one atomic rewrite.
+    :func:`backfill_columns`), commit as one bucket rewrite
+    (:meth:`LakeTable._rewrite_buckets`: a read pinned to one snapshot,
+    raising :class:`CommitConflictError` if another rewrite replaced its
+    files first). Background maintenance is joined before the snapshot.
 
     When ``join_keys`` equal the table's bucket keys (the default), only the
     buckets containing source keys are read and rewritten — the manifest
@@ -340,14 +342,14 @@ def merge_backfill(
     bucket-granular (not per-file) for the same MOR-delta-resolution reason
     as :meth:`LakeTable.delete_where`."""
     keys = join_keys or table.key_cols
+    table.join_pending_commit()
+    table.join_maintenance()
     snap = table.snapshot()
     if keys == table.key_cols:
         kb = (source.select(table.bucket_expr(keys).alias("b"))
               .distinct().collect())
-        buckets = table.expand_bucket_closure(snap, (int(r.b) for r in kb))
-        victims = snap.files_for_buckets(buckets)
+        buckets = {int(r.b) for r in kb}
     else:
-        buckets, victims = None, list(snap.files.values())
         # FK-range stats pruning: one tiny agg over the (already small)
         # backfill source gives [min, max] per FK column; files are kept
         # only if every FK column's footer range intersects it
@@ -361,19 +363,17 @@ def merge_backfill(
         preds = []
         for i, k in enumerate(keys):
             preds += [(k, ">=", bounds[2 * i]), (k, "<=", bounds[2 * i + 1])]
-        may = table.prune_files(victims, preds)
+        may = table.prune_files(list(snap.files.values()), preds)
         if not may:
             return snap.version          # no file can match: no-op
-        buckets = table.expand_bucket_closure(
-            snap, table.buckets_of_entries(may))
-        victims = snap.files_for_buckets(buckets)
-    target = table.read(buckets=buckets, with_bucket=True)
-    filled = backfill_columns(target, source, keys, set_cols, order_col)
-    props = dict(properties or {})
-    props["backfill"] = {"set_cols": set_cols,
-                         "buckets": buckets if buckets is not None else "all"}
-    return table.commit_rewrite(filled, victims, "backfill", snap.schema,
-                                snap.schema_id, props)
+        buckets = table.buckets_of_entries(may)
+    return table._rewrite_buckets(
+        snap, buckets,
+        lambda target: backfill_columns(target, source, keys, set_cols,
+                                        order_col),
+        "backfill",
+        lambda b, _: dict(properties or {},
+                          backfill={"set_cols": set_cols, "buckets": b}))
 
 
 def merge_cdc_batch(

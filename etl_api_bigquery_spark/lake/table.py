@@ -11,14 +11,21 @@ guarantees:
 
 * **Atomic commits / snapshot isolation** — every mutation is a JSON commit
   file in ``_log/`` created with O_EXCL (atomic on POSIX); readers replay the
-  log to a consistent file set. Concurrent writers race on the commit file and
-  the loser gets :class:`CommitConflictError` (optimistic concurrency, like
-  Iceberg).
+  log to a consistent file set.
+* **One commit rule** (:meth:`LakeTable._commit_files`) — a data commit is
+  planned on a snapshot and first tries the version after it. If another
+  writer took that version, the commit re-reads the log and retries at the
+  new head, with the head's schema, as long as every file it removes is still
+  live. So concurrent appends never conflict, while two rewrites of one file
+  do: the loser gets :class:`CommitConflictError` (optimistic concurrency,
+  like Iceberg).
 * **Bucket partition spec** — rows are assigned ``_bucket =
-  pmod(xxhash64(*key_cols), num_buckets)``; data files are bucket-pure (one
-  bucket per file), so keyed MERGE rewrites only the buckets a batch touches.
-  This replaces BigQuery ``PARTITION BY date CLUSTER BY ...`` and defuses
-  hot-key concentration at the file level (SURVEY.md §7.5 item 4).
+  pmod(xxhash64(*key_cols), num_buckets)``. Every rewrite (fold, delete,
+  backfill) replaces whole buckets, read at one pinned snapshot
+  (:meth:`LakeTable._rewrite_buckets`), so keyed MERGE rewrites only the
+  buckets a batch touches. This replaces BigQuery ``PARTITION BY date
+  CLUSTER BY ...`` and defuses hot-key concentration at the file level
+  (SURVEY.md §7.5 item 4).
 * **File-level column stats** — per-file min/max/null-count harvested from
   parquet footers (metadata-only, no data scan) for data skipping, the same
   mechanism Iceberg manifests / Delta checkpoints use.
@@ -33,11 +40,9 @@ guarantees:
   to exactly-once).
 
 Scale notes (designed for 1000-executor / 100 TB, tested on local[32]):
-data files are written and read by distributed Spark jobs; only the commit
-log (KB-sized JSON) is touched driver-side. Parquet footer harvesting runs
-in a driver thread pool for small commits and as a distributed Spark job on
-executors above ``DISTRIBUTED_HARVEST_THRESHOLD`` files, so commit metadata
-cost is never O(files) on one node.
+data files are written and read by distributed Spark jobs; outside them, a
+commit touches only the commit log (KB-sized JSON) and the parquet footers
+of its own new files, read in a thread pool.
 """
 
 from __future__ import annotations
@@ -49,7 +54,7 @@ import os
 import time
 import uuid
 from dataclasses import dataclass, field
-from typing import Any, Iterable
+from typing import Any, Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -342,7 +347,7 @@ class LakeTable:
     SNAP_CACHE_MAX = 8
     # a manifest checkpoint is written every K commits; cold opens replay
     # checkpoint + <= K tail docs instead of the whole log
-    CHECKPOINT_INTERVAL = int(os.environ.get("LAKE_CHECKPOINT_INTERVAL", "64"))
+    CHECKPOINT_INTERVAL = 64
 
     # ------------------------------------------------------ log checkpoints
 
@@ -584,8 +589,8 @@ class LakeTable:
         maintenance pass touches the few buckets with old deletes, not the
         table."""
         self.join_pending_commit()
+        self.join_maintenance()
         snap = self.snapshot()
-        entries = list(snap.files.values())
 
         def may_have_expirable(e: FileEntry) -> bool:
             st_op = e.stats.get(OP_COL)
@@ -596,21 +601,17 @@ class LakeTable:
                 return False                      # every row too new
             return True                           # stats missing: conservative
 
-        may = [e for e in entries if may_have_expirable(e)]
+        may = [e for e in snap.files.values() if may_have_expirable(e)]
         if not may:
             return snap.version                   # nothing can expire: no-op
-        buckets = self.expand_bucket_closure(
-            snap, self.buckets_of_entries(may))
-        victims = snap.files_for_buckets(buckets)
-        full = self.read(buckets=buckets, with_bucket=True)
-        keep = full.filter(~((F.coalesce(F.col(OP_COL), F.lit("U")) == "D")
-                             & (F.col(LSN_COL) < below_lsn)))
-        props = dict(properties or {})
-        props["tombstones_expired_below"] = below_lsn
-        props["expire_pruned_buckets"] = (
-            buckets if buckets is not None else "all")
-        return self.commit_rewrite(keep, victims, "expire_tombstones",
-                                   snap.schema, snap.schema_id, props)
+        expired = ((F.coalesce(F.col(OP_COL), F.lit("U")) == "D")
+                   & (F.col(LSN_COL) < below_lsn))
+        return self._rewrite_buckets(
+            snap, self.buckets_of_entries(may),
+            lambda rows: rows.filter(~expired), "expire_tombstones",
+            lambda b, _: dict(properties or {},
+                              tombstones_expired_below=below_lsn,
+                              expire_pruned_buckets=b))
 
     def is_empty(self) -> bool:
         self.join_pending_commit()
@@ -647,16 +648,8 @@ class LakeTable:
         """
         abs_dir, rel_dir, wjs = self._run_write_job(
             df, version, schema, kind, bucket_groups)
-        _th = time.monotonic()
-        entries = self._harvest_entries(abs_dir, rel_dir, schema_id, kind)
-        if record_phases:
-            self.last_write_phases = {
-                "write_job_s": wjs,
-                "harvest_s": round(time.monotonic() - _th, 4),
-                "n_files": len(entries),
-                "out_bytes": sum(e.bytes for e in entries),
-            }
-        return entries
+        return self._harvest_entries(abs_dir, rel_dir, schema_id, kind,
+                                     wjs if record_phases else None)
 
     def _run_write_job(
         self, df: DataFrame, version: int, schema: T.StructType,
@@ -693,43 +686,37 @@ class LakeTable:
         (w.partitionBy(part) if part else w).parquet(abs_dir)
         return abs_dir, rel_dir, round(time.monotonic() - _tw, 4)
 
-    # above this file count the footer harvest runs as a Spark job on
-    # executors instead of a driver thread pool (env-tunable for tests)
-    DISTRIBUTED_HARVEST_THRESHOLD = int(
-        os.environ.get("LAKE_DIST_HARVEST_THRESHOLD", "192"))
-
     def _harvest_entries(self, abs_dir: str, rel_dir: str, schema_id: int,
-                         kind: str = "base") -> list[FileEntry]:
+                         kind: str = "base",
+                         write_job_s: float | None = None) -> list[FileEntry]:
+        """Footer entries of the files a write job left in ``abs_dir``, read
+        in a thread pool (pyarrow releases the GIL on footer I/O).
+        Given the write job's seconds, also records the write's phases in
+        ``last_write_phases``."""
         from concurrent.futures import ThreadPoolExecutor
 
+        _th = time.monotonic()
         paths = (glob.glob(os.path.join(abs_dir, "_bkt=*", "*.parquet"))
                  + glob.glob(os.path.join(abs_dir, "_bgrp=*", "*.parquet"))
                  + glob.glob(os.path.join(abs_dir, "*.parquet")))
-        if not paths:
-            return []
-        if len(paths) >= self.DISTRIBUTED_HARVEST_THRESHOLD:
-            # EXECUTOR-side harvest: the driver only collects the (small)
-            # FileEntry dicts, so commit metadata cost stops being O(files)
-            # on one node — the round-1 commit bottleneck at 100x file
-            # counts. Executors read the same lake storage they just wrote.
-            sc = self.spark.sparkContext
-            n_slices = max(1, min(len(paths) // 8, sc.defaultParallelism))
-            docs = (sc.parallelize(paths, n_slices)
-                    .map(lambda fp: _harvest_footer(fp, abs_dir, rel_dir,
-                                                    schema_id, kind))
-                    .collect())
-        else:
-            # driver thread pool: footer reads release the GIL in pyarrow
-            # I/O, dropping per-commit cost from O(files) serial to
-            # ~O(files/16)
+        entries: list[FileEntry] = []
+        if paths:
             with ThreadPoolExecutor(max_workers=min(16, len(paths))) as pool:
-                docs = list(pool.map(
+                entries = list(pool.map(
                     lambda fp: _harvest_footer(fp, abs_dir, rel_dir,
                                                schema_id, kind), paths))
         # a write task with no rows still writes a file (Spark's partition 0
         # always does); committed, it has no _bucket stats and would count
         # toward the read amplification of every bucket
-        return [FileEntry.from_json(d) for d in docs if d["rows"]]
+        entries = [e for e in entries if e.rows]
+        if write_job_s is not None:
+            self.last_write_phases = {
+                "write_job_s": write_job_s,
+                "harvest_s": round(time.monotonic() - _th, 4),
+                "n_files": len(entries),
+                "out_bytes": sum(e.bytes for e in entries),
+            }
+        return entries
 
     def _with_bucket(self, df: DataFrame) -> DataFrame:
         if BUCKET_COL in df.columns:
@@ -741,22 +728,18 @@ class LakeTable:
         insert with no match scan, loader.py:347-378)."""
         self.join_pending_commit()
         snap = self.snapshot()
-        version = snap.version + 1
-        adds = self._write_data_files(self._with_bucket(df), version,
+        adds = self._write_data_files(self._with_bucket(df), snap.version + 1,
                                       snap.schema, snap.schema_id)
-        return self._write_commit(version, "append", snap.schema, snap.schema_id,
-                                  adds, [], properties or {})
+        return self._commit_files(snap, "append", adds, [], properties or {})
 
     def overwrite(self, df: DataFrame, properties: dict[str, Any] | None = None) -> int:
         """Full-table replace (snapshot-atomic truncate + insert)."""
         self.join_pending_commit()
         snap = self.snapshot()
-        version = snap.version + 1
-        adds = self._write_data_files(self._with_bucket(df), version,
+        adds = self._write_data_files(self._with_bucket(df), snap.version + 1,
                                       snap.schema, snap.schema_id)
-        removes = list(snap.files.keys())
-        return self._write_commit(version, "overwrite", snap.schema, snap.schema_id,
-                                  adds, removes, properties or {})
+        return self._commit_files(snap, "overwrite", adds, list(snap.files),
+                                  properties or {})
 
     def overwrite_buckets(self, df: DataFrame,
                           properties: dict[str, Any] | None = None) -> int:
@@ -766,20 +749,20 @@ class LakeTable:
         one atomic commit instead of delete-then-write. Mixed files widen the
         swap to the closure, whose untouched rows are written back."""
         self.join_pending_commit()
+        self.join_maintenance()
         snap = self.snapshot()
         dfb = self._with_bucket(df)
         touched = sorted(r[0] for r in
                          dfb.select(BUCKET_COL).distinct().collect())
-        closure = self.expand_bucket_closure(snap, touched)
-        others = self.read(version=snap.version, buckets=closure,
-                           with_bucket=True)
-        new = (dfb.unionByName(others.filter(~F.col(BUCKET_COL).isin(touched)),
-                               allowMissingColumns=True)
-               .fillna({LSN_COL: 0, OP_COL: "U"}))
-        props = dict(properties or {}, overwritten_buckets=touched)
-        return self.commit_rewrite(new, snap.files_for_buckets(closure),
-                                   "overwrite_buckets", snap.schema,
-                                   snap.schema_id, props)
+
+        def swap(rows: DataFrame) -> DataFrame:
+            others = rows.filter(~F.col(BUCKET_COL).isin(touched))
+            return (dfb.unionByName(others, allowMissingColumns=True)
+                    .fillna({LSN_COL: 0, OP_COL: "U"}))
+
+        return self._rewrite_buckets(
+            snap, touched, swap, "overwrite_buckets",
+            lambda *_: dict(properties or {}, overwritten_buckets=touched))
 
     def delete_where(self, condition: str,
                      properties: dict[str, Any] | None = None,
@@ -797,75 +780,78 @@ class LakeTable:
         (not file) because MOR delta resolution is per-bucket: rewriting one
         base file while its bucket's deltas survive would re-resolve
         against stale deltas. A may-match raw-append (mixed-bucket) file
-        falls back to the full rewrite, same rule as the MERGE path. Without
+        widens the rewrite to the closure of its bucket span. Without
         ``prune_predicates`` every file is conservatively rewritten.
 
         At 100 TB this is the difference between a maintenance delete
         costing O(matching buckets) and O(table)."""
         self.join_pending_commit()
+        self.join_maintenance()
         snap = self.snapshot()
-        entries = list(snap.files.values())
-        buckets: list[int] | None = None
-        victims = entries
+        buckets: set[int] | None = None
         if prune_predicates:
-            may = self.prune_files(entries, prune_predicates)
+            may = self.prune_files(list(snap.files.values()), prune_predicates)
             if not may:
                 return snap.version          # nothing can match: no-op
-            # mixed (raw/grouped-L0) may-files widen the rewrite to the
-            # closure of their bucket spans, not the whole table
-            buckets = self.expand_bucket_closure(
-                snap, self.buckets_of_entries(may))
-            victims = snap.files_for_buckets(buckets)
+            buckets = self.buckets_of_entries(may)
         cond = F.expr(condition)
-        keep = (self.read(buckets=buckets, with_bucket=True)
-                .filter(~cond | cond.isNull()))
-        props = dict(properties or {})
-        props["delete_pruned_buckets"] = (
-            buckets if buckets is not None else "all")
-        props["delete_files_rewritten"] = len(victims)
-        props["delete_files_total"] = len(entries)
-        return self.commit_rewrite(keep, victims, "delete", snap.schema,
-                                   snap.schema_id, props)
+        return self._rewrite_buckets(
+            snap, buckets, lambda rows: rows.filter(~cond | cond.isNull()),
+            "delete",
+            lambda b, victims: dict(properties or {}, delete_pruned_buckets=b,
+                                    delete_files_rewritten=len(victims),
+                                    delete_files_total=len(snap.files)))
 
-    def commit_rewrite(
-        self,
-        new_data: DataFrame,
-        remove_entries: list[FileEntry],
-        action: str,
-        schema: T.StructType,
-        schema_id: int,
-        properties: dict[str, Any] | None = None,
-        record_phases: bool = True,
-        retry_conflicts: bool = False,
-    ) -> int:
-        """Low-level: atomically swap ``remove_entries`` for the files of
-        ``new_data`` (used by compaction, backfill and deletes).
-
-        ``retry_conflicts=True``: a lost optimistic-concurrency race (another
-        writer took our version number) is retried at the next version AFTER
-        re-validating every victim is still live in the new snapshot — sound
-        when the concurrent writers only ADD files (delta appends vs
-        background compaction); a concurrent REMOVE of a victim is a true
-        conflict and still raises."""
-        snap = self.snapshot()
-        version = snap.version + 1
-        adds = self._write_data_files(self._with_bucket(new_data), version,
-                                      schema, schema_id,
-                                      record_phases=record_phases)
-        props = dict(properties or {})
-        removes = [e.path for e in remove_entries]
+    def _commit_files(self, snap: Snapshot, action: str,
+                      adds: list[FileEntry], removes: list[str],
+                      props: dict[str, Any],
+                      record_phases: bool = True) -> int:
+        """The one commit rule for data: swap ``removes`` for ``adds`` at
+        the version after ``snap``, with ``snap``'s schema. If another writer
+        took that version and every file in ``removes`` is still live, retry
+        at the new head with the head's schema (never undoing a concurrent
+        schema evolution; each file keeps its own schema id). If one is gone,
+        another rewrite replaced it first: :class:`CommitConflictError`."""
+        version, schema, schema_id = (snap.version + 1, snap.schema,
+                                      snap.schema_id)
         while True:
             try:
                 return self._write_commit(version, action, schema, schema_id,
                                           adds, removes, props,
                                           record_phases=record_phases)
             except CommitConflictError:
-                if not retry_conflicts:
-                    raise
                 latest = self.snapshot()
                 if any(p not in latest.files for p in removes):
                     raise
-                version = latest.version + 1
+                version, schema, schema_id = (latest.version + 1,
+                                              latest.schema, latest.schema_id)
+
+    def _rewrite_buckets(
+        self, snap: Snapshot, buckets: Iterable[int] | None,
+        fn: Callable[[DataFrame], DataFrame], action: str,
+        props: Callable[[Any, list[FileEntry]], dict[str, Any]],
+        record_phases: bool = True,
+    ) -> int:
+        """The one copy-on-write path: replace the files of ``buckets``
+        (None: all), closed under mixed-file spans
+        (:meth:`expand_bucket_closure`), by base files of ``fn(rows)``, where
+        ``rows`` is their LWW-resolved state (tombstones and engine columns
+        included) read pinned to ``snap.version``, so the files removed are
+        exactly the files read. Commits by :meth:`_commit_files`.
+        ``props(buckets, victims)`` gives the commit properties from the
+        closure (``"all"`` for the whole table) and the files removed."""
+        if buckets is not None:
+            buckets = self.expand_bucket_closure(snap, buckets)
+        victims = snap.files_for_buckets(buckets)
+        rows = self.read(version=snap.version, buckets=buckets,
+                         with_bucket=True)
+        adds = self._write_data_files(fn(rows), snap.version + 1, snap.schema,
+                                      snap.schema_id,
+                                      record_phases=record_phases)
+        return self._commit_files(
+            snap, action, adds, [e.path for e in victims],
+            props("all" if buckets is None else buckets, victims),
+            record_phases)
 
     def append_deltas(self, df: DataFrame,
                       properties: dict[str, Any] | None = None,
@@ -885,9 +871,9 @@ class LakeTable:
         atomic commit with no extra Spark job.
 
         ``bucket_groups``: bucket-clustered L0 — see
-        :meth:`_write_data_files`. Pure appends always retry a lost
-        commit race (adds only — nothing to re-validate), so delta writes are
-        safe concurrent with background compaction.
+        :meth:`_write_data_files`. An append removes nothing, so under
+        :meth:`_commit_files` a lost commit race is always retried: delta
+        writes are safe concurrent with background compaction.
 
         ``async_finalize=True``: the Spark write job still runs inline (the
         parallel part), but the DRIVER-SERIAL tail — parquet footer harvest,
@@ -911,58 +897,18 @@ class LakeTable:
             # (commit order == call order keeps fences monotonic)
             self.join_pending_commit()
         snap = self.snapshot()
-        version = snap.version + 1
-        if not async_finalize:
-            adds = self._write_data_files(df, version, snap.schema,
-                                          snap.schema_id, kind="delta",
-                                          bucket_groups=bucket_groups)
-            props = dict(properties or {})
-            if props_fn is not None:
-                props.update(props_fn(adds))
-            while True:
-                try:
-                    v = self._write_commit(version, "merge_mor", snap.schema,
-                                           snap.schema_id, adds, [], props)
-                    break
-                except CommitConflictError:
-                    version = self.snapshot().version + 1
-            if post_commit is not None:
-                post_commit(v)
-            return v
-        # run the parallel part now; defer the driver-serial tail
         abs_dir, rel_dir, wjs = self._run_write_job(
-            df, version, snap.schema, "delta", bucket_groups)
-        # ordering: the previous async commit must be fully on disk before
-        # this one may land (also bounds in-flight finalizers to one)
-        self.join_pending_commit()
+            df, snap.version + 1, snap.schema, "delta", bucket_groups)
         props0 = dict(properties or {})
-        if "txn_app" in props0 and props0.get("txn_batch") is not None:
-            self._pending_txn = (str(props0["txn_app"]),
-                                 int(props0["txn_batch"]))
 
         def _finalize() -> int:
             try:
-                _th = time.monotonic()
                 entries = self._harvest_entries(abs_dir, rel_dir,
-                                                snap.schema_id, "delta")
-                self.last_write_phases = {
-                    "write_job_s": wjs,
-                    "harvest_s": round(time.monotonic() - _th, 4),
-                    "n_files": len(entries),
-                    "out_bytes": sum(e.bytes for e in entries),
-                }
+                                                snap.schema_id, "delta", wjs)
                 props = dict(props0)
                 if props_fn is not None:
                     props.update(props_fn(entries))
-                v = version
-                while True:
-                    try:
-                        v = self._write_commit(v, "merge_mor", snap.schema,
-                                               snap.schema_id, entries, [],
-                                               props)
-                        break
-                    except CommitConflictError:
-                        v = self.snapshot().version + 1
+                v = self._commit_files(snap, "merge_mor", entries, [], props)
             finally:
                 # landed: the log itself now carries the fence; failed: the
                 # batch is not in the table, so it must not count as fenced
@@ -971,6 +917,15 @@ class LakeTable:
                 post_commit(v)
             return v
 
+        if not async_finalize:
+            return _finalize()
+        # the serial tail is deferred. Ordering: the previous async
+        # commit must be fully on disk before this one may land (also
+        # bounds in-flight finalizers to one)
+        self.join_pending_commit()
+        if "txn_app" in props0 and props0.get("txn_batch") is not None:
+            self._pending_txn = (str(props0["txn_app"]),
+                                 int(props0["txn_batch"]))
         if self._commit_pool is None:
             from concurrent.futures import ThreadPoolExecutor
             self._commit_pool = ThreadPoolExecutor(
@@ -1012,12 +967,15 @@ class LakeTable:
         the per-bucket counts). Correctness under the overlap: the fold reads
         a PINNED snapshot version and only removes that snapshot's files;
         concurrent delta appends land at later versions and win LWW
-        resolution over the compacted base; commit races are retried with
-        victim re-validation. Two folds over the same victims do conflict
-        (the loser raises), so a synchronous fold (``merge_cdc_batch``'s
-        ``mode="cow"``) joins maintenance first, and
-        :class:`~..streaming.CdcStreamRunner` joins it before returning.
-        Returns the Future, or None if one was already running."""
+        resolution over the compacted base; a lost commit race is retried
+        while the victims are still live (:meth:`_commit_files`). Two
+        rewrites of the same files do conflict (the loser raises), so every
+        foreground rewrite — ``merge_cdc_batch``'s ``mode="cow"`` fold,
+        :meth:`delete_where`, :meth:`expire_tombstones`,
+        :meth:`overwrite_buckets`, ``merge_backfill`` — and :meth:`vacuum`
+        join maintenance first, and :class:`~..streaming.CdcStreamRunner`
+        joins it before returning. Returns the Future, or None if one was
+        already running."""
         if self._maint_future is not None and not self._maint_future.done():
             return None
         from concurrent.futures import ThreadPoolExecutor
@@ -1126,12 +1084,15 @@ class LakeTable:
         (:meth:`expand_bucket_closure`): grouped L0 folds per group, and only
         ungrouped raw L0 (full-span files) degrades to the full fold.
 
-        ``record_phases=False`` + the conflict retry make this safe to run
-        from a background maintenance thread concurrent with delta appends:
-        the read is pinned to the entry snapshot (later deltas are neither
-        folded nor removed — LWW resolution keeps them winning over the
-        compacted base), and a losing commit race is retried after
-        re-validating the victims are still live."""
+        The fold is a :meth:`_rewrite_buckets`, which makes it safe to run
+        on the background maintenance thread (``record_phases=False`` keeps
+        it off the foreground write's telemetry) concurrent with delta
+        appends: its read is pinned to the entry snapshot, later deltas are
+        neither folded nor removed (LWW keeps them winning over the folded
+        base), and a lost commit race retries at the new head, with the
+        head's schema, while its victims are still live. A rewrite that
+        removed a victim first makes the fold raise. So this method never
+        joins background maintenance itself: it is what runs there."""
         self.join_pending_commit()
         snap = self.snapshot()
         if buckets is None:
@@ -1141,16 +1102,10 @@ class LakeTable:
             targets = list(buckets)
         if not targets:
             return None
-        targets = self.expand_bucket_closure(snap, targets)
-        victims = snap.files_for_buckets(targets)
-        resolved = self.read(version=snap.version, buckets=targets,
-                             with_bucket=True)
-        props = dict(properties or {})
-        props["compacted_delta_buckets"] = sorted(targets) if targets else "all"
-        return self.commit_rewrite(resolved, victims, "compact_deltas",
-                                   snap.schema, snap.schema_id, props,
-                                   record_phases=record_phases,
-                                   retry_conflicts=True)
+        return self._rewrite_buckets(
+            snap, targets, lambda rows: rows, "compact_deltas",
+            lambda b, _: dict(properties or {}, compacted_delta_buckets=b),
+            record_phases=record_phases)
 
     def evolve_schema(self, new_schema: T.StructType,
                       properties: dict[str, Any] | None = None) -> int:
@@ -1207,10 +1162,8 @@ class LakeTable:
 # ------------------------------------------------------------------ helpers
 
 def _harvest_footer(fp: str, abs_dir: str, rel_dir: str, schema_id: int,
-                    kind: str) -> dict[str, Any]:
-    """Read one parquet footer into a FileEntry JSON dict. Module-level and
-    dict-returning so it pickles cleanly into executor tasks (the
-    distributed-harvest path) as well as driver threads."""
+                    kind: str) -> FileEntry:
+    """Read one parquet footer into a FileEntry."""
     import pyarrow.parquet as pq
 
     parent = os.path.basename(os.path.dirname(fp))
@@ -1244,7 +1197,7 @@ def _harvest_footer(fp: str, abs_dir: str, rel_dir: str, schema_id: int,
             bucket = int(bst[0])
     rel = os.path.join(rel_dir, os.path.relpath(fp, abs_dir))
     return FileEntry(rel, bucket, md.num_rows, os.path.getsize(fp),
-                     schema_id, stats, kind).to_json()
+                     schema_id, stats, kind)
 
 
 def _json_safe(v: Any) -> bool:

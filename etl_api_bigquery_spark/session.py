@@ -89,8 +89,8 @@ def _ship_package(spark: SparkSession) -> None:
     ``--py-files`` step, done programmatically). local[*] executors share the
     driver's interpreter, but standalone/YARN/K8s executor Python workers
     unpickle task closures in their OWN interpreter — and module-level
-    functions (the distributed footer harvest, table.py:_harvest_footer)
-    pickle BY REFERENCE, so the worker must be able to import the package.
+    functions a task closure references (a UDF's helpers, say) pickle BY
+    REFERENCE, so the worker must be able to import the package.
     ``addPyFile`` ships the zip to every current executor AND to executors
     that join later, as they do under dynamic allocation."""
     import zipfile

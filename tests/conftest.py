@@ -1,10 +1,11 @@
+import pathlib
 import shutil
 import sys
 import uuid
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
 from etl_api_bigquery_spark.session import get_spark  # noqa: E402
 

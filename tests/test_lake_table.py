@@ -149,29 +149,6 @@ def test_schema_conform_on_read(spark, tmp_table_dir):
     assert t.read().count() == 15
 
 
-def test_distributed_footer_harvest(spark, tmp_table_dir):
-    """Executor-side harvest (file count >= threshold) must produce the same
-    manifest entries as the driver thread pool."""
-    import pyspark.sql.functions as F
-    import pyspark.sql.types as T
-    from etl_api_bigquery_spark.lake import LakeTable
-    schema = T.StructType([T.StructField("k", T.StringType()),
-                           T.StructField("v", T.LongType())])
-    t = LakeTable.create(spark, tmp_table_dir + "/dh", schema,
-                         key_cols=["k"], num_buckets=8)
-    t.DISTRIBUTED_HARVEST_THRESHOLD = 1   # force the Spark-job path
-    df = spark.range(1000).select(F.col("id").cast("string").alias("k"),
-                                  F.col("id").alias("v"))
-    t.append(df)
-    snap = t.snapshot()
-    assert snap.num_rows == 1000
-    assert len(snap.files) >= 8
-    for e in snap.files.values():
-        assert e.rows > 0 and e.bytes > 0 and 0 <= e.bucket < 8
-        assert "v" in e.stats and e.stats["v"][0] >= 0
-    assert t.read().count() == 1000
-
-
 def test_delete_where_bucket_pruned(spark, tmp_table_dir):
     """A stats-prunable delete rewrites ONLY the may-match buckets' files;
     every other file survives the commit byte-identically."""
