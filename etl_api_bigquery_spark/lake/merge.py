@@ -29,9 +29,7 @@ num_buckets (more buckets -> finer fold granularity).
 
 from __future__ import annotations
 
-import os
 import time
-import urllib.parse
 from collections import Counter
 from dataclasses import dataclass, field
 from typing import Any
@@ -151,76 +149,6 @@ def lww_prefilter(
             .select("*", tpl["ltok"]))
     return left.join(F.broadcast(winners), on="_wtok",
                      how="left_semi").drop("_wtok")
-
-
-def _l0_groups_for(in_bytes: int, n_tasks: int, out_ratio: float,
-                   num_buckets: int, target_bytes: int) -> int:
-    """Bucket-group count for a raw L0 write, from a file-size FLOOR.
-
-    ``bucket_groups=G`` splits each write task's output into G files (one per
-    contiguous bucket range), so per-file bytes = task_out_bytes / G. Full
-    bucket purity (G = num_buckets) is the best read/compaction locality, but
-    at small per-task volumes it degenerates into KB-scale files whose
-    open/footer/close overhead dominates the write (measured: the 12M-event
-    campaign config wrote 2048 x 1.9 MB files per batch and halved absolute
-    throughput vs the unclustered r3 engine). Pick the largest G whose
-    expected file size stays >= target_bytes — at production per-task volumes
-    (hundreds of MB after prefilter) this saturates at num_buckets, so purity
-    is lost only in the regime where it was unaffordable anyway.
-    """
-    if n_tasks <= 0 or in_bytes <= 0:
-        return num_buckets
-    per_task_out = in_bytes * max(out_ratio, 0.01) / n_tasks
-    return max(1, min(num_buckets, int(per_task_out // max(target_bytes, 1))))
-
-
-# L0 file-size floor for l0_groups="auto"
-L0_TARGET_FILE_BYTES = 16 << 20
-
-
-def _adaptive_l0_groups(table: LakeTable, events: DataFrame) -> int:
-    """Resolve ``l0_groups="auto"``: size the bucket grouping from this
-    batch's source bytes, Spark's split planning, and the trailing
-    output/input byte ratio of previous raw writes (covers the prefilter's
-    volume cut; 1.0 — conservative, coarser files — before the first write).
-    Driver-side metadata only (file list + stat), no job.
-
-    Streaming micro-batch DataFrames expose NO input files (measured:
-    ``inputFiles()`` is empty under foreachBatch), so the streaming path runs
-    a one-step feedback controller off the PREVIOUS raw write instead:
-    per-task output bytes = out_bytes x G_prev / n_files, G sized to the same
-    floor. Converges after one batch for stable trigger sizes; the very first
-    batch (no history either) writes bucket-pure and self-corrects."""
-    try:
-        files = [u for u in events.inputFiles()]
-    except Exception:
-        files = []
-    sizes = []
-    for u in files:
-        p = urllib.parse.urlparse(u).path or u
-        try:
-            sizes.append(os.path.getsize(p))
-        except OSError:
-            sizes = []
-            break
-    if not sizes:
-        last = getattr(table, "_last_l0_write", None)
-        if not last:
-            return table.num_buckets
-        out_bytes, n_files, g_prev = last
-        per_task = out_bytes * max(g_prev, 1) / max(n_files, 1)
-        return max(1, min(table.num_buckets,
-                          int(per_task // max(L0_TARGET_FILE_BYTES, 1))))
-    conf = events.sparkSession.conf.get(
-        "spark.sql.files.maxPartitionBytes", "134217728b")
-    mpb = int("".join(ch for ch in conf if ch.isdigit()) or "134217728")
-    n_tasks = sum(-(-s // mpb) for s in sizes)
-    ratio = getattr(table, "l0_out_ratio", None) or 1.0
-    in_bytes = sum(sizes)
-    g = _l0_groups_for(in_bytes, n_tasks, ratio, table.num_buckets,
-                       L0_TARGET_FILE_BYTES)
-    table._last_l0_in_bytes = in_bytes        # for the trailing ratio update
-    return g
 
 
 def _delta_select_exprs(table: LakeTable, snap: Any, present_cols: set[str],
@@ -414,9 +342,10 @@ def merge_cdc_batch(
       into G contiguous bucket ranges per task (task-local sort, still no
       shuffle; G = table.num_buckets gives fully bucket-PURE L0), restoring
       per-bucket compaction/read locality at the cost of more, smaller files
-      (tasks x G per trigger). ``l0_groups="auto"`` sizes G per batch from
-      the source bytes and a 16 MB L0 file-size floor (see
-      :func:`_l0_groups_for`). Compaction triggers when any bucket's delta
+      (tasks x G per trigger). ``l0_groups="auto"`` lets
+      :meth:`LakeTable.append_deltas` size G from the table's previous
+      append and a 16 MB L0 file-size floor (bucket-pure on the first
+      append). Compaction triggers when any bucket's delta
       read amplification reaches ``auto_compact_deltas`` and folds only the
       closure of the hot buckets' file spans (ungrouped L0 spans
       everything, degrading to the full L0 fold).
@@ -496,9 +425,6 @@ def merge_cdc_batch(
         table.join_pending_commit()
         table.join_maintenance()
     snap0 = table.snapshot()
-    if l0_groups == "auto":
-        l0_groups = _adaptive_l0_groups(table, events)
-        props["l0_groups"] = l0_groups
     src = (lww_prefilter(events, table.key_cols, lsn_col) if prefilter
            else events)
     raw = src.withColumn(BUCKET_COL, table.bucket_expr())
@@ -550,23 +476,11 @@ def merge_cdc_batch(
 
     _t_plan = time.monotonic() - t0
 
-    def _post(version: int) -> None:
-        # everything after the data-file commit: l0 feedback, the fold, and
-        # the phase telemetry. Runs inline (sync) or on the commit-finalizer
-        # thread (async_finalize).
+    def _post(version: int, write_phases: dict[str, Any]) -> None:
+        # everything after the data-file commit: the fold and the phase
+        # telemetry. Runs inline (sync) or on the commit-finalizer thread
+        # (async_finalize).
         _t_post0 = time.monotonic()
-        _write_phases = dict(table.last_write_phases)
-        # trailing write stats feeding the next batch's l0_groups="auto":
-        # out/in byte ratio (batch path) + (bytes, files, G) feedback
-        # (streaming path, where the batch DF exposes no input files)
-        in_b = getattr(table, "_last_l0_in_bytes", 0)
-        if in_b and _write_phases.get("out_bytes"):
-            table.l0_out_ratio = _write_phases["out_bytes"] / in_b
-        if _write_phases.get("out_bytes"):
-            table._last_l0_write = (_write_phases["out_bytes"],
-                                    _write_phases.get("n_files", 1),
-                                    l0_groups if isinstance(l0_groups, int)
-                                    else 1)
         m.version = version
         if mode == "cow":
             if touched:
@@ -583,24 +497,18 @@ def merge_cdc_batch(
                     table.compact_deltas(buckets=hot, properties=cprops)
         m.extra["phases"] = {
             "plan_build_s": round(_t_plan, 4),
-            **_write_phases,
+            **write_phases,
             "compact_s": round(time.monotonic() - _t_post0, 4),
         }
 
     if async_finalize:
-        # write job runs inline (the parallel part); footer harvest +
-        # lineage + commit fsync + compaction trigger land on the
+        # footer harvest + lineage + commit fsync + _post land on the
         # finalizer thread, overlapping the caller's next batch. m's
         # version/lineage/phases fields settle when the commit lands —
         # callers read them after LakeTable.join_pending_commit().
         m.extra["async_commit"] = True
-        table.append_deltas(delta, properties=props,
-                            bucket_groups=l0_groups,
-                            props_fn=lineage_props,
-                            async_finalize=True, post_commit=_post)
-    else:
-        _post(table.append_deltas(delta, properties=props,
-                                  bucket_groups=l0_groups,
-                                  props_fn=lineage_props))
+    table.append_deltas(delta, properties=props, bucket_groups=l0_groups,
+                        props_fn=lineage_props,
+                        async_finalize=async_finalize, post_commit=_post)
     m.duration_sec = time.monotonic() - t0
     return m

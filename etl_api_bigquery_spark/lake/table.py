@@ -63,6 +63,9 @@ from pyspark.sql import types as T
 _LOG_DIR = "_log"
 _DATA_DIR = "data"
 
+# L0 file-size floor for append_deltas(bucket_groups="auto")
+L0_TARGET_FILE_BYTES = 16 << 20
+
 # Columns the engine manages; not part of the user-visible schema.
 BUCKET_COL = "_bucket"   # bucket id: pmod(xxhash64(keys), num_buckets)
 LSN_COL = "_lsn"         # last-writer LSN of the row (0 for plain appends)
@@ -156,10 +159,9 @@ class LakeTable:
         self.location = os.path.abspath(location)
         self._snap_cache: dict[int, Snapshot] = {}
         self._doc_cache: dict[int, dict[str, Any]] = {}  # commit log JSON docs
-        # driver-serial phase timings of the LAST write (write job vs footer
-        # harvest vs commit fsync) — telemetry for the scaling decomposition;
-        # merge_cdc_batch copies it into MergeMetrics.extra
-        self.last_write_phases: dict[str, float] = {}
+        # (out_bytes, n_files, G) of the last landed append_deltas write:
+        # sizes the next bucket_groups="auto" write
+        self._prev_l0_write: tuple[int, int, int] | None = None
         # incremental fence state (see last_txn)
         self._txn_best: dict[str, int] = {}
         self._txn_hwm: int = -1
@@ -242,7 +244,6 @@ class LakeTable:
         removes: list[str],
         properties: dict[str, Any],
         table_meta: dict[str, Any] | None = None,
-        record_phases: bool = True,
     ) -> int:
         doc = {
             "version": version,
@@ -258,7 +259,6 @@ class LakeTable:
             doc["table"] = table_meta
         path = self._log_path(version)
         payload = json.dumps(doc, separators=(",", ":")).encode()
-        _tc = time.monotonic()
         try:
             fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
         except FileExistsError as e:
@@ -268,9 +268,6 @@ class LakeTable:
             os.fsync(fd)
         finally:
             os.close(fd)
-        if record_phases:
-            self.last_write_phases["commit_fsync_s"] = round(
-                time.monotonic() - _tc, 4)
         self._snap_cache.pop(-1, None)
         self._maybe_write_checkpoint(version)
         return version
@@ -622,7 +619,6 @@ class LakeTable:
     def _write_data_files(
         self, df: DataFrame, version: int, schema: T.StructType, schema_id: int,
         kind: str = "base", bucket_groups: int | None = None,
-        record_phases: bool = True,
     ) -> list[FileEntry]:
         """Write df (must already carry BUCKET_COL) as parquet data files.
 
@@ -640,25 +636,22 @@ class LakeTable:
         G = num_buckets the L0 files are fully bucket-pure (labeled with real
         bucket ids via their footer stats), restoring per-bucket
         compaction/read locality; smaller G trades file count (tasks x G per
-        write) for locality. ``record_phases=False`` skips the
-        telemetry side channel (background maintenance writes must not clobber
-        the foreground merge's phase decomposition).
+        write) for locality.
 
         Stats come from parquet footers only.
         """
-        abs_dir, rel_dir, wjs = self._run_write_job(
-            df, version, schema, kind, bucket_groups)
-        return self._harvest_entries(abs_dir, rel_dir, schema_id, kind,
-                                     wjs if record_phases else None)
+        abs_dir, rel_dir = self._run_write_job(df, version, schema, kind,
+                                               bucket_groups)
+        return self._harvest_entries(abs_dir, rel_dir, schema_id, kind)
 
     def _run_write_job(
         self, df: DataFrame, version: int, schema: T.StructType,
         kind: str = "base", bucket_groups: int | None = None,
-    ) -> tuple[str, str, float]:
+    ) -> tuple[str, str]:
         """The Spark-job half of :meth:`_write_data_files`: materialize the
-        data files and return ``(abs_dir, rel_dir, write_job_seconds)``
-        without touching the parquet footers — so an async finalizer can
-        harvest + commit off the critical path (see ``append_deltas``)."""
+        data files and return ``(abs_dir, rel_dir)`` without touching the
+        parquet footers — so an async finalizer can harvest + commit off
+        the critical path (see ``append_deltas``)."""
         out = df
         if LSN_COL not in out.columns:
             out = out.withColumn(LSN_COL, F.lit(0).cast("long"))
@@ -668,7 +661,6 @@ class LakeTable:
         out = _conform(out, _schema_with_engine_cols(schema))
         rel_dir = f"{_DATA_DIR}/c{version:010d}-{uuid.uuid4().hex[:8]}"
         abs_dir = os.path.join(self.location, rel_dir)
-        _tw = time.monotonic()
         part = None
         if kind == "base":
             out = out.repartition(self.num_buckets, F.col(BUCKET_COL))
@@ -684,18 +676,14 @@ class LakeTable:
         w = out.write.mode("overwrite").option(
             "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
         (w.partitionBy(part) if part else w).parquet(abs_dir)
-        return abs_dir, rel_dir, round(time.monotonic() - _tw, 4)
+        return abs_dir, rel_dir
 
     def _harvest_entries(self, abs_dir: str, rel_dir: str, schema_id: int,
-                         kind: str = "base",
-                         write_job_s: float | None = None) -> list[FileEntry]:
+                         kind: str = "base") -> list[FileEntry]:
         """Footer entries of the files a write job left in ``abs_dir``, read
-        in a thread pool (pyarrow releases the GIL on footer I/O).
-        Given the write job's seconds, also records the write's phases in
-        ``last_write_phases``."""
+        in a thread pool (pyarrow releases the GIL on footer I/O)."""
         from concurrent.futures import ThreadPoolExecutor
 
-        _th = time.monotonic()
         paths = (glob.glob(os.path.join(abs_dir, "_bkt=*", "*.parquet"))
                  + glob.glob(os.path.join(abs_dir, "_bgrp=*", "*.parquet"))
                  + glob.glob(os.path.join(abs_dir, "*.parquet")))
@@ -708,15 +696,7 @@ class LakeTable:
         # a write task with no rows still writes a file (Spark's partition 0
         # always does); committed, it has no _bucket stats and would count
         # toward the read amplification of every bucket
-        entries = [e for e in entries if e.rows]
-        if write_job_s is not None:
-            self.last_write_phases = {
-                "write_job_s": write_job_s,
-                "harvest_s": round(time.monotonic() - _th, 4),
-                "n_files": len(entries),
-                "out_bytes": sum(e.bytes for e in entries),
-            }
-        return entries
+        return [e for e in entries if e.rows]
 
     def _with_bucket(self, df: DataFrame) -> DataFrame:
         if BUCKET_COL in df.columns:
@@ -804,8 +784,7 @@ class LakeTable:
 
     def _commit_files(self, snap: Snapshot, action: str,
                       adds: list[FileEntry], removes: list[str],
-                      props: dict[str, Any],
-                      record_phases: bool = True) -> int:
+                      props: dict[str, Any]) -> int:
         """The one commit rule for data: swap ``removes`` for ``adds`` at
         the version after ``snap``, with ``snap``'s schema. If another writer
         took that version and every file in ``removes`` is still live, retry
@@ -817,8 +796,7 @@ class LakeTable:
         while True:
             try:
                 return self._write_commit(version, action, schema, schema_id,
-                                          adds, removes, props,
-                                          record_phases=record_phases)
+                                          adds, removes, props)
             except CommitConflictError:
                 latest = self.snapshot()
                 if any(p not in latest.files for p in removes):
@@ -830,7 +808,6 @@ class LakeTable:
         self, snap: Snapshot, buckets: Iterable[int] | None,
         fn: Callable[[DataFrame], DataFrame], action: str,
         props: Callable[[Any, list[FileEntry]], dict[str, Any]],
-        record_phases: bool = True,
     ) -> int:
         """The one copy-on-write path: replace the files of ``buckets``
         (None: all), closed under mixed-file spans
@@ -846,16 +823,14 @@ class LakeTable:
         rows = self.read(version=snap.version, buckets=buckets,
                          with_bucket=True)
         adds = self._write_data_files(fn(rows), snap.version + 1, snap.schema,
-                                      snap.schema_id,
-                                      record_phases=record_phases)
+                                      snap.schema_id)
         return self._commit_files(
             snap, action, adds, [e.path for e in victims],
-            props("all" if buckets is None else buckets, victims),
-            record_phases)
+            props("all" if buckets is None else buckets, victims))
 
     def append_deltas(self, df: DataFrame,
                       properties: dict[str, Any] | None = None,
-                      bucket_groups: int | None = None,
+                      bucket_groups: int | str | None = None,
                       props_fn: Any = None,
                       async_finalize: bool = False,
                       post_commit: Any = None) -> int:
@@ -871,20 +846,29 @@ class LakeTable:
         atomic commit with no extra Spark job.
 
         ``bucket_groups``: bucket-clustered L0 — see
-        :meth:`_write_data_files`. An append removes nothing, so under
+        :meth:`_write_data_files`. ``"auto"`` picks the largest G in [1,
+        num_buckets] whose files stay at or above ``L0_TARGET_FILE_BYTES``
+        at the last landed append's bytes per write task (``out_bytes x
+        G_prev / n_files``); num_buckets before the first append. The
+        commit records G as ``l0_groups``. An append removes nothing, so under
         :meth:`_commit_files` a lost commit race is always retried: delta
         writes are safe concurrent with background compaction.
+
+        ``post_commit(version, phases)`` (optional) runs once the commit has
+        landed. ``phases`` is this write's own breakdown: ``write_job_s``
+        (the Spark job), ``harvest_s`` (footer reads), ``n_files``,
+        ``out_bytes`` and ``commit_fsync_s`` (:meth:`_commit_files`).
 
         ``async_finalize=True``: the Spark write job still runs inline (the
         parallel part), but the DRIVER-SERIAL tail — parquet footer harvest,
         lineage ``props_fn``, commit-log write + fsync — runs on a background
         driver thread so it overlaps the caller's next trigger (scan of batch
         N+1, streaming wrapper). Returns ``-1`` (version pending); the real
-        version reaches the optional ``post_commit(version)`` hook on the
-        finalizer thread after the commit lands. Ordering invariant: at most
-        one finalize is in flight and the previous one is joined before this
-        one may commit, so commit order equals batch order and fence N always
-        lands before data N+1 commits. Readers (:meth:`read`), maintenance
+        version reaches ``post_commit`` on the finalizer thread after the
+        commit lands. Ordering invariant: at most one finalize is in flight
+        and the previous one is joined before this one may commit, so commit
+        order equals batch order and fence N always lands before data N+1
+        commits. Readers (:meth:`read`), maintenance
         and destructive ops join the pending commit first (read-your-writes).
         Durability note: between the caller's return and the background
         fsync, the batch is NOT yet in the log — a crash in that window
@@ -897,24 +881,44 @@ class LakeTable:
             # (commit order == call order keeps fences monotonic)
             self.join_pending_commit()
         snap = self.snapshot()
-        abs_dir, rel_dir, wjs = self._run_write_job(
-            df, snap.version + 1, snap.schema, "delta", bucket_groups)
         props0 = dict(properties or {})
+        if bucket_groups == "auto":
+            nb = int(snap.table_meta["num_buckets"])
+            bucket_groups = nb
+            prev = self._prev_l0_write
+            if prev is not None:
+                out_bytes, n_files, g_prev = prev
+                g = int(out_bytes * g_prev / n_files // L0_TARGET_FILE_BYTES)
+                bucket_groups = max(1, min(nb, g))
+            props0["l0_groups"] = bucket_groups
+        t0 = time.monotonic()
+        abs_dir, rel_dir = self._run_write_job(
+            df, snap.version + 1, snap.schema, "delta", bucket_groups)
+        phases = {"write_job_s": round(time.monotonic() - t0, 4)}
 
         def _finalize() -> int:
             try:
+                t1 = time.monotonic()
                 entries = self._harvest_entries(abs_dir, rel_dir,
-                                                snap.schema_id, "delta", wjs)
+                                                snap.schema_id, "delta")
+                phases.update(harvest_s=round(time.monotonic() - t1, 4),
+                              n_files=len(entries),
+                              out_bytes=sum(e.bytes for e in entries))
                 props = dict(props0)
                 if props_fn is not None:
                     props.update(props_fn(entries))
+                t2 = time.monotonic()
                 v = self._commit_files(snap, "merge_mor", entries, [], props)
+                phases["commit_fsync_s"] = round(time.monotonic() - t2, 4)
             finally:
                 # landed: the log itself now carries the fence; failed: the
                 # batch is not in the table, so it must not count as fenced
                 self._pending_txn = None
+            if entries:
+                self._prev_l0_write = (phases["out_bytes"], len(entries),
+                                       bucket_groups or 1)
             if post_commit is not None:
-                post_commit(v)
+                post_commit(v, phases)
             return v
 
         if not async_finalize:
@@ -964,8 +968,10 @@ class LakeTable:
 
         At most one maintenance job is in flight per table — if one is
         already running the call is a no-op (the next trigger re-evaluates
-        the per-bucket counts). Correctness under the overlap: the fold reads
-        a PINNED snapshot version and only removes that snapshot's files;
+        the per-bucket counts). If the last one failed, the call raises its
+        failure instead, once (see :meth:`join_maintenance`).
+        Correctness under the overlap: the fold reads a PINNED snapshot
+        version and only removes that snapshot's files;
         concurrent delta appends land at later versions and win LWW
         resolution over the compacted base; a lost commit race is retried
         while the victims are still live (:meth:`_commit_files`). Two
@@ -976,25 +982,33 @@ class LakeTable:
         join maintenance first, and :class:`~..streaming.CdcStreamRunner`
         joins it before returning. Returns the Future, or None if one was
         already running."""
-        if self._maint_future is not None and not self._maint_future.done():
+        f = self._maint_future
+        if f is not None and not f.done():
             return None
+        self.join_maintenance()      # a finished fold's failure raises here
         from concurrent.futures import ThreadPoolExecutor
         if self._maint_pool is None:
             self._maint_pool = ThreadPoolExecutor(
                 max_workers=1, thread_name_prefix="lake-maint")
         self._maint_future = self._maint_pool.submit(
             self.compact_deltas, buckets=list(buckets),
-            properties=properties, record_phases=False)
+            properties=properties)
         return self._maint_future
 
     def join_maintenance(self) -> None:
         """Block until any in-flight background maintenance commit lands and
         re-raise its failure (a silently failed compaction would leave read
-        amplification growing unbounded)."""
+        amplification growing unbounded). A failure is raised once: the
+        future is cleared either way, so later calls do not repeat it."""
         f = self._maint_future
-        if f is not None:
+        if f is None:
+            return
+        try:
             f.result()
-            self._maint_future = None
+        finally:
+            # compare-and-clear: keep a newer fold scheduled while we waited
+            if self._maint_future is f:
+                self._maint_future = None
 
     def delta_file_counts(self) -> dict[int, int]:
         """Delta files per bucket; key MIXED_BUCKET counts raw-append files."""
@@ -1068,8 +1082,7 @@ class LakeTable:
 
     def compact_deltas(self, max_delta_files: int = 8,
                        buckets: Iterable[int] | None = None,
-                       properties: dict[str, Any] | None = None,
-                       record_phases: bool = True) -> int | None:
+                       properties: dict[str, Any] | None = None) -> int | None:
         """Fold delta files into base files for buckets whose delta count
         reached ``max_delta_files`` (or an explicit bucket list). Content
         preserving: resolved LWW state is rewritten as base. Winning DELETE
@@ -1085,12 +1098,11 @@ class LakeTable:
         ungrouped raw L0 (full-span files) degrades to the full fold.
 
         The fold is a :meth:`_rewrite_buckets`, which makes it safe to run
-        on the background maintenance thread (``record_phases=False`` keeps
-        it off the foreground write's telemetry) concurrent with delta
-        appends: its read is pinned to the entry snapshot, later deltas are
-        neither folded nor removed (LWW keeps them winning over the folded
-        base), and a lost commit race retries at the new head, with the
-        head's schema, while its victims are still live. A rewrite that
+        on the background maintenance thread concurrent with delta appends:
+        its read is pinned to the entry snapshot, later deltas are neither
+        folded nor removed (LWW keeps them winning over the folded base),
+        and a lost commit race retries at the new head, with the head's
+        schema, while its victims are still live. A rewrite that
         removed a victim first makes the fold raise. So this method never
         joins background maintenance itself: it is what runs there."""
         self.join_pending_commit()
@@ -1104,8 +1116,7 @@ class LakeTable:
             return None
         return self._rewrite_buckets(
             snap, targets, lambda rows: rows, "compact_deltas",
-            lambda b, _: dict(properties or {}, compacted_delta_buckets=b),
-            record_phases=record_phases)
+            lambda b, _: dict(properties or {}, compacted_delta_buckets=b))
 
     def evolve_schema(self, new_schema: T.StructType,
                       properties: dict[str, Any] | None = None) -> int:

@@ -63,10 +63,11 @@ class CdcStreamRunner:
     mode: str = "raw"
     prefilter: bool = False                # see merge_cdc_batch
     auto_compact_deltas: int = 16
-    # raw L0 clustering: None = adaptive ("auto" — per-batch group count from
-    # source bytes and a 16 MB L0 file-size floor, bucket-pure when per-task
-    # volume allows); an int pins the group count (table.num_buckets =
-    # always bucket-pure, 1 = unclustered single-file-per-task L0)
+    # raw L0 clustering: None = adaptive ("auto" — LakeTable.append_deltas
+    # sizes the group count from the previous append's bytes per write task
+    # and a 16 MB L0 file-size floor; bucket-pure on the first trigger); an
+    # int pins the group count (table.num_buckets = always bucket-pure, 1 =
+    # unclustered single-file-per-task L0)
     l0_groups: int | str | None = None
     # run auto-compaction on a background driver thread so the fold overlaps
     # the next trigger's scan; joined (and failures re-raised) before

@@ -94,7 +94,7 @@ def main() -> None:
 
     result = {"batches": len(applied), "keys_applied": events,
               "duration_sec": round(dt, 2), "table_version": table.current_version(),
-              "rows": table.snapshot().num_rows}
+              "rows": table.read().count()}
     if args.verify:
         from etl_api_bigquery_spark.cdc import expected_final_state
         from etl_api_bigquery_spark.cdc.oracle import assert_replay_match

@@ -362,6 +362,36 @@ def test_join_pending_commit_keeps_newer_finalizer(spark, tmp_table_dir):
     assert t.read().count() == 10
 
 
+@pytest.mark.parametrize("surface", ["schedule", "join"])
+def test_failed_background_fold_raises_once(spark, tmp_table_dir, surface):
+    """A background fold that failed is raised by the next
+    compact_deltas_async or join_maintenance, exactly once: the join after
+    that is clean, and a destructive op is not blocked by the stale error."""
+    from concurrent.futures import wait
+
+    t = make_table(spark, tmp_table_dir)
+    t.append_deltas(_delta_df(spark, 20))
+    fold = t.compact_deltas
+
+    def fail_once(**kw):
+        t.compact_deltas = fold
+        raise RuntimeError("fold failed")
+
+    t.compact_deltas = fail_once
+    wait([t.compact_deltas_async([0])])
+    with pytest.raises(RuntimeError, match="fold failed"):
+        if surface == "schedule":
+            t.compact_deltas_async([0])
+        else:
+            t.join_maintenance()
+    t.join_maintenance()
+    assert t.compact_deltas_async([0]) is not None
+    t.join_maintenance()
+    assert t.history()[-1]["action"] == "compact_deltas"
+    t.delete_where("path = 'p0'")
+    assert t.read().count() == 19
+
+
 def test_async_finalize_requires_raw_mode(spark, tmp_table_dir):
     from etl_api_bigquery_spark.lake.merge import merge_cdc_batch
     t = make_table(spark, tmp_table_dir)

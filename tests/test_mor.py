@@ -294,27 +294,42 @@ def test_cow_after_grouped_raw_partial_rewrite(spark, tmp_table_dir):
     feed.unpersist()
 
 
-def test_l0_groups_sizing_rule():
-    """_l0_groups_for: largest G keeping expected L0 file size >= the floor,
-    clamped to [1, num_buckets]."""
-    from etl_api_bigquery_spark.lake.merge import _l0_groups_for
-    MB = 1 << 20
-    # production-scale per-task volume: saturates at full bucket purity
-    assert _l0_groups_for(128 * 1024 * MB, 64, 0.35, 32, 16 * MB) == 32
-    # bench-scale: 12M-event campaign shape (3.8 GB, 64 tasks, ~0.35
-    # survival) must NOT produce 2 MB files — G collapses toward 1
-    assert _l0_groups_for(3800 * MB, 64, 0.35, 32, 16 * MB) == 1
-    # mid regime: G scales with per-task bytes
-    assert _l0_groups_for(3800 * MB, 8, 1.0, 32, 16 * MB) == 29
-    # degenerate inputs: conservative full purity
-    assert _l0_groups_for(0, 8, 1.0, 32, 16 * MB) == 32
-    assert _l0_groups_for(100, 0, 1.0, 32, 16 * MB) == 32
+def test_l0_groups_auto_sizes_from_the_previous_append(spark, tmp_table_dir,
+                                                       monkeypatch):
+    """l0_groups="auto" is resolved by append_deltas: the first raw merge
+    writes bucket-pure L0 (G = num_buckets); the next one takes G from the
+    first commit's adds — out_bytes x G / n_files bytes per write task,
+    divided by the L0 file-size floor and clamped to [1, num_buckets]."""
+    from etl_api_bigquery_spark.lake import table as table_mod
+    t = make_table(spark, tmp_table_dir, buckets=8)
+    feed = change_feed(spark, n_events=6000, n_keys=200, n_epochs=2).cache()
+
+    def commit_of(epoch):
+        m = merge_cdc_batch(t, feed.filter(F.col("epoch") == epoch), epoch,
+                            "auto", mode="raw", auto_compact_deltas=10**6,
+                            l0_groups="auto")
+        return t._read_doc(m.version)
+
+    first = commit_of(0)
+    assert first["properties"]["l0_groups"] == 8
+    adds = first["adds"]
+    per_task = sum(a["bytes"] for a in adds) * 8 / len(adds)
+    # a floor a third of that task size, so the rule lands strictly inside
+    # [1, num_buckets] instead of at the clamp
+    floor = int(per_task // 3)
+    monkeypatch.setattr(table_mod, "L0_TARGET_FILE_BYTES", floor)
+    expected = max(1, min(8, int(per_task // floor)))
+    assert 1 < expected < 8
+    assert commit_of(1)["properties"]["l0_groups"] == expected
+    assert_replay_match(t.read(), expected_final_state(feed))
+    feed.unpersist()
 
 
 def test_raw_auto_l0_groups_end_to_end(spark, tmp_table_dir, tmp_path):
-    """l0_groups="auto" on a file-backed batch: resolves to a concrete G
-    (recorded in commit properties), keeps the replay sha-green, and updates
-    the trailing out/in ratio used by the next batch."""
+    """l0_groups="auto" on a file-backed batch: like a stream's first
+    trigger, the first append is bucket-pure (input file sizes are not
+    consulted), G is recorded in commit properties, and the replay stays
+    sha-green."""
     t = make_table(spark, tmp_table_dir)
     feed = change_feed(spark, n_events=6000, n_keys=200, n_epochs=2)
     fdir = str(tmp_path / "feed_auto")
@@ -326,8 +341,7 @@ def test_raw_auto_l0_groups_end_to_end(spark, tmp_table_dir, tmp_path):
     hist = [h for h in t.history() if h.get("properties", {})
             .get("txn_batch") == 0]
     g = hist[-1]["properties"]["l0_groups"]
-    assert 1 <= g <= t.num_buckets      # tiny batch -> coarse grouping
-    assert 0 < t.l0_out_ratio           # trailing ratio now measured
+    assert g == t.num_buckets           # first append: bucket-pure
     assert_replay_match(t.read(), expected_final_state(feed))
 
 

@@ -190,3 +190,35 @@ def test_session_checkpoint_manager_default_and_override(spark):
         assert s.conf.get(key) == fc_mgr
     finally:
         spark.conf.set(key, fs_mgr)
+
+
+@pytest.mark.parametrize("mode", ["raw", "cow"])
+def test_ingest_job_reports_live_rows(spark, tmp_path, monkeypatch, capsys,
+                                      mode):
+    """``jobs/ingest.py`` run in-process on a small generated feed reports
+    ``rows`` as the table's live rows, the oracle's key count — not the
+    manifest row count, which counts every L0 event of a raw table and the
+    tombstones of a folded one."""
+    import json
+    import pathlib
+    import runpy
+    import sys
+
+    from etl_api_bigquery_spark import session
+
+    job = pathlib.Path(__file__).resolve().parent.parent / "jobs" / "ingest.py"
+    monkeypatch.setattr(session, "get_spark", lambda **kw: spark)
+    monkeypatch.setattr(sys, "argv", [
+        str(job), "--generate", "3000", "--num-buckets", "4",
+        "--mode", mode, "--feed-dir", str(tmp_path / "feed"),
+        "--table-dir", str(tmp_path / "t"),
+        "--checkpoint", str(tmp_path / "ckpt"), "--verify"])
+    try:
+        runpy.run_path(str(job), run_name="__main__")
+    finally:
+        spark.sparkContext.setLogLevel("ERROR")
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    keys = expected_final_state(
+        spark.read.parquet(str(tmp_path / "feed"))).count()
+    assert out["keys_applied"] == 3000
+    assert out["rows"] == keys == out["replay_match"]["total"]
