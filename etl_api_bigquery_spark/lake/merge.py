@@ -343,12 +343,12 @@ def merge_cdc_batch(
       shuffle; G = table.num_buckets gives fully bucket-PURE L0), restoring
       per-bucket compaction/read locality at the cost of more, smaller files
       (tasks x G per trigger). ``l0_groups="auto"`` lets
-      :meth:`LakeTable.append_deltas` size G from the table's previous
-      append and a 16 MB L0 file-size floor (bucket-pure on the first
-      append). Compaction triggers when any bucket's delta
-      read amplification reaches ``auto_compact_deltas`` and folds only the
-      closure of the hot buckets' file spans (ungrouped L0 spans
-      everything, degrading to the full L0 fold).
+      :meth:`LakeTable.append_deltas` size G from the log's last append
+      and a 16 MB L0 file-size floor (bucket-pure on a table with none, so
+      a restarted driver keeps its sizing). Compaction triggers when any
+      bucket's delta read amplification reaches ``auto_compact_deltas`` and
+      folds only the closure of the hot buckets' file spans (ungrouped L0
+      spans everything, degrading to the full L0 fold).
     * ``mode="cow"`` — fold eagerly: the append is always bucket-pure
       (``l0_groups`` is ignored), then :meth:`LakeTable.compact_deltas`
       rewrites exactly the buckets it touched (widened only by mixed raw L0

@@ -10,8 +10,13 @@ table-format layer those systems provide, from scratch, with the same core
 guarantees:
 
 * **Atomic commits / snapshot isolation** — every mutation is a JSON commit
-  file in ``_log/`` created with O_EXCL (atomic on POSIX); readers replay the
-  log to a consistent file set.
+  doc in ``_log/`` at the next version, written and fsynced to a temp file
+  and published whole by ``os.link`` (which fails if the version exists), so
+  no reader ever sees a partial doc. Versions are dense from 0, so a reader
+  finds the head by probing ``version + 1`` forward from its newest snapshot;
+  only a cold object lists ``_log/``. :meth:`LakeTable.snapshot` is the one
+  reader of the log: one replay yields the file set, the schemas, the
+  transaction fences and the last L0 write.
 * **One commit rule** (:meth:`LakeTable._commit_files`) — a data commit is
   planned on a snapshot and first tries the version after it. If another
   writer took that version, the commit re-reads the log and retries at the
@@ -35,6 +40,7 @@ guarantees:
   and forced widening, .../extractor.py:244-280).
 * **Time travel** — ``read(version=N)`` replays the log to any retained commit.
 * **Transaction fencing** — commit properties carry ``(txn_app, txn_batch)``;
+  the snapshot keeps each app's highest batch, and
   :meth:`LakeTable.last_txn` lets an idempotent sink skip replayed batches
   (strengthens the reference watermark commit, src/loaders/watermark.py:141-185,
   to exactly-once).
@@ -114,7 +120,9 @@ class Snapshot:
     schemas: dict[int, T.StructType]         # schema_id -> schema (for old files)
     files: dict[str, FileEntry]              # rel path -> entry
     table_meta: dict[str, Any]
-    properties: dict[str, Any]
+    txns: dict[str, int]                     # txn_app -> highest txn_batch
+    # (out_bytes, n_files, G) of the newest merge_mor commit with adds
+    l0_write: tuple[int, int, int] | None
 
     @property
     def num_rows(self) -> int:
@@ -158,13 +166,6 @@ class LakeTable:
         self.spark = spark
         self.location = os.path.abspath(location)
         self._snap_cache: dict[int, Snapshot] = {}
-        self._doc_cache: dict[int, dict[str, Any]] = {}  # commit log JSON docs
-        # (out_bytes, n_files, G) of the last landed append_deltas write:
-        # sizes the next bucket_groups="auto" write
-        self._prev_l0_write: tuple[int, int, int] | None = None
-        # incremental fence state (see last_txn)
-        self._txn_best: dict[str, int] = {}
-        self._txn_hwm: int = -1
         # reusable Column templates keyed by key_cols (see bucket_expr)
         self._bucket_expr_cache: dict[tuple[str, ...], Any] = {}
         # background maintenance (async compaction) — at most one in flight
@@ -217,22 +218,28 @@ class LakeTable:
         return t
 
     def exists(self) -> bool:
-        return bool(self._commit_versions())
+        return os.path.exists(self._log_path(0))
 
     # ------------------------------------------------------------ commit log
 
     def _log_path(self, version: int) -> str:
         return os.path.join(self.location, _LOG_DIR, f"{version:020d}.json")
 
-    def _commit_versions(self) -> list[int]:
-        pat = os.path.join(self.location, _LOG_DIR, "*.json")
-        return sorted(int(os.path.basename(p)[:-5]) for p in glob.glob(pat))
-
     def current_version(self) -> int:
-        vs = self._commit_versions()
-        if not vs:
-            raise FileNotFoundError(f"no LakeTable at {self.location}")
-        return vs[-1]
+        """The newest committed version. Every commit lands at the version
+        after a snapshot's or after the head's, so versions are dense from
+        0: probe ``version + 1`` forward from the newest cached snapshot.
+        Only a cold object lists ``_log/``."""
+        if self._snap_cache:
+            v = max(self._snap_cache)
+        else:
+            docs = glob.glob(os.path.join(self.location, _LOG_DIR, "*.json"))
+            if not docs:
+                raise FileNotFoundError(f"no LakeTable at {self.location}")
+            v = max(int(os.path.basename(p)[:-5]) for p in docs)
+        while os.path.exists(self._log_path(v + 1)):
+            v += 1
+        return v
 
     def _write_commit(
         self,
@@ -259,86 +266,80 @@ class LakeTable:
             doc["table"] = table_meta
         path = self._log_path(version)
         payload = json.dumps(doc, separators=(",", ":")).encode()
+        # publish whole: a reader probing or listing _log/ must never load a
+        # created-but-unwritten doc, so the bytes are fsynced to a temp file
+        # first and os.link makes them the version in one step (it fails if
+        # another writer took the version)
+        tmp = f"{path}.{uuid.uuid4().hex}.tmp"
+        with open(tmp, "wb") as fh:
+            fh.write(payload)
+            fh.flush()
+            os.fsync(fh.fileno())
         try:
-            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+            os.link(tmp, path)
         except FileExistsError as e:
             raise CommitConflictError(f"version {version} already committed") from e
-        try:
-            os.write(fd, payload)
-            os.fsync(fd)
         finally:
-            os.close(fd)
-        self._snap_cache.pop(-1, None)
+            os.remove(tmp)
         self._maybe_write_checkpoint(version)
         return version
 
     def snapshot(self, version: int | None = None) -> Snapshot:
-        vs = self._commit_versions()
-        if not vs:
-            raise FileNotFoundError(f"no LakeTable at {self.location}")
-        v = vs[-1] if version is None else version
-        if v not in vs:
-            raise ValueError(f"version {v} not in log (have {vs[0]}..{vs[-1]})")
-        if v in self._snap_cache:
-            return self._snap_cache[v]
-        # incremental build: extend the highest cached snapshot below v with
-        # only the missing commit docs. The streaming merge path takes a new
-        # snapshot every trigger, so the from-scratch replay would be
-        # O(commits x files) per batch — quadratic over a long-running
-        # ingest — while this is O(new commits + live files) driver time.
-        base = max((bv for bv in self._snap_cache if bv < v), default=None)
-        if base is not None:
-            prev = self._snap_cache[base]
-            files: dict[str, FileEntry] = dict(prev.files)
-            schemas: dict[int, T.StructType] = dict(prev.schemas)
-            schema_id = prev.schema_id
-            schema: T.StructType | None = prev.schema
-            table_meta: dict[str, Any] = prev.table_meta
-            props: dict[str, Any] = prev.properties
-            todo = [cv for cv in vs if base < cv <= v]
-        else:
-            # COLD path (fresh driver): seed from the newest manifest
-            # checkpoint at or below v, then replay only the tail — without
-            # this a restart after 10^5 ingest commits re-reads every commit
-            # doc (the Delta/Iceberg checkpoint mechanism, from scratch)
-            files = {}
-            schemas = {}
-            schema_id = 0
-            schema = None
-            table_meta = {}
-            props = {}
-            cp_from = -1
-            cp = self._load_checkpoint(v)
-            if cp is not None:
-                files = {p: FileEntry.from_json(d)
-                         for p, d in cp["files"].items()}
-                schemas = {int(sid): T.StructType.fromJson(sj)
-                           for sid, sj in cp["schemas"].items()}
-                schema_id = cp["schema_id"]
-                schema = schemas[schema_id]
-                table_meta = cp["table"]
-                props = cp.get("properties", {})
-                cp_from = cp["version"]
-            todo = [cv for cv in vs if cp_from < cv <= v]
-        for cv in todo:
+        """Table state at ``version`` (default: the head), replayed from the
+        commit log. This is the log's one reader: the same per-doc loop that
+        applies adds and removes keeps each ``txn_app``'s highest
+        ``txn_batch`` (``txns``, read by :meth:`last_txn`) and the size of
+        the newest ``merge_mor`` write (``l0_write``, read by
+        ``append_deltas(bucket_groups="auto")``).
+
+        Incremental: extend the newest cached snapshot below ``version`` with
+        only the newer commit docs. The streaming merge path takes a new
+        snapshot every trigger, so a from-scratch replay would be
+        O(commits x files) per batch — quadratic over a long-running ingest
+        — while this is O(new commits + live files) driver time. A cold
+        object (fresh driver) seeds from the newest manifest checkpoint at
+        or below ``version`` and replays only the tail. The head is found
+        by the probe of :meth:`current_version`, so a warm call lists no
+        directory."""
+        v = self.current_version() if version is None else version
+        cached = dict(self._snap_cache)   # other threads add and evict
+        if v in cached:
+            return cached[v]
+        if version is not None and (v < 0
+                                    or not os.path.exists(self._log_path(v))):
+            raise ValueError(f"version {v} not in log")
+        base = max((bv for bv in cached if bv < v), default=None)
+        prev = cached[base] if base is not None else self._load_checkpoint(v)
+        files, schemas = dict(prev.files), dict(prev.schemas)
+        schema_id, schema, table_meta = (prev.schema_id, prev.schema,
+                                         prev.table_meta)
+        txns, l0_write = dict(prev.txns), prev.l0_write
+        for cv in range(prev.version + 1, v + 1):
             doc = self._read_doc(cv)
             schema = T.StructType.fromJson(doc["schema"])
             schema_id = doc["schema_id"]
             schemas[schema_id] = schema
             if "table" in doc:
                 table_meta = doc["table"]
-            props = doc.get("properties", {})
             for rm in doc["removes"]:
                 files.pop(rm, None)
             for a in doc["adds"]:
                 e = FileEntry.from_json(a)
                 files[e.path] = e
-        snap = Snapshot(v, schema_id, schema, schemas, files, table_meta, props)
+            props = doc.get("properties", {})
+            app, batch = props.get("txn_app"), props.get("txn_batch")
+            if app is not None and batch is not None:
+                txns[app] = max(int(batch), txns.get(app, int(batch)))
+            if doc["action"] == "merge_mor" and doc["adds"]:
+                l0_write = (sum(a["bytes"] for a in doc["adds"]),
+                            len(doc["adds"]), int(props.get("l0_groups") or 1))
+        snap = Snapshot(v, schema_id, schema, schemas, files, table_meta,
+                        txns, l0_write)
         self._snap_cache[v] = snap
         # bound driver memory on long ingests: keep the newest snapshots only
         # (older versions rebuild from scratch on the rare time-travel read)
         while len(self._snap_cache) > self.SNAP_CACHE_MAX:
-            del self._snap_cache[min(self._snap_cache)]
+            self._snap_cache.pop(min(self._snap_cache), None)
         return snap
 
     SNAP_CACHE_MAX = 8
@@ -355,28 +356,37 @@ class LakeTable:
         pat = os.path.join(self._checkpoint_dir(), "*.json")
         return sorted(int(os.path.basename(p)[:-5]) for p in glob.glob(pat))
 
-    def _load_checkpoint(self, max_version: int) -> dict[str, Any] | None:
-        """Newest checkpoint doc at or below max_version, or None."""
+    def _load_checkpoint(self, max_version: int) -> Snapshot:
+        """The state saved by the newest checkpoint at or below max_version,
+        or the empty state before version 0 if there is none."""
+        empty = Snapshot(-1, 0, None, {}, {}, {}, {}, None)
         cands = [c for c in self._checkpoint_versions() if c <= max_version]
         if not cands:
-            return None
+            return empty
         path = os.path.join(self._checkpoint_dir(), f"{cands[-1]:020d}.json")
         try:
             with open(path) as fh:
-                return json.load(fh)
+                cp = json.load(fh)
         except (OSError, json.JSONDecodeError):
-            return None      # torn/corrupt checkpoint: fall back to full replay
+            return empty     # torn/corrupt checkpoint: fall back to full replay
+        schemas = {int(sid): T.StructType.fromJson(sj)
+                   for sid, sj in cp["schemas"].items()}
+        return Snapshot(
+            cp["version"], cp["schema_id"], schemas[cp["schema_id"]], schemas,
+            {p: FileEntry.from_json(d) for p, d in cp["files"].items()},
+            cp["table"], {k: int(b) for k, b in cp.get("txn_best", {}).items()},
+            tuple(cp["l0_write"]) if cp.get("l0_write") else None)
 
     def _maybe_write_checkpoint(self, version: int) -> None:
         """Every CHECKPOINT_INTERVAL commits, persist the full snapshot state
-        (live files, all schemas, table meta, fence high-waters) so a cold
-        driver's first snapshot()/last_txn() is O(interval), not O(commits).
-        Best-effort and crash-safe: written to a temp file then atomically
-        renamed; a missing/torn checkpoint only costs a longer replay."""
+        (live files, all schemas, table meta, fence high-waters, the last L0
+        write) so a cold driver's first snapshot() is O(interval), not
+        O(commits). Best-effort and crash-safe: written to a temp file then
+        atomically renamed; a missing/torn checkpoint only costs a longer
+        replay."""
         if version <= 0 or version % self.CHECKPOINT_INTERVAL != 0:
             return
         snap = self.snapshot(version)
-        self.last_txn("")            # refresh the fence scan to `version`
         doc = {
             "version": version,
             "schema_id": snap.schema_id,
@@ -384,8 +394,8 @@ class LakeTable:
                         for sid, s in snap.schemas.items()},
             "files": {p: e.to_json() for p, e in snap.files.items()},
             "table": snap.table_meta,
-            "properties": snap.properties,
-            "txn_best": dict(self._txn_best),
+            "txn_best": snap.txns,
+            "l0_write": snap.l0_write,
         }
         os.makedirs(self._checkpoint_dir(), exist_ok=True)
         path = os.path.join(self._checkpoint_dir(), f"{version:020d}.json")
@@ -401,17 +411,13 @@ class LakeTable:
                 pass
 
     def _read_doc(self, version: int) -> dict[str, Any]:
-        """Commit log docs are immutable once written — cache them so the
-        per-batch fence check is O(new commits), not O(log size)."""
-        if version not in self._doc_cache:
-            with open(self._log_path(version)) as fh:
-                self._doc_cache[version] = json.load(fh)
-        return self._doc_cache[version]
+        with open(self._log_path(version)) as fh:
+            return json.load(fh)
 
     def history(self) -> list[dict[str, Any]]:
         self.join_pending_commit()
         out = []
-        for cv in self._commit_versions():
+        for cv in range(self.current_version() + 1):
             doc = self._read_doc(cv)
             out.append({k: doc[k] for k in
                         ("version", "action", "schema_id", "properties", "commit_ts_ms")})
@@ -420,33 +426,15 @@ class LakeTable:
     def last_txn(self, app_id: str) -> int | None:
         """Highest txn_batch committed for app_id — the exactly-once fence.
 
-        Incremental: only commit docs newer than the last scan are read, so
-        the per-trigger fence check is O(new commits) instead of O(log size)
-        — the full-history rescan was a per-batch driver-serial cost that
-        grew linearly with ingest age. Correct under concurrent writers
-        because commit docs are immutable and versions are monotonic.
-        A cold driver seeds the scan from the newest manifest checkpoint's
-        fence high-waters instead of re-reading the whole log."""
-        if self._txn_hwm < 0:
-            cp = self._load_checkpoint(self.current_version())
-            if cp is not None and "txn_best" in cp:
-                self._txn_best = {k: int(b)
-                                  for k, b in cp["txn_best"].items()}
-                self._txn_hwm = int(cp["version"])
-        for cv in self._commit_versions():
-            if cv <= self._txn_hwm:
-                continue
-            p = self._read_doc(cv).get("properties", {})
-            app = p.get("txn_app")
-            if app is not None and p.get("txn_batch") is not None:
-                b = int(p["txn_batch"])
-                cur = self._txn_best.get(app)
-                self._txn_best[app] = b if cur is None or b > cur else cur
-            self._txn_hwm = cv
-        best = self._txn_best.get(app_id)
-        # an async commit finalizer in flight counts toward the fence (its
-        # commit is ordered before any later batch's — see append_deltas)
+        Read from the head snapshot's ``txns``, which the log replay keeps,
+        so the per-trigger fence check reads only the commit docs newer than
+        the last snapshot and lists no directory. An async commit finalizer
+        in flight counts toward the fence: its commit is ordered before any
+        later batch's (see :meth:`append_deltas`)."""
+        # the pending fence is read first: it is cleared only once its commit
+        # doc is in the log, so the snapshot taken after it sees that doc
         pend = self._pending_txn
+        best = self.snapshot().txns.get(app_id)
         if pend is not None and pend[0] == app_id and (best is None
                                                        or pend[1] > best):
             best = pend[1]
@@ -848,9 +836,11 @@ class LakeTable:
         ``bucket_groups``: bucket-clustered L0 — see
         :meth:`_write_data_files`. ``"auto"`` picks the largest G in [1,
         num_buckets] whose files stay at or above ``L0_TARGET_FILE_BYTES``
-        at the last landed append's bytes per write task (``out_bytes x
-        G_prev / n_files``); num_buckets before the first append. The
-        commit records G as ``l0_groups``. An append removes nothing, so under
+        at the bytes per write task (``out_bytes x G_prev / n_files``) of
+        the log's newest ``merge_mor`` commit with adds (the snapshot's
+        ``l0_write``), so G survives a restart; num_buckets if the log has
+        none. Every commit records its G as ``l0_groups`` (1 for None, which
+        writes ungrouped files). An append removes nothing, so under
         :meth:`_commit_files` a lost commit race is always retried: delta
         writes are safe concurrent with background compaction.
 
@@ -885,12 +875,11 @@ class LakeTable:
         if bucket_groups == "auto":
             nb = int(snap.table_meta["num_buckets"])
             bucket_groups = nb
-            prev = self._prev_l0_write
-            if prev is not None:
-                out_bytes, n_files, g_prev = prev
+            if snap.l0_write is not None:
+                out_bytes, n_files, g_prev = snap.l0_write
                 g = int(out_bytes * g_prev / n_files // L0_TARGET_FILE_BYTES)
                 bucket_groups = max(1, min(nb, g))
-            props0["l0_groups"] = bucket_groups
+        props0["l0_groups"] = bucket_groups or 1
         t0 = time.monotonic()
         abs_dir, rel_dir = self._run_write_job(
             df, snap.version + 1, snap.schema, "delta", bucket_groups)
@@ -914,9 +903,6 @@ class LakeTable:
                 # landed: the log itself now carries the fence; failed: the
                 # batch is not in the table, so it must not count as fenced
                 self._pending_txn = None
-            if entries:
-                self._prev_l0_write = (phases["out_bytes"], len(entries),
-                                       bucket_groups or 1)
             if post_commit is not None:
                 post_commit(v, phases)
             return v
@@ -1156,9 +1142,9 @@ class LakeTable:
         pointing at missing files."""
         self.join_pending_commit()
         self.join_maintenance()
-        vs = self._commit_versions()
+        head = self.current_version()
         keep = set()
-        for v in vs[-keep_versions:]:
+        for v in range(max(0, head - keep_versions + 1), head + 1):
             keep.update(self.snapshot(v).files.keys())
         removed = 0
         for fp in glob.glob(os.path.join(self.location, _DATA_DIR, "**", "*.parquet"),

@@ -64,8 +64,8 @@ class CdcStreamRunner:
     prefilter: bool = False                # see merge_cdc_batch
     auto_compact_deltas: int = 16
     # raw L0 clustering: None = adaptive ("auto" — LakeTable.append_deltas
-    # sizes the group count from the previous append's bytes per write task
-    # and a 16 MB L0 file-size floor; bucket-pure on the first trigger); an
+    # sizes the group count from the log's last append's bytes per write
+    # task and a 16 MB L0 file-size floor; bucket-pure on a new table); an
     # int pins the group count (table.num_buckets = always bucket-pure, 1 =
     # unclustered single-file-per-task L0)
     l0_groups: int | str | None = None

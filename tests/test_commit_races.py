@@ -178,3 +178,39 @@ def test_append_racing_an_append_lands_at_next_version(spark, tmp_table_dir):
     assert [h["action"] for h in t.history()] == ["create", "append", "append"]
     assert sorted(r.path for r in t.read().collect()) == sorted(
         r[1] for r in rows)
+
+
+def test_readers_never_load_a_partial_commit_doc(spark, tmp_table_dir,
+                                                 monkeypatch):
+    """A commit doc is published whole. A second LakeTable at the same
+    location loops snapshot() and last_txn() while a writer thread commits
+    (as the lake-commit finalizer does while the stream's thread reads):
+    it never loads a created-but-unwritten doc, and it ends at the head."""
+    # fsync does not shape the race (it follows the write); skipping it lets
+    # the writer make thousands of commits in seconds
+    monkeypatch.setattr(os, "fsync", lambda fd: None)
+    t = LakeTable.create(spark, os.path.join(tmp_table_dir, "w"), SILVER,
+                         key_cols=KEYS, num_buckets=4)
+    snap0, n, done = t.snapshot(), 4000, threading.Event()
+
+    def write():
+        try:
+            for v in range(1, n + 1):
+                t._write_commit(v, "noop", snap0.schema, snap0.schema_id,
+                                [], [], {"txn_app": "w", "txn_batch": v})
+        finally:
+            done.set()
+
+    reader, errors = LakeTable.load(spark, t.location), []
+    writer = threading.Thread(target=write)
+    writer.start()
+    while not done.is_set():
+        try:
+            reader.snapshot()
+            reader.last_txn("w")
+        except Exception as e:      # noqa: BLE001 — every failure counts
+            errors.append(repr(e))
+    writer.join(timeout=60)
+    assert not writer.is_alive()
+    assert errors == []
+    assert reader.snapshot().version == n and reader.last_txn("w") == n

@@ -210,7 +210,8 @@ def test_commit_log_checkpoint_bounds_cold_replay(spark, tmp_table_dir,
     """A manifest checkpoint every K commits bounds the COLD snapshot replay
     to checkpoint + <= K tail docs (the Delta/Iceberg checkpoint mechanism):
     at 10^5 ingest commits a restart must not re-read the whole log. The
-    fence scan seeds from the checkpoint's txn high-waters the same way."""
+    fences come from the same replay: the checkpoint's txn high-waters plus
+    the tail docs, with no scan of their own."""
     monkeypatch.setattr(LakeTable, "CHECKPOINT_INTERVAL", 10)
     t = make_table(spark, tmp_table_dir)
     t.append(rows_df(spark, 50))                         # v1: real data
@@ -230,6 +231,7 @@ def test_commit_log_checkpoint_bounds_cold_replay(spark, tmp_table_dir,
     assert snap.files == snap1.files                     # state from checkpoint
     assert reads and min(reads) == 31 and len(reads) == 5   # tail only
     assert cold.last_txn("ck") == 35                     # fence seeded + tail
+    assert len(reads) == 5                               # by the same replay
     assert cold.read().count() == 50                     # data readable
 
 

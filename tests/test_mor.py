@@ -6,6 +6,7 @@ files write bucket-pure L0 (``l0_groups=num_buckets``)."""
 import os
 import re
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -321,6 +322,88 @@ def test_l0_groups_auto_sizes_from_the_previous_append(spark, tmp_table_dir,
     expected = max(1, min(8, int(per_task // floor)))
     assert 1 < expected < 8
     assert commit_of(1)["properties"]["l0_groups"] == expected
+    assert_replay_match(t.read(), expected_final_state(feed))
+    feed.unpersist()
+
+
+@pytest.mark.parametrize("checkpointed", [False, True])
+def test_l0_groups_auto_survives_a_restart(spark, tmp_table_dir, monkeypatch,
+                                           checkpointed):
+    """A restarted driver's first l0_groups="auto" append takes G from the
+    log's last merge_mor commit (the snapshot's ``l0_write``), not
+    num_buckets again — also when that commit sits behind a manifest
+    checkpoint, so the cold snapshot never reads its doc."""
+    from etl_api_bigquery_spark.lake import table as table_mod
+    if checkpointed:
+        monkeypatch.setattr(LakeTable, "CHECKPOINT_INTERVAL", 1)
+    t = make_table(spark, tmp_table_dir, buckets=8)
+    feed = change_feed(spark, n_events=6000, n_keys=200, n_epochs=2).cache()
+
+    def merge(table, epoch):
+        m = merge_cdc_batch(table, feed.filter(F.col("epoch") == epoch),
+                            epoch, "auto", mode="raw",
+                            auto_compact_deltas=10**6, l0_groups="auto")
+        return table._read_doc(m.version)
+
+    first = merge(t, 0)
+    assert first["properties"]["l0_groups"] == 8
+    assert (first["version"] in t._checkpoint_versions()) == checkpointed
+    adds = first["adds"]
+    per_task = sum(a["bytes"] for a in adds) * 8 / len(adds)
+    floor = int(per_task // 3)          # G lands inside (1, num_buckets)
+    monkeypatch.setattr(table_mod, "L0_TARGET_FILE_BYTES", floor)
+    expected = max(1, min(8, int(per_task // floor)))
+    assert 1 < expected < 8
+    restarted = LakeTable.load(spark, t.location)
+    assert merge(restarted, 1)["properties"]["l0_groups"] == expected
+    assert_replay_match(restarted.read(), expected_final_state(feed))
+    feed.unpersist()
+
+
+def test_warm_merge_log_work_is_constant_on_a_long_log(spark, tmp_table_dir,
+                                                       monkeypatch):
+    """Log work per trigger does not grow with the log. On a log of 10^4
+    commits, a warm raw merge_cdc_batch (async finalize and async
+    compaction on, as the stream runs it) lists ``_log/`` zero times — the
+    head is found by probing versions — and reads only commit docs newer
+    than its last snapshot."""
+    t = make_table(spark, tmp_table_dir)
+    snap0 = t.snapshot()
+    with monkeypatch.context() as m:
+        m.setattr(os, "fsync", lambda fd: None)     # seconds, not minutes
+        for v in range(1, 10_001):
+            t._write_commit(v, "noop", snap0.schema, snap0.schema_id, [], [],
+                            {})
+    feed = change_feed(spark, n_events=3000, n_keys=100, n_epochs=2).cache()
+    t = LakeTable.load(spark, t.location)
+
+    def merge(epoch):
+        merge_cdc_batch(t, feed.filter(F.col("epoch") == epoch), epoch, "o1",
+                        mode="raw", auto_compact_deltas=1, l0_groups=4,
+                        compact_async=True, async_finalize=True)
+        t.join_pending_commit()
+        t.join_maintenance()
+
+    merge(0)                                         # cold: one listing
+    before = t.snapshot().version
+    listings, reads = [], []
+    for attr in ("scandir", "listdir"):
+        orig = getattr(os, attr)
+
+        def counted(path=".", *a, _orig=orig, **kw):
+            if os.fspath(path).rstrip("/").endswith("/_log"):
+                listings.append(path)
+            return _orig(path, *a, **kw)
+        monkeypatch.setattr(os, attr, counted)
+    read_doc = LakeTable._read_doc
+    monkeypatch.setattr(LakeTable, "_read_doc",
+                        lambda self, v: (reads.append(v), read_doc(self, v))[1])
+    merge(1)
+    head = t.snapshot().version
+    monkeypatch.undo()
+    assert listings == []
+    assert head > before + 1                         # the merge and its fold
+    assert sorted(reads) == list(range(before + 1, head + 1))
     assert_replay_match(t.read(), expected_final_state(feed))
     feed.unpersist()
 
