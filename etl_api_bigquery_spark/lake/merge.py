@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .table import (BUCKET_COL, LSN_COL, MIXED_BUCKET, OP_COL, LakeTable,
+from .table import (BUCKET_COL, MIXED_BUCKET, LakeTable, session_expr_cache,
                     widen_type)
 
 # CDC envelope columns that never land in the silver table.
@@ -71,11 +71,7 @@ class MergeMetrics:
         return d
 
 
-def lww_prefilter(
-    events: DataFrame,
-    key_cols: list[str],
-    lsn_col: str = "lsn",
-) -> DataFrame:
+def lww_prefilter(events: DataFrame, key_cols: list[str]) -> DataFrame:
     """Bandwidth-reducing first pass of LWW dedup: find each key's winning
     (max) LSN over a NARROW shuffle of just ``(key_hash, lsn)`` (Catalyst
     column-prunes the wide payload out of this subtree), compress the winner
@@ -119,9 +115,8 @@ def lww_prefilter(
     spurious PASSES (folded downstream, see above); a key's own winner always
     matches its own token.
     """
-    from .table import session_expr_cache
     cache = session_expr_cache(events.sparkSession)
-    ck = ("lww_prefilter", tuple(key_cols), lsn_col)
+    ck = ("lww_prefilter", tuple(key_cols))
     tpl = cache.get(ck)
     if tpl is None:
         kh = F.xxhash64(*[F.coalesce(F.col(k).cast("string"),
@@ -131,9 +126,9 @@ def lww_prefilter(
         # the explicit isNotNull filter below preserves the documented
         # "NULL-lsn events are filtered out here" contract.
         tpl = {"wtok": F.xxhash64(kh, F.col("_w_lsn")).alias("_wtok"),
-               "ltok": F.xxhash64(kh, F.col(lsn_col)).alias("_wtok"),
-               "notnull": F.col(lsn_col).isNotNull(),
-               "agg": F.max(lsn_col).alias("_w_lsn")}
+               "ltok": F.xxhash64(kh, F.col("lsn")).alias("_wtok"),
+               "notnull": F.col("lsn").isNotNull(),
+               "agg": F.max("lsn").alias("_w_lsn")}
         cache[ck] = tpl
     # Group by the REAL keys, then project the token for the broadcast
     # relation. Grouping by the hash directly would merge two colliding keys
@@ -151,32 +146,7 @@ def lww_prefilter(
                      how="left_semi").drop("_wtok")
 
 
-def _delta_select_exprs(table: LakeTable, snap: Any, present_cols: set[str],
-                        lsn_col: str, op_col: str) -> list:
-    """Projection list for a delta write: table schema fields (NULL-padded /
-    cast) + (_bucket, _lsn, _op). Cached per (table, schema, input columns)
-    on the session — the list is identical every micro-batch, and rebuilding
-    it costs ~5 py4j round trips per column of driver-serial time."""
-    from .table import session_expr_cache
-    cache = session_expr_cache(table.spark)
-    ck = ("delta_select", table.location, snap.schema_id,
-          tuple(sorted(present_cols)), lsn_col, op_col)
-    exprs = cache.get(ck)
-    if exprs is None:
-        exprs = [
-            (F.col(f.name).cast(f.dataType).alias(f.name)
-             if f.name in present_cols
-             else F.lit(None).cast(f.dataType).alias(f.name))
-            for f in snap.schema.fields
-        ] + [F.col(BUCKET_COL),
-             F.col(lsn_col).cast("long").alias(LSN_COL),
-             F.col(op_col).alias(OP_COL)]
-        cache[ck] = exprs
-    return exprs
-
-
-def evolve_for_batch(table: LakeTable, batch: DataFrame,
-                     envelope_cols: tuple[str, ...] = ENVELOPE_COLS) -> bool:
+def evolve_for_batch(table: LakeTable, batch: DataFrame) -> bool:
     """Diff the batch's data columns against the table schema and apply
     additive evolution (new column -> added with NULL backfill; numeric type
     widened per the int->long->double lattice). Returns True if evolved.
@@ -189,7 +159,7 @@ def evolve_for_batch(table: LakeTable, batch: DataFrame,
     out_fields = list(snap.schema.fields)
     changed = False
     for f in batch.schema.fields:
-        if f.name in envelope_cols or f.name == BUCKET_COL:
+        if f.name in ENVELOPE_COLS or f.name == BUCKET_COL:
             continue
         if f.name not in cur:
             out_fields.append(T.StructField(f.name, f.dataType, True))
@@ -309,10 +279,6 @@ def merge_cdc_batch(
     events: DataFrame,
     batch_id: int = -1,
     txn_app: str | None = None,
-    lsn_col: str = "lsn",
-    op_col: str = "op",
-    allow_schema_evolution: bool = True,
-    extra_props: dict[str, Any] | None = None,
     mode: str = "cow",
     auto_compact_deltas: int = 16,
     prefilter: bool = False,
@@ -328,13 +294,17 @@ def merge_cdc_batch(
     totally ordered per key** — NULL-lsn rows are undefined input (the
     prefilter drops them; read-side resolution orders them last).
 
+    Input contract: ``events`` carry the envelope's ``lsn`` and ``op``
+    (:data:`ENVELOPE_COLS`). They reach :meth:`LakeTable.append_deltas` as
+    scanned (prefiltered if asked, an Observation counting ``op``), and its
+    one projection (:meth:`LakeTable._layout`) builds the file layout.
+
     There is one write path: the batch is appended exactly as scanned (NO
-    shuffle, NO dedup; bucket column computed map-side) as LWW-resolvable
-    delta files, with the fence and lineage in the same commit. Reads
-    resolve max-LSN per key (in-batch duplicates too) and drop tombstones.
-    ``mode`` picks when the touched buckets are folded back into base files
-    (both modes yield identical read results; any other ``mode`` raises
-    ``ValueError``):
+    shuffle, NO dedup) as LWW-resolvable delta files, with the fence and
+    lineage in the same commit. Reads resolve max-LSN per key (in-batch
+    duplicates too) and drop tombstones. ``mode`` picks when the touched
+    buckets are folded back into base files (both modes yield identical
+    read results; any other ``mode`` raises ``ValueError``):
 
     * ``mode="raw"`` — LSM-style: fold lazily. O(batch) write cost
       regardless of table size — the high-throughput CDC-ingest path (the
@@ -408,12 +378,10 @@ def merge_cdc_batch(
             m.duration_sec = time.monotonic() - t0
             return m
 
-    if allow_schema_evolution:
-        m.schema_evolved = evolve_for_batch(table, events)
+    m.schema_evolved = evolve_for_batch(table, events)
 
     from pyspark.sql import Observation
-    from .table import session_expr_cache
-    props: dict[str, Any] = dict(extra_props or {})
+    props: dict[str, Any] = {}
     if txn_app is not None:
         props["txn_app"] = txn_app
         props["txn_batch"] = batch_id
@@ -424,23 +392,20 @@ def merge_cdc_batch(
         l0_groups = table.num_buckets
         table.join_pending_commit()
         table.join_maintenance()
-    snap0 = table.snapshot()
-    src = (lww_prefilter(events, table.key_cols, lsn_col) if prefilter
-           else events)
-    raw = src.withColumn(BUCKET_COL, table.bucket_expr())
-    delta = raw.select(*_delta_select_exprs(
-        table, snap0, set(events.columns) | {BUCKET_COL}, lsn_col, op_col))
+        snap0 = table.snapshot()
     # counts ride on the write job via Observation — no extra stats pass
     cache = session_expr_cache(events.sparkSession)
     obs_aggs = cache.get(("raw_obs",))
     if obs_aggs is None:
         obs_aggs = [
             F.count(F.lit(1)).alias("keys"),
-            F.sum(F.when(F.col(OP_COL) == OP_DELETE, 1).otherwise(0)
+            F.sum(F.when(F.col("op") == OP_DELETE, 1).otherwise(0)
                   ).alias("deletes")]
         cache[("raw_obs",)] = obs_aggs
     obs = Observation()
-    delta = delta.observe(obs, *obs_aggs)
+    # the batch as scanned: append_deltas projects it onto the file layout
+    batch = (lww_prefilter(events, table.key_cols) if prefilter
+             else events).observe(obs, *obs_aggs)
     touched: list[int] = []
 
     def lineage_props(adds):
@@ -507,7 +472,7 @@ def merge_cdc_batch(
         # version/lineage/phases fields settle when the commit lands —
         # callers read them after LakeTable.join_pending_commit().
         m.extra["async_commit"] = True
-    table.append_deltas(delta, properties=props, bucket_groups=l0_groups,
+    table.append_deltas(batch, properties=props, bucket_groups=l0_groups,
                         props_fn=lineage_props,
                         async_finalize=async_finalize, post_commit=_post)
     m.duration_sec = time.monotonic() - t0

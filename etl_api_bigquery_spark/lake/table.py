@@ -166,8 +166,8 @@ class LakeTable:
         self.spark = spark
         self.location = os.path.abspath(location)
         self._snap_cache: dict[int, Snapshot] = {}
-        # reusable Column templates keyed by key_cols (see bucket_expr)
-        self._bucket_expr_cache: dict[tuple[str, ...], Any] = {}
+        # reusable Column templates (see bucket_expr and _layout)
+        self._exprs: dict[tuple, Any] = {}
         # background maintenance (async compaction) — at most one in flight
         self._maint_pool = None
         self._maint_future = None
@@ -457,17 +457,17 @@ class LakeTable:
         (the reference tolerates NULL-keyed legacy rows and repairs them in
         MERGE, loader.py:517-519).
         """
-        kc = tuple(key_cols or self.key_cols)
-        expr = self._bucket_expr_cache.get(kc)
+        kc = ("bucket", tuple(key_cols or self.key_cols))
+        expr = self._exprs.get(kc)
         if expr is None:
             # Column templates are unresolved expressions — safe to reuse
             # across micro-batches; rebuilding them is ~10 py4j round trips
             # of per-trigger driver-serial time
             cols = [F.coalesce(F.col(c).cast("string"), F.lit("\x00null"))
-                    for c in kc]
+                    for c in kc[1]]
             expr = F.pmod(F.xxhash64(*cols),
                           F.lit(self.num_buckets)).cast("int")
-            self._bucket_expr_cache[kc] = expr
+            self._exprs[kc] = expr
         return expr
 
     # ----------------------------------------------------------------- reads
@@ -517,7 +517,6 @@ class LakeTable:
         version: int | None = None,
         buckets: Iterable[int] | None = None,
         with_bucket: bool = False,
-        skip_predicates: list[tuple[str, str, Any]] | None = None,
     ) -> DataFrame:
         """Snapshot read. ``buckets`` prunes to the given bucket ids using the
         manifest (no file even opened for pruned buckets).
@@ -532,14 +531,6 @@ class LakeTable:
         self.join_pending_commit()        # read-your-writes under async commit
         snap = self.snapshot(version)
         entries = snap.files_for_buckets(buckets)
-        if skip_predicates:
-            # NOTE: stats skipping is only sound when no delta files overlap
-            # the pruned set (a delta could revive/delete a key outside the
-            # base file's range); enforced here.
-            if any(e.kind == "delta" for e in entries):
-                raise ValueError("skip_predicates requires compacted buckets "
-                                 "(run compact_deltas first)")
-            entries = self.prune_files(entries, skip_predicates)
         df = self._read_entries(snap, entries)
         if any(e.kind == "delta" for e in entries):
             df = self._resolve_lww(df)
@@ -608,7 +599,7 @@ class LakeTable:
         self, df: DataFrame, version: int, schema: T.StructType, schema_id: int,
         kind: str = "base", bucket_groups: int | None = None,
     ) -> list[FileEntry]:
-        """Write df (must already carry BUCKET_COL) as parquet data files.
+        """Write df as parquet data files in the layout of :meth:`_layout`.
 
         ``kind="base"``: repartition by bucket, then ``partitionBy`` on a
         duplicated ``_bkt`` column yields one directory per bucket;
@@ -639,32 +630,61 @@ class LakeTable:
         """The Spark-job half of :meth:`_write_data_files`: materialize the
         data files and return ``(abs_dir, rel_dir)`` without touching the
         parquet footers — so an async finalizer can harvest + commit off
-        the critical path (see ``append_deltas``)."""
-        out = df
-        if LSN_COL not in out.columns:
-            out = out.withColumn(LSN_COL, F.lit(0).cast("long"))
-        if OP_COL not in out.columns:
-            out = out.withColumn(OP_COL, F.lit("U"))
-        # conform column order/types to the table schema + engine cols
-        out = _conform(out, _schema_with_engine_cols(schema))
+        the critical path (see ``append_deltas``).
+
+        Input contract: ``df`` carries user columns and either the engine
+        columns or, for ``kind="delta"``, the envelope's ``lsn`` and ``op``;
+        :meth:`_layout` fills in the rest."""
+        out, part = self._layout(df, schema, kind, bucket_groups)
         rel_dir = f"{_DATA_DIR}/c{version:010d}-{uuid.uuid4().hex[:8]}"
         abs_dir = os.path.join(self.location, rel_dir)
-        part = None
         if kind == "base":
             out = out.repartition(self.num_buckets, F.col(BUCKET_COL))
-            out = out.withColumn("_bkt", F.col(BUCKET_COL))
-            part = "_bkt"
-        elif bucket_groups and bucket_groups > 1:
-            gsz = -(-self.num_buckets // int(bucket_groups))   # ceil
-            out = out.withColumn(
-                "_bgrp", (F.col(BUCKET_COL) / F.lit(gsz)).cast("int"))
-            part = "_bgrp"
         # no _SUCCESS marker: the commit doc in _log/ is the table's success
         # marker and nothing reads data/**/_SUCCESS (one file op less a write)
         w = out.write.mode("overwrite").option(
             "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
         (w.partitionBy(part) if part else w).parquet(abs_dir)
         return abs_dir, rel_dir
+
+    def _layout(self, df: DataFrame, schema: T.StructType, kind: str,
+                bucket_groups: int | None) -> tuple[DataFrame, str | None]:
+        """Project ``df`` onto the data-file layout in ONE select, for every
+        data write, and name its partition column (None: no partitionBy).
+        User columns are NULL-padded or cast to ``schema`` (the reference's
+        silver load, gcs/loader.py:307-345). Each engine column is the
+        frame's own, else: ``_bucket`` from :meth:`bucket_expr`; ``_lsn`` and
+        ``_op`` from the CDC envelope's ``lsn`` (as long) and ``op`` for
+        ``kind="delta"``, otherwise ``0`` and ``'U'``. Last comes ``_bkt``
+        (base) or ``_bgrp`` (grouped delta), see :meth:`_write_data_files`.
+        The select list is cached: rebuilding it would cost py4j round trips
+        per column on every micro-batch."""
+        key = ("layout", df.schema, schema, kind, bucket_groups)
+        got = self._exprs.get(key)
+        if got is None:
+            have = {f.name: f.dataType for f in df.schema.fields}
+
+            def envelope(name: str, base):
+                return (F.col(name) if kind == "delta" and name in have
+                        else F.lit(base))
+
+            bucket = (F.col(BUCKET_COL) if BUCKET_COL in have
+                      else self.bucket_expr())
+            default = {BUCKET_COL: bucket, LSN_COL: envelope("lsn", 0),
+                       OP_COL: envelope("op", "U")}
+            cols = [_fit(have, f, default.get(f.name, F.lit(None)))
+                    for f in _schema_with_engine_cols(schema).fields]
+            part = None
+            if kind == "base":
+                part = "_bkt"
+                cols.append(bucket.alias(part))
+            elif bucket_groups and bucket_groups > 1:
+                part = "_bgrp"
+                gsz = -(-self.num_buckets // int(bucket_groups))   # ceil
+                cols.append((bucket / F.lit(gsz)).cast("int").alias(part))
+            got = self._exprs[key] = (cols, part)
+        cols, part = got
+        return df.select(*cols), part
 
     def _harvest_entries(self, abs_dir: str, rel_dir: str, schema_id: int,
                          kind: str = "base") -> list[FileEntry]:
@@ -686,26 +706,21 @@ class LakeTable:
         # toward the read amplification of every bucket
         return [e for e in entries if e.rows]
 
-    def _with_bucket(self, df: DataFrame) -> DataFrame:
-        if BUCKET_COL in df.columns:
-            return df
-        return df.withColumn(BUCKET_COL, self.bucket_expr())
-
     def append(self, df: DataFrame, properties: dict[str, Any] | None = None) -> int:
         """Blind append (the reference's empty-table fast path M3 — a pure
         insert with no match scan, loader.py:347-378)."""
         self.join_pending_commit()
         snap = self.snapshot()
-        adds = self._write_data_files(self._with_bucket(df), snap.version + 1,
-                                      snap.schema, snap.schema_id)
+        adds = self._write_data_files(df, snap.version + 1, snap.schema,
+                                      snap.schema_id)
         return self._commit_files(snap, "append", adds, [], properties or {})
 
     def overwrite(self, df: DataFrame, properties: dict[str, Any] | None = None) -> int:
         """Full-table replace (snapshot-atomic truncate + insert)."""
         self.join_pending_commit()
         snap = self.snapshot()
-        adds = self._write_data_files(self._with_bucket(df), snap.version + 1,
-                                      snap.schema, snap.schema_id)
+        adds = self._write_data_files(df, snap.version + 1, snap.schema,
+                                      snap.schema_id)
         return self._commit_files(snap, "overwrite", adds, list(snap.files),
                                   properties or {})
 
@@ -719,14 +734,14 @@ class LakeTable:
         self.join_pending_commit()
         self.join_maintenance()
         snap = self.snapshot()
-        dfb = self._with_bucket(df)
+        # df in the file layout, so its rows union with the rows kept
+        new = self._layout(df, snap.schema, "base", None)[0].drop("_bkt")
         touched = sorted(r[0] for r in
-                         dfb.select(BUCKET_COL).distinct().collect())
+                         new.select(BUCKET_COL).distinct().collect())
 
         def swap(rows: DataFrame) -> DataFrame:
             others = rows.filter(~F.col(BUCKET_COL).isin(touched))
-            return (dfb.unionByName(others, allowMissingColumns=True)
-                    .fillna({LSN_COL: 0, OP_COL: "U"}))
+            return new.unionByName(others)
 
         return self._rewrite_buckets(
             snap, touched, swap, "overwrite_buckets",
@@ -822,11 +837,14 @@ class LakeTable:
                       props_fn: Any = None,
                       async_finalize: bool = False,
                       post_commit: Any = None) -> int:
-        """Merge-on-read write path: append LWW-resolvable change files
-        (rows carry BUCKET_COL, LSN_COL, OP_COL), written as scanned with no
-        shuffle. O(batch) cost — no target read, no rewrite; reads resolve
-        via :meth:`_resolve_lww` and :meth:`compact_deltas` folds deltas into
-        base files.
+        """Merge-on-read write path: append LWW-resolvable change files,
+        written as scanned with no shuffle. O(batch) cost — no target read,
+        no rewrite; reads resolve via :meth:`_resolve_lww` and
+        :meth:`compact_deltas` folds deltas into base files.
+
+        Input contract: ``df`` carries user columns and either the engine
+        columns or the CDC envelope's ``lsn`` and ``op``, as
+        ``merge_cdc_batch`` hands it over; :meth:`_layout` fills in the rest.
 
         ``props_fn(adds) -> dict`` (optional) is called after the data files
         are written but before the commit doc: lineage derived from the write
@@ -1236,30 +1254,28 @@ def session_expr_cache(spark: SparkSession) -> dict:
     return c
 
 
+def _fit(have: dict[str, T.DataType], f: T.StructField, default) -> Any:
+    """Column ``f`` of a frame with column types ``have``: taken as is, cast
+    to f's type, or, where the frame lacks it, ``default`` cast to it."""
+    if f.name not in have:
+        return default.cast(f.dataType).alias(f.name)
+    if have[f.name] == f.dataType:
+        return F.col(f.name)
+    return F.col(f.name).cast(f.dataType).alias(f.name)
+
+
 def _conform(df: DataFrame, target: T.StructType) -> DataFrame:
-    """Project df onto target schema: missing columns -> NULL (reference
+    """Project a read onto target schema: missing columns -> NULL (reference
     NULL-padding, gcs/loader.py:307-324), present columns cast to target type
-    (widening), extras dropped (gcs/loader.py:329-345)."""
-    have = {f.name: f for f in df.schema.fields}
-    if all(f.name in have and have[f.name].dataType == f.dataType
-           for f in target.fields) and len(have) == len(target.fields) \
-            and [f.name for f in df.schema.fields] == [f.name for f in target.fields]:
+    (widening), extras dropped (gcs/loader.py:329-345). Writes use
+    :meth:`LakeTable._layout`, which also fills the engine columns."""
+    have = {f.name: f.dataType for f in df.schema.fields}
+    if list(have.items()) == [(f.name, f.dataType) for f in target.fields]:
         return df  # already conformant: skip the no-op projection
     cache = session_expr_cache(df.sparkSession)
-    key = ("conform",
-           tuple((f.name, f.dataType) for f in df.schema.fields),
+    key = ("conform", tuple(have.items()),
            tuple((f.name, f.dataType) for f in target.fields))
     cols = cache.get(key)
     if cols is None:
-        cols = []
-        for f in target.fields:
-            if f.name in have:
-                src = have[f.name]
-                if src.dataType == f.dataType:
-                    cols.append(F.col(f.name))
-                else:
-                    cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
-            else:
-                cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-        cache[key] = cols
+        cols = cache[key] = [_fit(have, f, F.lit(None)) for f in target.fields]
     return df.select(*cols)

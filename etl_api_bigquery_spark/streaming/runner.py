@@ -152,7 +152,9 @@ class CdcStreamRunner:
             time.sleep(sleep)
 
     def run_available_now(self, timeout_sec: int = 600) -> list[MergeMetrics]:
-        """Drain all pending feed files in micro-batches, then stop."""
+        """Drain all pending feed files in micro-batches, then stop. A drain
+        still running after ``timeout_sec`` is stopped and raises
+        :class:`TimeoutError`; the next run resumes from the checkpoint."""
         reader = (self.spark.readStream.schema(feed_schema())
                   .option("latestFirst", "false"))
         # Spark's file source rejects byte + file bounds together; the byte
@@ -190,13 +192,26 @@ class CdcStreamRunner:
             .start()
         )
         try:
-            q.awaitTermination(timeout_sec)
+            if not q.awaitTermination(timeout_sec):
+                q.stop()          # no trigger may start while we join below
+                raise TimeoutError(
+                    f"drain of {self.feed_dir} did not finish within "
+                    f"{timeout_sec} s; stopped with backlog pending")
+        except Exception:
+            # a failed stream raises from awaitTermination itself: don't
+            # leave a commit finalizer or fold running, and don't mask the
+            # stream error (or the timeout) with theirs
+            try:
+                self.table.join_pending_commit()
+                self.table.join_maintenance()
+            except Exception:
+                pass
+            raise
         finally:
             try:
-                import json as _json
                 raw = []
                 for p in (q.recentProgress or []):
-                    d = p if isinstance(p, dict) else _json.loads(p.json)
+                    d = p if isinstance(p, dict) else json.loads(p.json)
                     raw.append({"batchId": d.get("batchId"),
                                 "numInputRows": d.get("numInputRows"),
                                 "durationMs": d.get("durationMs", {})})
@@ -205,13 +220,6 @@ class CdcStreamRunner:
                 pass
             if q.isActive:
                 q.stop()
-        if q.exception() is not None:
-            try:      # don't leave a commit finalizer or fold running,
-                self.table.join_pending_commit()   # don't mask the stream
-                self.table.join_maintenance()      # error either
-            except Exception:
-                pass
-            raise q.exception()
         # land any in-flight async commit + background compaction inside
         # this drain's window (and surface their failures) — callers observe
         # a fully committed, fully maintained table and settled metrics

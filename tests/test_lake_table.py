@@ -106,6 +106,22 @@ def test_compact_and_vacuum(spark, tmp_table_dir):
     assert t.read().count() == 60  # current snapshot untouched
 
 
+def test_plain_writes_land_engine_defaults(spark, tmp_table_dir):
+    """append() and overwrite_buckets() of a frame with no engine columns
+    land _lsn = 0, _op = 'U' and the bucket_expr bucket on every row."""
+    t = make_table(spark, tmp_table_dir, buckets=8)
+    t.append(rows_df(spark, 40, "a"))
+    t.overwrite_buckets(rows_df(spark, 6, "b"))
+    got = t.read(with_bucket=True).select(
+        "content", "_bucket", "_lsn", "_op",
+        (F.col("_bucket") == t.bucket_expr()).alias("same")).collect()
+    assert all(r._lsn == 0 and r._op == "U" and r.same for r in got)
+    new = {r._bucket for r in got if r.content.startswith("b")}
+    assert sum(r.content.startswith("b") for r in got) == 6
+    kept = [r for r in got if r.content.startswith("a")]
+    assert kept and not any(r._bucket in new for r in kept)
+
+
 def test_stats_file_skipping(spark, tmp_table_dir):
     """min/max footer stats prune files whose value range cannot match —
     effective for range-correlated columns (each commit's files carry a tight
@@ -121,16 +137,8 @@ def test_stats_file_skipping(spark, tmp_table_dir):
     all_entries = list(snap.files.values())
     pruned = t.prune_files(all_entries, [("seq", ">=", 1000), ("seq", "<", 1100)])
     assert 0 < len(pruned) < len(all_entries)
-    got = t.read(skip_predicates=[("seq", ">=", 1000), ("seq", "<", 1100)])
+    got = t._read_entries(snap, pruned)
     assert got.filter("seq >= 1000 and seq < 1100").count() == 100
-    # and deltas present -> refuse (unsound)
-    from etl_api_bigquery_spark.lake.merge import merge_cdc_batch
-    b = spark.createDataFrame([(1, 0, "U", "rz", "pz", "x", 5000)],
-                              ["lsn", "epoch", "op", "repo", "path",
-                               "content", "seq"])
-    merge_cdc_batch(t, b, 0, "sp", mode="raw")
-    with pytest.raises(ValueError):
-        t.read(skip_predicates=[("seq", "=", 5000)])
 
 
 def test_schema_conform_on_read(spark, tmp_table_dir):
@@ -194,7 +202,7 @@ def test_expire_tombstones_bucket_pruned(spark, tmp_table_dir):
         [(i, "I", f"k{i}", "x") for i in range(40)] +
         [(100, "D", "k0", None)],                       # one delete
         ["lsn", "op", "k", "v"])
-    merge_cdc_batch(t, ev, 0, "x", lsn_col="lsn", op_col="op")
+    merge_cdc_batch(t, ev, 0, "x")
     before = set(t.snapshot().files)
     ver = t.expire_tombstones(below_lsn=1000)
     doc = t._read_doc(ver)

@@ -221,12 +221,54 @@ def test_unknown_mode_rejected(spark, tmp_table_dir, mode):
     assert t.current_version() == 0 and t.last_txn("x") is None
 
 
+def test_raw_merge_builds_the_layout_in_one_select(spark, tmp_table_dir,
+                                                   monkeypatch):
+    """merge_cdc_batch hands its batch over as scanned: the write's one
+    select builds _bucket, _lsn, _op and the _bgrp partition column, with no
+    withColumn, and the files land in the table's column order and types."""
+    import glob
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDF
+
+    t = make_table(spark, tmp_table_dir)
+    batch = events_df(spark, [evt(i, "U", f"r{i % 3}", f"p{i}", f"v{i}")
+                              for i in range(1, 40)]
+                      + [evt(50, "D", "r1", "p1", None)])
+    calls = {"withColumn": 0, "select": 0}
+    for name in calls:
+        def counted(self, *a, _orig=getattr(ClassicDF, name), _name=name,
+                    **kw):
+            calls[_name] += 1
+            return _orig(self, *a, **kw)
+        monkeypatch.setattr(ClassicDF, name, counted)
+    m = merge_cdc_batch(t, batch, 0, "lay", mode="raw", l0_groups=4)
+    monkeypatch.undo()
+    assert calls == {"withColumn": 0, "select": 1}
+    assert (m.keys, m.deletes) == (40, 1)
+    got = {r.path: (r._lsn, r._op, r.same) for r in t.read(with_bucket=True)
+           .select("path", "_lsn", "_op",
+                   (F.col("_bucket") == t.bucket_expr()).alias("same"))
+           .collect()}
+    assert got == {f"p{i}": (50, "D", True) if i == 1 else (i, "U", True)
+                   for i in range(1, 40)}
+    files = glob.glob(os.path.join(t.location, "data", "*", "_bgrp=*",
+                                   "*.parquet"))
+    assert files
+    want = [("repo", "string"), ("path", "string"), ("commit", "string"),
+            ("lang", "string"), ("content", "string"), ("_bucket", "int32"),
+            ("_lsn", "int64"), ("_op", "string")]
+    for f in files:
+        sch = pq.read_schema(f)
+        assert [(c.name, str(c.type)) for c in sch] == want
+
+
 def test_prefilter_drops_null_lsn(spark):
     """The broadcast winner-token prefilter drops NULL-lsn events (they
     never match a winner token) and keeps the key's real winner."""
     ev = events_df(spark, [(None, 0, "U", "r1", "p1", "c", "py", "x"),
                            (5, 0, "U", "r1", "p1", "c", "py", "y")])
-    got = lww_prefilter(ev, ["repo", "path"], "lsn").collect()
+    got = lww_prefilter(ev, ["repo", "path"]).collect()
     assert len(got) == 1 and got[0]["lsn"] == 5
 
 

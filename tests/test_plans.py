@@ -135,7 +135,6 @@ def test_prefilter_write_shuffle_budget(spark, tmp_table_dir):
     from etl_api_bigquery_spark.cdc import change_feed
     from etl_api_bigquery_spark.lake import LakeTable
     from etl_api_bigquery_spark.lake.merge import lww_prefilter
-    from etl_api_bigquery_spark.lake.table import BUCKET_COL
     from etl_api_bigquery_spark.plans.inspect import (count_exchanges,
                                                       executed_plan_text)
 
@@ -144,8 +143,10 @@ def test_prefilter_write_shuffle_budget(spark, tmp_table_dir):
     t = LakeTable.create(spark, tmp_table_dir + "/t", schema,
                          key_cols=["repo", "path"], num_buckets=16)
     ev = change_feed(spark, n_events=20_000, n_keys=2_000, n_epochs=2)
-    delta = (lww_prefilter(ev, ["repo", "path"], "lsn")
-             .withColumn(BUCKET_COL, t.bucket_expr()))
+    # the frame the L0 write writes: the table's layout projection
+    delta, part = t._layout(lww_prefilter(ev, ["repo", "path"]),
+                            t.snapshot().schema, "delta", bucket_groups=4)
+    assert part == "_bgrp"
     plan = executed_plan_text(delta)
     assert count_exchanges(delta) == 1
     assert plan.count("BroadcastExchange") == 1

@@ -61,6 +61,66 @@ def test_crash_restart_exactly_once(spark, staged):
     assert len(versions) == len(set(versions))
 
 
+def test_failed_drain_leaves_no_background_work(spark, staged):
+    """A stream failure raises from awaitTermination itself; the runner still
+    joins the table's commit finalizer and background fold before raising,
+    so none is left running against the table."""
+    feed, feed_dir, table, ckpt = staged
+    r = CdcStreamRunner(spark, table, feed_dir, ckpt, txn_app="fj1",
+                        auto_compact_deltas=1, fail_after_batches=2)
+    with pytest.raises(Exception, match="injected failure"):
+        r.run_available_now()
+    assert table._commit_future is None
+    assert table._maint_future is None
+
+
+def test_drain_timeout_raises_and_next_run_resumes(spark, staged,
+                                                   tmp_table_dir):
+    """A drain cut off by ``timeout_sec`` raises TimeoutError instead of
+    returning with part of the backlog applied; the next run resumes from
+    the checkpoint and converges to the oracle."""
+    feed, _, table, ckpt = staged
+    feed_dir = os.path.join(tmp_table_dir, "feed24")
+    write_feed_as_epoch_files(feed, feed_dir, files_per_epoch=4)
+    r = CdcStreamRunner(spark, table, feed_dir, ckpt, txn_app="to1")
+    with pytest.raises(TimeoutError):
+        r.run_available_now(timeout_sec=1)
+    assert len(r.metrics) < 24
+    CdcStreamRunner(spark, table, feed_dir, ckpt,
+                    txn_app="to1").run_available_now()
+    assert_replay_match(table.read(), expected_final_state(feed))
+
+
+def test_transform_hook_flattens_before_merge(spark, staged, tmp_table_dir):
+    """M8 bulk flatten-MERGE: the runner's ``transform`` flattens each
+    envelope into one silver row per half of its content, keyed
+    (repo, path, part); the drained table matches the oracle run over the
+    flattened feed."""
+    from pyspark.sql import functions as F
+
+    feed, feed_dir, _, ckpt = staged
+
+    def flatten(df):
+        halves = F.array(F.substring("content", 1, 32),
+                         F.expr("substring(content, 33)"))
+        return df.select(*[c for c in df.columns if c != "content"],
+                         F.posexplode(halves).alias("part", "content"))
+
+    keys = ("repo", "path", "part")
+    schema = T.StructType(SILVER.fields[:2]
+                          + [T.StructField("part", T.IntegerType())]
+                          + SILVER.fields[2:])
+    table = LakeTable.create(spark, os.path.join(tmp_table_dir, "flat"),
+                             schema, key_cols=list(keys), num_buckets=8)
+    r = CdcStreamRunner(spark, table, feed_dir, ckpt, txn_app="m8",
+                        transform=flatten)
+    r.run_available_now()
+    assert table.read().columns == schema.fieldNames()
+    assert_replay_match(table.read(),
+                        expected_final_state(flatten(feed), key_cols=keys),
+                        key_cols=keys)
+
+
 def test_restart_after_commit_before_checkpoint(spark, staged):
     """The nasty window: data committed, then crash before the source offset
     is checkpointed -> the batch is replayed with the same batch_id and the
