@@ -53,6 +53,7 @@ of its own new files, read in a thread pool.
 
 from __future__ import annotations
 
+import contextlib
 import functools
 import glob
 import json
@@ -1152,7 +1153,9 @@ class LakeTable:
 
     def vacuum(self, keep_versions: int = 2) -> int:
         """Physically delete data files not referenced by the newest
-        ``keep_versions`` snapshots. Returns #files removed.
+        ``keep_versions`` snapshots, each with its ``.<name>.crc`` checksum
+        sidecar, and the data directories this leaves empty. Returns #files
+        removed.
 
         Background maintenance is joined first: an in-flight
         :meth:`compact_deltas_async` fold has written files its commit has
@@ -1164,13 +1167,23 @@ class LakeTable:
         keep = set()
         for v in range(max(0, head - keep_versions + 1), head + 1):
             keep.update(self.snapshot(v).files.keys())
+        data_root = os.path.join(self.location, _DATA_DIR)
         removed = 0
-        for fp in glob.glob(os.path.join(self.location, _DATA_DIR, "**", "*.parquet"),
+        emptied = set()
+        for fp in glob.glob(os.path.join(data_root, "**", "*.parquet"),
                             recursive=True):
             rel = os.path.relpath(fp, self.location)
             if rel not in keep:
                 os.remove(fp)
+                d, name = os.path.split(fp)
+                with contextlib.suppress(FileNotFoundError):
+                    os.remove(os.path.join(d, f".{name}.crc"))
+                emptied.add(d)
                 removed += 1
+        for d in emptied:                   # and each parent it empties
+            while d != data_root and os.path.isdir(d) and not os.listdir(d):
+                os.rmdir(d)
+                d = os.path.dirname(d)
         return removed
 
 

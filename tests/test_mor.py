@@ -208,6 +208,34 @@ def test_vacuum_waits_for_inflight_fold(spark, tmp_table_dir):
     feed.unpersist()
 
 
+def test_vacuum_removes_crc_sidecars_and_emptied_dirs(spark, tmp_table_dir):
+    """vacuum() deletes each dropped parquet file's ``.<name>.crc`` sidecar
+    with it and the data directories that leaves empty: after a fold of
+    bucket-pure and grouped L0 writes, no sidecar is left without its
+    parquet file and no data directory is left empty."""
+    t = make_table(spark, tmp_table_dir)
+    feed = change_feed(spark, n_events=4000, n_keys=150, n_epochs=3).cache()
+    for e in range(3):
+        merge_cdc_batch(t, feed.filter(F.col("epoch") == e), e, "crc",
+                        mode="raw", auto_compact_deltas=10**6)
+    assert t.compact_deltas(max_delta_files=1) is not None
+    assert t.vacuum(keep_versions=1) > 0
+    data = os.path.join(t.location, "data")
+    orphans, empty = [], []
+    for d, dirs, files in os.walk(data):
+        orphans += [os.path.join(d, f) for f in files if f.endswith(".crc")
+                    and f[1:-len(".crc")] not in files]
+        if d != data and not dirs and not files:
+            empty.append(d)
+    assert orphans == [] and empty == []
+    live = {os.path.join(t.location, p) for p in t.snapshot().files}
+    on_disk = {os.path.join(d, f) for d, _, fs in os.walk(data) for f in fs
+               if f.endswith(".parquet")}
+    assert on_disk == live
+    assert_replay_match(t.read(), expected_final_state(feed))
+    feed.unpersist()
+
+
 def test_raw_bucket_pure_l0_compacts_per_bucket(spark, tmp_table_dir):
     """l0_groups=num_buckets: raw L0 files are bucket-PURE (labeled with real
     bucket ids via footer stats, no shuffle added), so compaction folds ONLY
