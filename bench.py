@@ -126,7 +126,8 @@ def main() -> None:
                             num_buckets=num_buckets)
     merge_cdc_batch(wtab, change_feed(spark, n_events=200_000, n_keys=20_000,
                                       n_epochs=1),
-                    batch_id=0, txn_app="warmup", mode="raw")
+                    batch_id=0, txn_app="warmup", auto_compact_deltas=16,
+                    l0_groups=1)
 
     # ---- ingest config: CdcStreamRunner's shipped defaults (raw append,
     # no prefilter, l0_groups="auto", async commit and compaction); only the

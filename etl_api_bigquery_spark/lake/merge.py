@@ -18,9 +18,11 @@ keys ``(id,date)`` / ``(bill_id,product_id)``) plus its last-writer-wins dedup
 3. **Fold** (:meth:`LakeTable.compact_deltas`): rewrite the resolved state of
    a bucket set as base files, reading ONLY those buckets' files via the
    manifest — the Spark analogue of the reference's partition-pruned MERGE
-   ("Partition filtering trong MERGE để tối ưu", loader.py:27). ``mode="cow"``
-   folds the touched buckets right after the append; ``mode="raw"`` folds
-   when a bucket's read amplification reaches a threshold.
+   ("Partition filtering trong MERGE để tối ưu", loader.py:27). There is one
+   fold rule: after each append, fold every bucket whose read amplification
+   reaches a threshold. At threshold 1 on bucket-pure L0 that is the
+   reference's eager MERGE (the touched buckets, every batch); higher
+   thresholds fold lazily, LSM-style.
 
 Scale: the append is O(batch) with no shuffle; a fold reads and rewrites only
 its buckets, so untouched buckets are never read. At 10^10 events the knob is
@@ -279,8 +281,7 @@ def merge_cdc_batch(
     events: DataFrame,
     batch_id: int = -1,
     txn_app: str | None = None,
-    mode: str = "cow",
-    auto_compact_deltas: int = 16,
+    auto_compact_deltas: int = 1,
     prefilter: bool = False,
     l0_groups: int | str | None = None,
     compact_async: bool = False,
@@ -294,78 +295,50 @@ def merge_cdc_batch(
     totally ordered per key** — NULL-lsn rows are undefined input (the
     prefilter drops them; read-side resolution orders them last).
 
-    Input contract: ``events`` carry the envelope's ``lsn`` and ``op``
-    (:data:`ENVELOPE_COLS`). They reach :meth:`LakeTable.append_deltas` as
-    scanned (prefiltered if asked, an Observation counting ``op``), and its
-    one projection (:meth:`LakeTable._layout`) builds the file layout.
+    The batch is appended as scanned (NO shuffle, NO dedup; prefiltered if
+    asked, an Observation counting ``op``) as LWW-resolvable delta files by
+    :meth:`LakeTable.append_deltas`, whose one projection builds the file
+    layout, with the fence and lineage in the same commit; reads resolve
+    max-LSN per key (in-batch duplicates too) and drop tombstones.
+    ``l0_groups=G`` clusters those files into G contiguous bucket ranges per
+    write task: None (the default) is bucket-pure, 1 writes files spanning
+    every bucket, and ``"auto"`` sizes G from the log's last append.
 
-    There is one write path: the batch is appended exactly as scanned (NO
-    shuffle, NO dedup) as LWW-resolvable delta files, with the fence and
-    lineage in the same commit. Reads resolve max-LSN per key (in-batch
-    duplicates too) and drop tombstones. ``mode`` picks when the touched
-    buckets are folded back into base files (both modes yield identical
-    read results; any other ``mode`` raises ``ValueError``):
+    Then one fold rule: :meth:`LakeTable.compact_deltas` folds every bucket
+    whose read amplification (:meth:`LakeTable.bucket_read_amplification`)
+    reaches ``auto_compact_deltas``, widened to the closure of the buckets'
+    file spans. It runs inline after joining background maintenance (not
+    under ``async_finalize``, where a lost race raises instead), or on the
+    ``lake-maint`` thread when ``compact_async=True`` (see
+    :meth:`LakeTable.compact_deltas_async`). The fence lands in the append's
+    commit, so the fold never affects exactly-once: if it fails the error
+    propagates, reads are already correct and a rerun is fence-skipped. The
+    defaults leave a folded table after every batch, the reference's eager
+    MERGE (:class:`~..streaming.CdcStreamRunner`'s cow preset); a higher
+    threshold keeps each batch O(batch), LSM-style (its raw preset).
 
-    * ``mode="raw"`` — LSM-style: fold lazily. O(batch) write cost
-      regardless of table size — the high-throughput CDC-ingest path (the
-      Hudi/Paimon-style tradeoff). ``l0_groups=G`` clusters the L0 files
-      into G contiguous bucket ranges per task (task-local sort, still no
-      shuffle; G = table.num_buckets gives fully bucket-PURE L0), restoring
-      per-bucket compaction/read locality at the cost of more, smaller files
-      (tasks x G per trigger). ``l0_groups="auto"`` lets
-      :meth:`LakeTable.append_deltas` size G from the log's last append
-      and a 16 MB L0 file-size floor (bucket-pure on a table with none, so
-      a restarted driver keeps its sizing). Compaction triggers when any
-      bucket's delta read amplification reaches ``auto_compact_deltas`` and
-      folds only the closure of the hot buckets' file spans (ungrouped L0
-      spans everything, degrading to the full L0 fold).
-    * ``mode="cow"`` — fold eagerly: the append is always bucket-pure
-      (``l0_groups`` is ignored), then :meth:`LakeTable.compact_deltas`
-      rewrites exactly the buckets it touched (widened only by mixed raw L0
-      already sharing files with them), synchronously. Write cost
-      O(batch + touched data); reads of those buckets open base files only.
-      ``target_rows_read`` counts the fold's victim rows and ``m.version``
-      is the fold's commit. If the fold fails the error propagates, but the
-      append and its fence have landed: reads are already correct and a
-      rerun of ``batch_id`` is fence-skipped.
-
-    Default-mode note: this function defaults to ``mode="cow"`` while
-    :class:`~etl_api_bigquery_spark.streaming.runner.CdcStreamRunner`
-    defaults to ``mode="raw"`` — deliberately. A direct ``merge_cdc_batch``
-    call is the library/batch API (one-shot backfills, tests, oracle
-    queries), where a folded, read-optimized table is the least surprising
-    result; the runner is the sustained-ingest pipeline, where deferring
-    the fold to read amplification keeps each trigger O(batch). Pass
-    ``mode`` explicitly when benchmarking either.
+    :class:`MergeMetrics`: ``version`` is the append's commit, the one that
+    carries the fence and the lineage; ``target_rows_read`` counts the rows
+    of the files the inline fold removed, 0 when no inline fold ran.
 
     ``prefilter=True`` drops each key's losing events before the write
     (:func:`lww_prefilter`): ~r× less L0 volume, traded against the full
     event history L0 otherwise keeps for audit/replay.
 
-    ``compact_async=True`` (raw only): auto-compaction runs on a
-    background driver thread overlapping the next trigger's scan instead of
-    extending this batch's critical path. See
-    :meth:`LakeTable.compact_deltas_async` for the correctness argument.
-
-    ``async_finalize=True`` (raw only): the batch's Spark write job runs
-    inline, but the driver-serial tail — parquet footer harvest, lineage,
-    commit-log fsync, the auto-compaction trigger — runs on a background
-    driver thread so it overlaps the caller's next trigger (Spark's
-    walCommit/getBatch/planning in a stream, the next batch's scan in a
-    replay loop). The returned metrics' ``version``/lineage/``phases``
-    fields settle only when the commit lands (``m.version`` stays -1 until
-    then); call :meth:`LakeTable.join_pending_commit` before reading them.
-    Exactly-once is preserved (the fence counts the pending commit, commit
-    order equals batch order), but durability is deferred by one batch —
-    see :meth:`LakeTable.append_deltas` and
+    ``async_finalize=True``: the batch's Spark write job runs inline, but
+    the driver-serial tail — parquet footer harvest, lineage, commit-log
+    fsync, the fold rule — runs on a background driver thread so it overlaps
+    the caller's next trigger (Spark's walCommit/getBatch/planning in a
+    stream, the next batch's scan in a replay loop). The returned metrics'
+    ``version``/lineage/``phases`` fields settle only when the commit lands
+    (``m.version`` stays -1 until then); call
+    :meth:`LakeTable.join_pending_commit` before reading them. Exactly-once
+    is preserved (the fence counts the pending commit, commit order equals
+    batch order), but durability is deferred by one batch — see
+    :meth:`LakeTable.append_deltas` and
     :meth:`~etl_api_bigquery_spark.streaming.runner.CdcStreamRunner.repair_fence_gap`.
     """
     t0 = time.monotonic()
-    if mode not in ("cow", "raw"):
-        raise ValueError(f"unknown mode {mode!r}: expected 'cow' or 'raw'")
-    if async_finalize and mode != "raw":
-        raise ValueError(
-            "async_finalize requires mode='raw' (the LSM append path)")
     m = MergeMetrics(batch_id=batch_id)
 
     # ---- exactly-once fence: skip batches already committed (idempotent
@@ -385,14 +358,6 @@ def merge_cdc_batch(
     if txn_app is not None:
         props["txn_app"] = txn_app
         props["txn_batch"] = batch_id
-    if mode == "cow":
-        # bucket-pure L0 keeps the fold's closure to the touched buckets; no
-        # background fold may race this one over the same victims, and snap0
-        # must be the snapshot the append lands on (lineage counts its files)
-        l0_groups = table.num_buckets
-        table.join_pending_commit()
-        table.join_maintenance()
-        snap0 = table.snapshot()
     # counts ride on the write job via Observation — no extra stats pass
     cache = session_expr_cache(events.sparkSession)
     obs_aggs = cache.get(("raw_obs",))
@@ -406,7 +371,6 @@ def merge_cdc_batch(
     # the batch as scanned: append_deltas projects it onto the file layout
     batch = (lww_prefilter(events, table.key_cols) if prefilter
              else events).observe(obs, *obs_aggs)
-    touched: list[int] = []
 
     def lineage_props(adds):
         # per-bucket lineage comes free from the harvested file entries
@@ -414,8 +378,7 @@ def merge_cdc_batch(
         m.keys = int(got.get("keys") or 0)     # events appended
         m.deletes = int(got.get("deletes") or 0)
         m.upserts = m.keys - m.deletes
-        touched[:] = sorted(table.buckets_of_entries(adds))
-        m.buckets_touched = len(touched)
+        m.buckets_touched = len(table.buckets_of_entries(adds))
         if adds and all(e.bucket != MIXED_BUCKET for e in adds):
             # bucket-pure write: max events per bucket / mean events per bucket
             per = Counter()
@@ -423,43 +386,38 @@ def merge_cdc_batch(
                 per[e.bucket] += e.rows
             m.skew_factor = round(
                 max(per.values()) * len(per) / sum(per.values()), 3)
-        if mode == "cow" and touched:
-            # the fold's victims: the touched buckets' live files (closed
-            # under mixed-file spans) plus this append's own files
-            closure = table.expand_bucket_closure(snap0, touched)
-            m.target_rows_read = (
-                sum(e.rows for e in snap0.files_for_buckets(closure))
-                + sum(e.rows for e in adds))
         elapsed = max(time.monotonic() - t0, 1e-9)
         return {"lineage": {
             "batch_id": batch_id, "keys": m.keys, "deletes": m.deletes,
             "upserts": m.upserts, "buckets_touched": m.buckets_touched,
-            "skew_factor": m.skew_factor, "mode": mode,
-            "target_rows_read": m.target_rows_read,
+            "skew_factor": m.skew_factor,
             "events_per_sec": round(m.keys / elapsed, 1),
         }}
 
     _t_plan = time.monotonic() - t0
 
     def _post(version: int, write_phases: dict[str, Any]) -> None:
-        # everything after the data-file commit: the fold and the phase
+        # everything after the data-file commit: the fold rule and the phase
         # telemetry. Runs inline (sync) or on the commit-finalizer thread
         # (async_finalize).
         _t_post0 = time.monotonic()
         m.version = version
-        if mode == "cow":
-            if touched:
-                m.version = table.compact_deltas(
-                    buckets=touched, properties={"fold_for_batch": batch_id})
-        else:
-            counts = table.bucket_read_amplification()
-            hot = [b for b, c in counts.items() if c >= auto_compact_deltas]
-            if hot:
-                cprops = {"auto_compact_for_batch": batch_id}
-                if compact_async:
-                    table.compact_deltas_async(hot, properties=cprops)
-                else:
-                    table.compact_deltas(buckets=hot, properties=cprops)
+        counts = table.bucket_read_amplification()
+        hot = [b for b, c in counts.items() if c >= auto_compact_deltas]
+        cprops = {"auto_compact_for_batch": batch_id}
+        if hot and compact_async:
+            table.compact_deltas_async(hot, properties=cprops)
+        elif hot:
+            # no background fold may race this one over the same files. Not
+            # on the finalizer thread: a background fold may be waiting for
+            # this very commit (compact_deltas joins it first)
+            if not async_finalize:
+                table.join_maintenance()
+            v = table.compact_deltas(buckets=hot, properties=cprops)
+            live = table.snapshot(v).files
+            m.target_rows_read = sum(
+                e.rows for p, e in table.snapshot(v - 1).files.items()
+                if p not in live)
         m.extra["phases"] = {
             "plan_build_s": round(_t_plan, 4),
             **write_phases,

@@ -858,10 +858,10 @@ class LakeTable:
         at the bytes per write task (``out_bytes x G_prev / n_files``) of
         the log's newest ``merge_mor`` commit with adds (the snapshot's
         ``l0_write``), so G survives a restart; num_buckets if the log has
-        none. Every commit records its G as ``l0_groups`` (1 for None, which
-        writes ungrouped files). An append removes nothing, so under
-        :meth:`_commit_files` a lost commit race is always retried: delta
-        writes are safe concurrent with background compaction.
+        none. None means num_buckets (bucket-pure), 1 ungrouped files. Every
+        commit records its G as ``l0_groups``. An append removes nothing, so
+        under :meth:`_commit_files` a lost commit race is always retried:
+        delta writes are safe concurrent with background compaction.
 
         ``post_commit(version, phases)`` (optional) runs once the commit has
         landed. ``phases`` is this write's own breakdown: ``write_job_s``
@@ -891,14 +891,16 @@ class LakeTable:
             self.join_pending_commit()
         snap = self.snapshot()
         props0 = dict(properties or {})
-        if bucket_groups == "auto":
-            nb = int(snap.table_meta["num_buckets"])
+        nb = int(snap.table_meta["num_buckets"])
+        if bucket_groups is None:
+            bucket_groups = nb
+        elif bucket_groups == "auto":
             bucket_groups = nb
             if snap.l0_write is not None:
                 out_bytes, n_files, g_prev = snap.l0_write
                 g = int(out_bytes * g_prev / n_files // L0_TARGET_FILE_BYTES)
                 bucket_groups = max(1, min(nb, g))
-        props0["l0_groups"] = bucket_groups or 1
+        props0["l0_groups"] = bucket_groups
         t0 = time.monotonic()
         abs_dir, rel_dir = self._run_write_job(
             df, snap.version + 1, snap.schema, "delta", bucket_groups)
@@ -981,7 +983,7 @@ class LakeTable:
         resolution over the compacted base; a lost commit race is retried
         while the victims are still live (:meth:`_commit_files`). Two
         rewrites of the same files do conflict (the loser raises), so every
-        foreground rewrite — ``merge_cdc_batch``'s ``mode="cow"`` fold,
+        foreground rewrite — ``merge_cdc_batch``'s inline fold,
         :meth:`delete_where`, :meth:`expire_tombstones`,
         :meth:`overwrite_buckets`, ``merge_backfill`` — and :meth:`vacuum`
         join maintenance first, and :class:`~..streaming.CdcStreamRunner`
@@ -1015,14 +1017,6 @@ class LakeTable:
             if self._maint_future is f:
                 self._maint_future = None
 
-    def delta_file_counts(self) -> dict[int, int]:
-        """Delta files per bucket; key MIXED_BUCKET counts raw-append files."""
-        counts: dict[int, int] = {}
-        for e in self.snapshot().files.values():
-            if e.kind == "delta":
-                counts[e.bucket] = counts.get(e.bucket, 0) + 1
-        return counts
-
     def _entry_bucket_range(self, e: FileEntry) -> tuple[int, int]:
         """Conservative [min, max] bucket range a mixed file may span."""
         st = e.stats.get(BUCKET_COL)
@@ -1032,10 +1026,9 @@ class LakeTable:
 
     def bucket_read_amplification(self) -> dict[int, int]:
         """Per-bucket DELTA-file read amplification: how many delta files a
-        read of bucket b must open. Unlike :meth:`delta_file_counts`, a
-        mixed (multi-bucket) file counts toward EVERY bucket in its footer
-        ``_bucket`` range — the number that actually drives read cost and
-        the auto-compaction trigger."""
+        read of bucket b must open. A mixed (multi-bucket) file counts toward
+        EVERY bucket in its footer ``_bucket`` range — the number that drives
+        read cost and ``merge_cdc_batch``'s fold rule."""
         counts: dict[int, int] = {}
         for e in self.snapshot().files.values():
             if e.kind != "delta":

@@ -21,7 +21,6 @@ LINEAGE_SCHEMA = T.StructType([
     T.StructField("upserts", T.LongType()),
     T.StructField("deletes", T.LongType()),
     T.StructField("buckets_touched", T.LongType()),
-    T.StructField("target_rows_read", T.LongType()),
     T.StructField("skew_factor", T.DoubleType()),
     T.StructField("events_per_sec", T.DoubleType()),
     T.StructField("txn_app", T.StringType()),
@@ -38,7 +37,6 @@ def lineage_df(spark: SparkSession, table: LakeTable) -> DataFrame:
             h["version"], h["action"],
             lin.get("batch_id"), lin.get("keys"), lin.get("upserts"),
             lin.get("deletes"), lin.get("buckets_touched"),
-            lin.get("target_rows_read"),
             float(lin["skew_factor"]) if "skew_factor" in lin else None,
             float(lin["events_per_sec"]) if "events_per_sec" in lin else None,
             p.get("txn_app"), h.get("commit_ts_ms"),

@@ -56,26 +56,25 @@ class CdcStreamRunner:
     target_events_per_sec: float | None = None
     _rate_t0: float | None = field(default=None, repr=False)
     _rate_events: int = field(default=0, repr=False)
-    # write strategy: "raw" (default — LSM append, zero full-row shuffle,
-    # bucket-clustered L0, the high-throughput ingest mode) | "cow" (the
-    # same append, bucket-pure, plus a synchronous fold of the touched
-    # buckets)
+    # fold preset (see _preset): "raw" (default — LSM append, folded lazily
+    # at read amplification auto_compact_deltas) | "cow" (the reference's
+    # eager MERGE: bucket-pure append plus a synchronous fold, every batch)
     mode: str = "raw"
     prefilter: bool = False                # see merge_cdc_batch
     auto_compact_deltas: int = 16
-    # raw L0 clustering: None = adaptive ("auto" — LakeTable.append_deltas
-    # sizes the group count from the log's last append's bytes per write
-    # task and a 16 MB L0 file-size floor; bucket-pure on a new table); an
-    # int pins the group count (table.num_buckets = always bucket-pure, 1 =
+    # raw L0 clustering: "auto" = adaptive (LakeTable.append_deltas sizes
+    # the group count from the log's last append's bytes per write task and
+    # a 16 MB L0 file-size floor; bucket-pure on a new table); an int pins
+    # the group count (table.num_buckets = always bucket-pure, 1 =
     # unclustered single-file-per-task L0)
-    l0_groups: int | str | None = None
+    l0_groups: int | str = "auto"
     # run auto-compaction on a background driver thread so the fold overlaps
     # the next trigger's scan; joined (and failures re-raised) before
     # run_available_now returns
     async_compact: bool = True
     # pipeline each batch's commit finalization (footer harvest + lineage +
     # commit fsync + compaction trigger) with the NEXT trigger's scan/plan
-    # (raw mode only — merge_cdc_batch(async_finalize=True)). Exactly-once
+    # (raw preset only — merge_cdc_batch(async_finalize=True)). Exactly-once
     # is preserved; durability is deferred by one batch: a crash between a
     # batch's checkpoint commit and its table commit leaves a fence <
     # checkpoint gap. The default is ON because run_available_now() closes
@@ -117,24 +116,32 @@ class CdcStreamRunner:
     def _merge(self, batch_df: DataFrame, batch_id: int,
                background: bool) -> MergeMetrics:
         """One batch through :func:`merge_cdc_batch` with this runner's
-        write config. ``background=False`` forces a synchronous commit and
-        inline compaction; otherwise raw mode follows ``async_commit`` and
-        ``async_compact``."""
+        preset (:meth:`_preset`)."""
         if self.transform is not None:
             batch_df = self.transform(batch_df)
-        raw = self.mode == "raw"
-        groups = self.l0_groups
-        if groups is None and raw:
-            groups = "auto"                       # file-size-floor adaptive
         m = merge_cdc_batch(
             self.table, batch_df, batch_id=batch_id, txn_app=self.txn_app,
-            mode=self.mode, auto_compact_deltas=self.auto_compact_deltas,
-            prefilter=self.prefilter, l0_groups=groups,
-            compact_async=background and raw and self.async_compact,
-            async_finalize=background and raw and self.async_commit,
-        )
+            prefilter=self.prefilter, **self._preset(background))
         self.metrics.append(m)
         return m
+
+    def _preset(self, background: bool) -> dict[str, Any]:
+        """:func:`merge_cdc_batch`'s fold and L0 settings for ``mode``. raw
+        takes this runner's fields and, when ``background``, follows
+        ``async_commit`` and ``async_compact``; cow is a bucket-pure append
+        and a synchronous fold at read amplification 1. Any other mode
+        raises ``ValueError``."""
+        if self.mode == "raw":
+            return {"auto_compact_deltas": self.auto_compact_deltas,
+                    "l0_groups": self.l0_groups,
+                    "compact_async": background and self.async_compact,
+                    "async_finalize": background and self.async_commit}
+        if self.mode == "cow":
+            return {"auto_compact_deltas": 1,
+                    "l0_groups": self.table.num_buckets,
+                    "compact_async": False, "async_finalize": False}
+        raise ValueError(
+            f"unknown mode {self.mode!r}: expected 'cow' or 'raw'")
 
     def _pace(self, m: MergeMetrics) -> None:
         """Token-bucket pacing: sleep so cumulative events / elapsed wall
@@ -155,6 +162,7 @@ class CdcStreamRunner:
         """Drain all pending feed files in micro-batches, then stop. A drain
         still running after ``timeout_sec`` is stopped and raises
         :class:`TimeoutError`; the next run resumes from the checkpoint."""
+        self._preset(background=True)     # an unknown mode fails here
         reader = (self.spark.readStream.schema(feed_schema())
                   .option("latestFirst", "false"))
         # Spark's file source rejects byte + file bounds together; the byte
@@ -177,11 +185,9 @@ class CdcStreamRunner:
             reader = reader.option("maxFilesPerTrigger",
                                    self.max_files_per_trigger)
         stream = reader.parquet(self.feed_dir)
-        if self.mode == "raw":
-            # close any fence-vs-checkpoint gap a crash inside an async
-            # commit window left behind — also when this run commits
-            # synchronously (no-op on a healthy checkpoint)
-            self.repair_fence_gap()
+        # close any fence-vs-checkpoint gap a crash inside an async commit
+        # window left behind, under every preset (no-op on a healthy one)
+        self.repair_fence_gap()
         if self.stateful_staleness_filter:
             from .stateful import lww_staleness_filter
             stream = lww_staleness_filter(stream, self.table.key_cols)
@@ -239,8 +245,8 @@ class CdcStreamRunner:
         done and will never re-deliver it. The file source is replayable,
         though: the checkpoint's ``sources/0`` log records exactly which
         feed files each batch admitted. On restart,
-        :meth:`run_available_now` calls this in raw mode before the stream
-        starts — it compares the table fence
+        :meth:`run_available_now` calls this before the stream starts,
+        under every preset — it compares the table fence
         (``last_txn``) with the checkpoint's committed batches and replays
         each missing batch's file list through the same
         :func:`merge_cdc_batch` sink (sync commits). The fence makes it

@@ -6,9 +6,9 @@ jobs/ingest.py --feed-dir ... --table-dir ... --checkpoint ...`` on a
 multi-executor cluster; in this sandbox it runs on local[N]. The job is
 restart-safe: the checkpoint resumes the source and the commit fence drops
 replayed batches, so rerunning after any crash converges to the same state.
-In ``raw`` mode (the default) a restart first re-applies any batch the
-checkpoint committed but an async table commit lost, whatever
-``--async-commit`` is set to this time.
+A restart first re-applies any batch the checkpoint committed but an async
+table commit lost, whatever ``--mode`` and ``--async-commit`` are set to this
+time.
 
 Example (sandbox):
     python jobs/ingest.py --generate 100000 --table-dir /tmp/ingest/t \\
@@ -31,7 +31,11 @@ def main() -> None:
     ap.add_argument("--feed-dir", required=True)
     ap.add_argument("--table-dir", required=True)
     ap.add_argument("--checkpoint", required=True)
-    ap.add_argument("--mode", choices=["cow", "raw"], default="raw")
+    ap.add_argument("--mode", choices=["cow", "raw"], default="raw",
+                    help="fold preset (CdcStreamRunner.mode): raw folds a "
+                         "bucket at read amplification 16, in the "
+                         "background; cow writes bucket-pure L0 and folds "
+                         "every touched bucket synchronously, every batch")
     ap.add_argument("--num-buckets", type=int, default=64)
     ap.add_argument("--prefilter", choices=["on", "off"], default="off",
                     help="LWW winner prefilter: drop each key's losing "
@@ -44,10 +48,10 @@ def main() -> None:
     ap.add_argument("--async-commit", action=argparse.BooleanOptionalAction,
                     default=True,
                     help="pipeline each batch's commit finalization with the "
-                         "next trigger (raw mode; see CdcStreamRunner."
-                         "async_commit; default on). In raw mode, any "
-                         "fence-vs-checkpoint gap a crash in an async "
-                         "window left behind is repaired on startup")
+                         "next trigger (raw preset; see CdcStreamRunner."
+                         "async_commit; default on). Any fence-vs-checkpoint "
+                         "gap a crash in an async window left behind is "
+                         "repaired on startup")
     ap.add_argument("--txn-app", default="cdc-ingest")
     ap.add_argument("--generate", type=int, default=0,
                     help="generate N synthetic events into --feed-dir first")

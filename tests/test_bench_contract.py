@@ -75,7 +75,7 @@ def test_raw_merge_phases_sync_and_async(spark, tmp_table_dir):
     t, feed = raw_table(spark, tmp_table_dir)
     for e, async_finalize in enumerate((False, True)):
         m = merge_cdc_batch(t, feed.filter(F.col("epoch") == e), e, "pb",
-                            mode="raw", auto_compact_deltas=10**6,
+                            auto_compact_deltas=10**6,
                             l0_groups="auto", async_finalize=async_finalize)
         t.join_pending_commit()
         phases = m.extra["phases"]
@@ -88,7 +88,7 @@ def test_background_fold_keeps_foreground_phases(spark, tmp_table_dir):
     raw batch's write job and its harvest; the batch's phases still describe
     its own files, not the fold's."""
     t, feed = raw_table(spark, tmp_table_dir)
-    merge_cdc_batch(t, feed.filter(F.col("epoch") == 0), 0, "pb", mode="raw",
+    merge_cdc_batch(t, feed.filter(F.col("epoch") == 0), 0, "pb",
                     auto_compact_deltas=10**6, l0_groups=4)
     go = threading.Event()
     fold = t.compact_deltas
@@ -109,7 +109,7 @@ def test_background_fold_keeps_foreground_phases(spark, tmp_table_dir):
 
     t._harvest_entries = harvest_after_fold
     m = merge_cdc_batch(t, feed.filter(F.col("epoch") == 1), 1, "pb",
-                        mode="raw", auto_compact_deltas=10**6, l0_groups=4)
+                        auto_compact_deltas=10**6, l0_groups=4)
     t.join_maintenance()
     assert [h["action"] for h in t.history()][-2:] == ["compact_deltas",
                                                         "merge_mor"]

@@ -27,7 +27,7 @@ def raw_table(spark, d):
     feed = change_feed(spark, n_events=4000, n_keys=200, n_epochs=3).cache()
     for e in range(3):
         merge_cdc_batch(t, feed.filter(F.col("epoch") == e), e, "race",
-                        mode="raw", auto_compact_deltas=10**6, l0_groups=4)
+                        auto_compact_deltas=10**6, l0_groups=4)
     return t, feed, expected_final_state(feed)
 
 
@@ -145,7 +145,7 @@ def test_fold_keeps_a_column_added_while_it_ran(spark, tmp_table_dir):
     def write_after_batch(df, *a, kind="base", **kw):
         if kind == "base":
             t._write_data_files = write
-            merge_cdc_batch(t, batch, 3, "race", mode="raw",
+            merge_cdc_batch(t, batch, 3, "race",
                             auto_compact_deltas=10**6, l0_groups=4)
         return write(df, *a, kind=kind, **kw)
 

@@ -259,7 +259,7 @@ def test_checkpointed_table_state_matches_after_merges(spark, tmp_table_dir,
     feed = change_feed(spark, n_events=6000, n_keys=200, n_epochs=3).cache()
     for e in range(3):
         merge_cdc_batch(t, feed.filter(F.col("epoch") == e), e, "ckm",
-                        mode="raw", auto_compact_deltas=2, l0_groups=4)
+                        auto_compact_deltas=2, l0_groups=4)
     assert t._checkpoint_versions()
     cold = LakeTable.load(spark, t.location)
     assert cold.snapshot().files == t.snapshot().files
@@ -402,9 +402,19 @@ def test_failed_background_fold_raises_once(spark, tmp_table_dir, surface):
     assert t.read().count() == 19
 
 
-def test_async_finalize_requires_raw_mode(spark, tmp_table_dir):
+def test_async_finalize_folds_after_the_append_commit(spark, tmp_table_dir):
+    """async_finalize with the default fold rule: the finalizer commits the
+    append, then folds the touched buckets inline. m.version is the append's
+    commit and target_rows_read the rows of the files the fold removed."""
     from etl_api_bigquery_spark.lake.merge import merge_cdc_batch
     t = make_table(spark, tmp_table_dir)
-    with pytest.raises(ValueError, match="async_finalize"):
-        merge_cdc_batch(t, _delta_df(spark, 1), mode="cow",
-                        async_finalize=True)
+    ev = rows_df(spark, 40).select(F.lit(1).cast("long").alias("lsn"),
+                                   F.lit("U").alias("op"), "*")
+    m = merge_cdc_batch(t, ev, 0, "af", async_finalize=True)
+    t.join_pending_commit()
+    assert [h["action"] for h in t.history()[1:]] == ["merge_mor",
+                                                       "compact_deltas"]
+    assert m.version == 1 and t.last_txn("af") == 0
+    assert m.target_rows_read == 40
+    assert {e.kind for e in t.snapshot().files.values()} == {"base"}
+    assert t.read().count() == 40

@@ -2,17 +2,16 @@
 redelivery, NULL keys, fence idempotence, schema evolution mid-stream,
 winner prefilter, full replay sha256 match.
 
-The semantic tests are parameterized over both modes — cow (append, then a
-synchronous fold of the touched buckets) and raw (append delta files,
-resolve at read) — which must be read-indistinguishable."""
+The semantic tests are parameterized over both fold presets (the ``preset``
+fixture) — cow (append, then a synchronous fold of the touched buckets) and
+raw (append delta files, resolve at read) — which must be
+read-indistinguishable."""
 
 import os
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-MODES = ["cow", "raw"]
 
 from etl_api_bigquery_spark.cdc import change_feed, expected_final_state
 from etl_api_bigquery_spark.cdc.oracle import assert_replay_match
@@ -52,81 +51,75 @@ def make_table(spark, d):
                             key_cols=["repo", "path"], num_buckets=4)
 
 
-@pytest.mark.parametrize("mode", MODES)
-def test_lww_within_batch(spark, tmp_table_dir, mode):
+def test_lww_within_batch(spark, tmp_table_dir, preset):
     t = make_table(spark, tmp_table_dir)
     batch = events_df(spark, [
         evt(1, "I", "r1", "a", "v1"),
         evt(3, "U", "r1", "a", "v3"),
         evt(2, "U", "r1", "a", "v2"),   # out of arrival order
     ])
-    merge_cdc_batch(t, batch, batch_id=0, txn_app="x", mode=mode)
+    merge_cdc_batch(t, batch, batch_id=0, txn_app="x", **preset)
     rows = t.read().collect()
     assert len(rows) == 1 and rows[0].content == "v3"
 
 
-@pytest.mark.parametrize("mode", MODES)
-def test_delete_wins_and_reinsert(spark, tmp_table_dir, mode):
+def test_delete_wins_and_reinsert(spark, tmp_table_dir, preset):
     t = make_table(spark, tmp_table_dir)
     merge_cdc_batch(t, events_df(spark, [evt(1, "I", "r1", "a", "v1"),
                                          evt(2, "I", "r1", "b", "v1")]), 0, "x",
-                    mode=mode)
+                    **preset)
     # delete-then-reinsert within one batch: max-lsn op decides
     batch = events_df(spark, [
         evt(3, "D", "r1", "a", None),
         evt(4, "I", "r1", "a", "back"),
         evt(5, "D", "r1", "b", None),
     ])
-    merge_cdc_batch(t, batch, 1, "x", mode=mode)
+    merge_cdc_batch(t, batch, 1, "x", **preset)
     rows = {r.path: r.content for r in t.read().collect()}
     assert rows == {"a": "back"}
 
 
-@pytest.mark.parametrize("mode", MODES)
-def test_update_on_absent_key_inserts(spark, tmp_table_dir, mode):
+def test_update_on_absent_key_inserts(spark, tmp_table_dir, preset):
     """Reference MERGE semantics: WHEN NOT MATCHED THEN INSERT regardless of
     op being an update (loader.py:381-434)."""
     t = make_table(spark, tmp_table_dir)
     merge_cdc_batch(t, events_df(spark, [evt(1, "U", "rX", "p", "vX")]), 0, "x",
-                    mode=mode)
+                    **preset)
     assert t.read().count() == 1
 
 
-@pytest.mark.parametrize("mode", MODES)
-def test_duplicate_lsn_redelivery(spark, tmp_table_dir, mode):
+def test_duplicate_lsn_redelivery(spark, tmp_table_dir, preset):
     """Same events delivered twice (at-least-once source): idempotent result."""
     t = make_table(spark, tmp_table_dir)
     batch = events_df(spark, [evt(1, "I", "r1", "a", "v1"),
                               evt(2, "U", "r1", "a", "v2")])
-    merge_cdc_batch(t, batch, 0, "x", mode=mode)
-    merge_cdc_batch(t, batch.union(batch), 1, "x", mode=mode)  # redelivered
+    merge_cdc_batch(t, batch, 0, "x", **preset)
+    merge_cdc_batch(t, batch.union(batch), 1, "x", **preset)  # redelivered
     rows = t.read().collect()
     assert len(rows) == 1 and rows[0].content == "v2"
 
 
-@pytest.mark.parametrize("mode", MODES)
-def test_fence_skips_replayed_batch(spark, tmp_table_dir, mode):
+def test_fence_skips_replayed_batch(spark, tmp_table_dir, preset):
     t = make_table(spark, tmp_table_dir)
     b0 = events_df(spark, [evt(1, "I", "r1", "a", "v1")])
     b1 = events_df(spark, [evt(2, "D", "r1", "a", None)])
-    m0 = merge_cdc_batch(t, b0, 0, "app", mode=mode)
-    m1 = merge_cdc_batch(t, b1, 1, "app", mode=mode)
+    m0 = merge_cdc_batch(t, b0, 0, "app", **preset)
+    m1 = merge_cdc_batch(t, b1, 1, "app", **preset)
     assert not m0.skipped_fence and not m1.skipped_fence
     # foreachBatch retry replays batch 0 after batch 1 already committed:
-    m = merge_cdc_batch(t, b0, 0, "app", mode=mode)
+    m = merge_cdc_batch(t, b0, 0, "app", **preset)
     assert m.skipped_fence
     assert t.read().count() == 0  # delete still in effect
     assert t.last_txn("app") == 1
 
 
-@pytest.mark.parametrize("mode", MODES)
-def test_null_key_tolerated(spark, tmp_table_dir, mode):
+def test_null_key_tolerated(spark, tmp_table_dir, preset):
     """NULL-keyed rows land in a stable bucket and upsert like any key
     (reference repairs NULL-key legacy rows in MERGE, loader.py:517-519)."""
     t = make_table(spark, tmp_table_dir)
     b = events_df(spark, [(1, 0, "I", "r1", None, "c1", "py", "v1"),
                           (2, 0, "U", "r1", None, "c2", "py", "v2")])
-    merge_cdc_batch(t, b, 0, "x", mode=mode)
+    merge_cdc_batch(t, b, 0, "x", **preset)
     rows = t.read().collect()
     assert len(rows) == 1 and rows[0].content == "v2" and rows[0].path is None
 
@@ -152,33 +145,33 @@ def test_schema_evolution_mid_stream(spark, tmp_table_dir):
     assert t.read().filter("size_bytes = 123").count() == 1  # upcast old files
 
 
-@pytest.mark.parametrize("mode", MODES)
-def test_tombstone_blocks_resurrection(spark, tmp_table_dir, mode):
+def test_tombstone_blocks_resurrection(spark, tmp_table_dir, preset):
     """A delete's LSN must keep guarding the key: an OLDER event arriving in
     a LATER batch (out-of-order redelivery) cannot resurrect it — the
-    hypothesis-found COW bug, now covered explicitly for every mode."""
+    hypothesis-found COW bug, now covered explicitly for every preset."""
     t = make_table(spark, tmp_table_dir)
     merge_cdc_batch(t, events_df(spark, [evt(1, "I", "r1", "a", "v1"),
                                          evt(6, "D", "r1", "a", None)]),
-                    0, "x", mode=mode)
+                    0, "x", **preset)
     assert t.read().count() == 0
     # late event with lsn 5 < 6 arrives in the next batch
     merge_cdc_batch(t, events_df(spark, [evt(5, "U", "r1", "a", "stale")]),
-                    1, "x", mode=mode)
+                    1, "x", **preset)
     assert t.read().count() == 0  # still deleted
     # and a genuinely newer event does re-insert
     merge_cdc_batch(t, events_df(spark, [evt(7, "I", "r1", "a", "fresh")]),
-                    2, "x", mode=mode)
+                    2, "x", **preset)
     rows = t.read().collect()
     assert len(rows) == 1 and rows[0].content == "fresh"
 
 
 def test_cow_fold_failure_surfaces_after_append_landed(spark, tmp_table_dir,
                                                        monkeypatch):
-    """mode="cow" is an append plus a fold of the touched buckets. A fold
-    that fails after the append committed must raise (no silent skip),
-    reads must already match the oracle (the append and its fence landed),
-    and a rerun of the same batch_id must be fence-skipped."""
+    """The default fold rule (the cow preset) is an append plus a fold of
+    the touched buckets. A fold that fails after the append committed must
+    raise (no silent skip), reads must already match the oracle (the append
+    and its fence landed), and a rerun of the same batch_id must be
+    fence-skipped."""
     t = make_table(spark, tmp_table_dir)
     feed = change_feed(spark, n_events=2000, n_keys=100, n_epochs=1).cache()
 
@@ -187,11 +180,11 @@ def test_cow_fold_failure_surfaces_after_append_landed(spark, tmp_table_dir,
 
     monkeypatch.setattr(t, "compact_deltas", boom)
     with pytest.raises(RuntimeError, match="fold exploded"):
-        merge_cdc_batch(t, feed, 0, "x", mode="cow")
+        merge_cdc_batch(t, feed, 0, "x")
     monkeypatch.undo()
     assert t.last_txn("x") == 0
     assert_replay_match(t.read(), expected_final_state(feed))
-    assert merge_cdc_batch(t, feed, 0, "x", mode="cow").skipped_fence
+    assert merge_cdc_batch(t, feed, 0, "x").skipped_fence
     feed.unpersist()
 
 
@@ -200,7 +193,7 @@ def test_expire_tombstones(spark, tmp_table_dir):
     merge_cdc_batch(t, events_df(spark, [evt(1, "I", "r1", "a", "v1"),
                                          evt(2, "D", "r1", "a", None),
                                          evt(3, "I", "r1", "b", "v1")]),
-                    0, "x", mode="cow")
+                    0, "x")
     from etl_api_bigquery_spark.lake.table import OP_COL
     raw = t.read(with_bucket=True)
     assert raw.filter(f"{OP_COL} = 'D'").count() == 1
@@ -208,17 +201,6 @@ def test_expire_tombstones(spark, tmp_table_dir):
     raw2 = t.read(with_bucket=True)
     assert raw2.filter(f"{OP_COL} = 'D'").count() == 0
     assert t.read().count() == 1  # live data untouched
-
-
-@pytest.mark.parametrize("mode", ["mor", "rwa"])
-def test_unknown_mode_rejected(spark, tmp_table_dir, mode):
-    """Only cow and raw exist; any other mode fails before touching the
-    table instead of silently running cow."""
-    t = make_table(spark, tmp_table_dir)
-    with pytest.raises(ValueError, match="unknown mode"):
-        merge_cdc_batch(t, events_df(spark, [evt(1, "I", "r1", "a", "v1")]),
-                        0, "x", mode=mode)
-    assert t.current_version() == 0 and t.last_txn("x") is None
 
 
 def test_raw_merge_builds_the_layout_in_one_select(spark, tmp_table_dir,
@@ -242,7 +224,8 @@ def test_raw_merge_builds_the_layout_in_one_select(spark, tmp_table_dir,
             calls[_name] += 1
             return _orig(self, *a, **kw)
         monkeypatch.setattr(ClassicDF, name, counted)
-    m = merge_cdc_batch(t, batch, 0, "lay", mode="raw", l0_groups=4)
+    m = merge_cdc_batch(t, batch, 0, "lay", auto_compact_deltas=16,
+                        l0_groups=4)
     monkeypatch.undo()
     assert calls == {"withColumn": 0, "select": 1}
     assert (m.keys, m.deletes) == (40, 1)
@@ -284,21 +267,21 @@ def test_raw_prefilter_final_state_parity(spark, tmp_table_dir):
                              SILVER, key_cols=["repo", "path"], num_buckets=8)
         for e in range(3):
             merge_cdc_batch(t, feed.filter(F.col("epoch") == e), e, "pf",
-                            mode="raw", prefilter=pf)
+                            auto_compact_deltas=16, l0_groups=1,
+                            prefilter=pf)
         got[pf] = t.read().select(*cols).orderBy("repo", "path").collect()
     exp = expected_final_state(feed).select(*cols).orderBy("repo", "path")
     assert got[True] == got[False] == exp.collect()
     feed.unpersist()
 
 
-@pytest.mark.parametrize("mode", MODES)
-def test_full_replay_sha256_match(spark, tmp_table_dir, mode):
+def test_full_replay_sha256_match(spark, tmp_table_dir, preset):
     """The BASELINE.json invariant end-to-end at small scale."""
     t = make_table(spark, tmp_table_dir)
     feed = change_feed(spark, n_events=20000, n_keys=800, n_epochs=4).cache()
     for e in range(4):
         merge_cdc_batch(t, feed.filter(F.col("epoch") == e), e, "replay",
-                        mode=mode)
+                        **preset)
     res = assert_replay_match(t.read(), expected_final_state(feed))
     assert res["sha_mismatch"] == 0 and res["missing"] == 0 and res["extra"] == 0
     feed.unpersist()
@@ -421,8 +404,8 @@ def test_lineage_events_per_sec(spark, tmp_table_dir):
     from etl_api_bigquery_spark.meta.lineage import lineage_df
     t = make_table(spark, tmp_table_dir)
     merge_cdc_batch(t, events_df(spark, [evt(1, "I", "r1", "a", "v1")]),
-                    0, "x", mode="raw")
+                    0, "x", auto_compact_deltas=16, l0_groups=1)
     merge_cdc_batch(t, events_df(spark, [evt(2, "U", "r1", "a", "v2")]),
-                    1, "x", mode="cow")
+                    1, "x")
     lin = lineage_df(spark, t).filter("events_per_sec IS NOT NULL").collect()
     assert len(lin) == 2 and all(r.events_per_sec > 0 for r in lin)

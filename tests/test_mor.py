@@ -35,8 +35,8 @@ def test_mor_accumulates_deltas_then_compacts_equal_state(spark, tmp_table_dir):
     feed = change_feed(spark, n_events=8000, n_keys=300, n_epochs=4).cache()
     for e in range(4):
         merge_cdc_batch(t, feed.filter(F.col("epoch") == e), e, "mor",
-                        mode="raw", auto_compact_deltas=1000, l0_groups=4)
-    assert sum(t.delta_file_counts().values()) > 0
+                        auto_compact_deltas=1000, l0_groups=4)
+    assert sum(t.bucket_read_amplification().values()) > 0
     before = t.read()
     expected = expected_final_state(feed)
     assert_replay_match(before, expected)
@@ -44,7 +44,7 @@ def test_mor_accumulates_deltas_then_compacts_equal_state(spark, tmp_table_dir):
     # compaction must be state-preserving and clear the deltas
     v = t.compact_deltas(max_delta_files=1)
     assert v is not None
-    assert t.delta_file_counts() == {}
+    assert t.bucket_read_amplification() == {}
     assert_replay_match(t.read(), expected)
     feed.unpersist()
 
@@ -54,9 +54,9 @@ def test_mor_auto_compaction_triggers(spark, tmp_table_dir):
     feed = change_feed(spark, n_events=4000, n_keys=100, n_epochs=8).cache()
     for e in range(8):
         merge_cdc_batch(t, feed.filter(F.col("epoch") == e), e, "mor",
-                        mode="raw", auto_compact_deltas=3, l0_groups=2)
+                        auto_compact_deltas=3, l0_groups=2)
     # auto-compaction kept per-bucket delta count below the threshold
-    assert all(c < 3 for c in t.delta_file_counts().values())
+    assert all(c < 3 for c in t.bucket_read_amplification().values())
     assert_replay_match(t.read(), expected_final_state(feed))
     feed.unpersist()
 
@@ -65,11 +65,11 @@ def test_cow_after_mor_interop(spark, tmp_table_dir):
     """A COW batch on a table with outstanding deltas must resolve them."""
     t = make_table(spark, tmp_table_dir)
     feed = change_feed(spark, n_events=6000, n_keys=200, n_epochs=3).cache()
-    merge_cdc_batch(t, feed.filter("epoch = 0"), 0, "mix", mode="raw",
+    merge_cdc_batch(t, feed.filter("epoch = 0"), 0, "mix",
                     auto_compact_deltas=1000, l0_groups=4)
-    merge_cdc_batch(t, feed.filter("epoch = 1"), 1, "mix", mode="raw",
+    merge_cdc_batch(t, feed.filter("epoch = 1"), 1, "mix",
                     auto_compact_deltas=1000, l0_groups=4)
-    merge_cdc_batch(t, feed.filter("epoch = 2"), 2, "mix", mode="cow")
+    merge_cdc_batch(t, feed.filter("epoch = 2"), 2, "mix")
     assert_replay_match(t.read(), expected_final_state(feed))
     feed.unpersist()
 
@@ -81,27 +81,27 @@ def test_mor_time_travel(spark, tmp_table_dir):
                                 "commit", "lang", "content"])
     b1 = spark.createDataFrame([(2, 1, "U", "r", "p", "c", "py", "v2")],
                                b0.schema)
-    merge_cdc_batch(t, b0, 0, "tt", mode="raw")
+    merge_cdc_batch(t, b0, 0, "tt", auto_compact_deltas=16, l0_groups=1)
     v1 = t.current_version()
-    merge_cdc_batch(t, b1, 1, "tt", mode="raw")
+    merge_cdc_batch(t, b1, 1, "tt", auto_compact_deltas=16, l0_groups=1)
     assert t.read(version=v1).collect()[0].content == "v1"
     assert t.read().collect()[0].content == "v2"
 
 
 def test_raw_append_then_full_compaction(spark, tmp_table_dir):
-    """raw mode: zero-shuffle appends (mixed-bucket files), correct reads via
-    LWW resolution, and full L0 fold on compaction."""
+    """Unclustered raw L0: zero-shuffle appends (mixed-bucket files),
+    correct reads via LWW resolution, and full L0 fold on compaction."""
     from etl_api_bigquery_spark.lake.table import MIXED_BUCKET
     t = make_table(spark, tmp_table_dir)
     feed = change_feed(spark, n_events=6000, n_keys=200, n_epochs=3).cache()
     for e in range(3):
         merge_cdc_batch(t, feed.filter(F.col("epoch") == e), e, "raw",
-                        mode="raw", auto_compact_deltas=10**6)
+                        auto_compact_deltas=10**6, l0_groups=1)
     assert any(e.bucket == MIXED_BUCKET for e in t.snapshot().files.values())
     expected = expected_final_state(feed)
     assert_replay_match(t.read(), expected)
     t.compact_deltas(buckets=[0])  # mixed victims -> full fold
-    assert t.delta_file_counts() == {}
+    assert t.bucket_read_amplification() == {}
     assert all(e.bucket != MIXED_BUCKET for e in t.snapshot().files.values())
     assert_replay_match(t.read(), expected)
     feed.unpersist()
@@ -110,9 +110,10 @@ def test_raw_append_then_full_compaction(spark, tmp_table_dir):
 def test_cow_after_raw_full_rewrite_no_dupes(spark, tmp_table_dir):
     t = make_table(spark, tmp_table_dir)
     feed = change_feed(spark, n_events=4000, n_keys=150, n_epochs=2).cache()
-    merge_cdc_batch(t, feed.filter("epoch = 0"), 0, "x", mode="raw",
-                    auto_compact_deltas=10**6)
-    merge_cdc_batch(t, feed.filter("epoch = 1"), 1, "x", mode="cow")
+    merge_cdc_batch(t, feed.filter("epoch = 0"), 0, "x",
+                    auto_compact_deltas=10**6, l0_groups=1)
+    merge_cdc_batch(t, feed.filter("epoch = 1"), 1, "x",
+                    auto_compact_deltas=1, l0_groups=4)
     df = t.read()
     assert df.groupBy("repo", "path").count().filter("count > 1").isEmpty()
     assert_replay_match(df, expected_final_state(feed))
@@ -124,12 +125,13 @@ def test_mor_write_cost_independent_of_table_size(spark, tmp_table_dir):
     target rows even on a populated table."""
     t = make_table(spark, tmp_table_dir, buckets=8)
     feed = change_feed(spark, n_events=20000, n_keys=2000, n_epochs=1)
-    merge_cdc_batch(t, feed, 0, "sz", mode="raw", l0_groups=8)
+    merge_cdc_batch(t, feed, 0, "sz", auto_compact_deltas=16, l0_groups=8)
     t.compact_deltas(max_delta_files=1)
     one = spark.createDataFrame([(99999, 1, "U", "repo_1", "x", "c", "py", "nv")],
                                 ["lsn", "epoch", "op", "repo", "path",
                                  "commit", "lang", "content"])
-    m = merge_cdc_batch(t, one, 1, "sz", mode="raw", l0_groups=8)
+    m = merge_cdc_batch(t, one, 1, "sz", auto_compact_deltas=16,
+                        l0_groups=8)
     assert m.target_rows_read == 0
     assert m.buckets_touched == 1
     got = t.read().filter("repo = 'repo_1' and path = 'x'").collect()
@@ -146,7 +148,8 @@ def test_raw_tiny_batch_commits_no_empty_file(spark, tmp_table_dir):
         [(1, 0, "U", "repo_1", "x", "c", "py", "v")],
         ["lsn", "epoch", "op", "repo", "path", "commit", "lang", "content"]
     ).repartition(4)
-    m = merge_cdc_batch(t, one, 0, "tiny", mode="raw", l0_groups=1)
+    m = merge_cdc_batch(t, one, 0, "tiny", auto_compact_deltas=16,
+                        l0_groups=1)
     assert m.buckets_touched == 1
     assert [e.rows for e in t.snapshot().files.values()] == [1]
     assert list(t.bucket_read_amplification().values()) == [1]
@@ -158,7 +161,7 @@ def test_data_writes_leave_no_success_marker(spark, tmp_table_dir):
     appends and folds write no _SUCCESS file under data/."""
     t = make_table(spark, tmp_table_dir)
     feed = change_feed(spark, n_events=2000, n_keys=100, n_epochs=1)
-    merge_cdc_batch(t, feed, 0, "ok", mode="raw", l0_groups=4)
+    merge_cdc_batch(t, feed, 0, "ok", auto_compact_deltas=16, l0_groups=4)
     t.append(spark.createDataFrame(
         [("repo_x", "p", "c", "py", "a")], SILVER))
     assert t.compact_deltas(max_delta_files=1) is not None
@@ -179,7 +182,7 @@ def test_vacuum_waits_for_inflight_fold(spark, tmp_table_dir):
     feed = change_feed(spark, n_events=4000, n_keys=150, n_epochs=2).cache()
     for e in range(2):
         merge_cdc_batch(t, feed.filter(F.col("epoch") == e), e, "vac",
-                        mode="raw", auto_compact_deltas=10**6, l0_groups=4)
+                        auto_compact_deltas=10**6, l0_groups=4)
     written, release = threading.Event(), threading.Event()
     commit = t._write_commit
 
@@ -217,7 +220,7 @@ def test_vacuum_removes_crc_sidecars_and_emptied_dirs(spark, tmp_table_dir):
     feed = change_feed(spark, n_events=4000, n_keys=150, n_epochs=3).cache()
     for e in range(3):
         merge_cdc_batch(t, feed.filter(F.col("epoch") == e), e, "crc",
-                        mode="raw", auto_compact_deltas=10**6)
+                        auto_compact_deltas=10**6, l0_groups=1)
     assert t.compact_deltas(max_delta_files=1) is not None
     assert t.vacuum(keep_versions=1) > 0
     data = os.path.join(t.location, "data")
@@ -246,7 +249,7 @@ def test_raw_bucket_pure_l0_compacts_per_bucket(spark, tmp_table_dir):
     feed = change_feed(spark, n_events=6000, n_keys=200, n_epochs=3).cache()
     for e in range(3):
         merge_cdc_batch(t, feed.filter(F.col("epoch") == e), e, "rawp",
-                        mode="raw", auto_compact_deltas=10**6, l0_groups=4)
+                        auto_compact_deltas=10**6, l0_groups=4)
     assert all(e.bucket != MIXED_BUCKET for e in t.snapshot().files.values())
     expected = expected_final_state(feed)
     assert_replay_match(t.read(), expected)
@@ -272,7 +275,7 @@ def test_raw_grouped_l0_closure_bounded_fold(spark, tmp_table_dir):
     feed = change_feed(spark, n_events=6000, n_keys=200, n_epochs=3).cache()
     for e in range(3):
         merge_cdc_batch(t, feed.filter(F.col("epoch") == e), e, "rawg",
-                        mode="raw", auto_compact_deltas=10**6, l0_groups=2)
+                        auto_compact_deltas=10**6, l0_groups=2)
     snap = t.snapshot()
     spans = {t._entry_bucket_range(e) for e in snap.files.values()
              if e.bucket == MIXED_BUCKET and e.kind == "delta"}
@@ -301,7 +304,7 @@ def test_async_compaction_overlaps_and_survives_commit_race(spark, tmp_table_dir
     # threshold low enough that compaction is scheduled mid-stream
     for e in range(4):
         merge_cdc_batch(t, feed.filter(F.col("epoch") == e), e, "async",
-                        mode="raw", auto_compact_deltas=2, l0_groups=4,
+                        auto_compact_deltas=2, l0_groups=4,
                         compact_async=True)
     t.join_maintenance()
     assert any(h["action"] == "compact_deltas" for h in t.history())
@@ -314,9 +317,9 @@ def test_cow_after_grouped_raw_partial_rewrite(spark, tmp_table_dir):
     closure (not the full table) and produces no duplicates."""
     t = make_table(spark, tmp_table_dir)
     feed = change_feed(spark, n_events=4000, n_keys=150, n_epochs=2).cache()
-    merge_cdc_batch(t, feed.filter("epoch = 0"), 0, "x", mode="raw",
+    merge_cdc_batch(t, feed.filter("epoch = 0"), 0, "x",
                     auto_compact_deltas=10**6, l0_groups=4)
-    merge_cdc_batch(t, feed.filter("epoch = 1"), 1, "x", mode="cow")
+    merge_cdc_batch(t, feed.filter("epoch = 1"), 1, "x")
     df = t.read()
     assert df.groupBy("repo", "path").count().filter("count > 1").isEmpty()
     assert_replay_match(df, expected_final_state(feed))
@@ -335,7 +338,7 @@ def test_l0_groups_auto_sizes_from_the_previous_append(spark, tmp_table_dir,
 
     def commit_of(epoch):
         m = merge_cdc_batch(t, feed.filter(F.col("epoch") == epoch), epoch,
-                            "auto", mode="raw", auto_compact_deltas=10**6,
+                            "auto", auto_compact_deltas=10**6,
                             l0_groups="auto")
         return t._read_doc(m.version)
 
@@ -369,7 +372,7 @@ def test_l0_groups_auto_survives_a_restart(spark, tmp_table_dir, monkeypatch,
 
     def merge(table, epoch):
         m = merge_cdc_batch(table, feed.filter(F.col("epoch") == epoch),
-                            epoch, "auto", mode="raw",
+                            epoch, "auto",
                             auto_compact_deltas=10**6, l0_groups="auto")
         return table._read_doc(m.version)
 
@@ -407,7 +410,7 @@ def test_warm_merge_log_work_is_constant_on_a_long_log(spark, tmp_table_dir,
 
     def merge(epoch):
         merge_cdc_batch(t, feed.filter(F.col("epoch") == epoch), epoch, "o1",
-                        mode="raw", auto_compact_deltas=1, l0_groups=4,
+                        auto_compact_deltas=1, l0_groups=4,
                         compact_async=True, async_finalize=True)
         t.join_pending_commit()
         t.join_maintenance()
@@ -446,7 +449,7 @@ def test_raw_auto_l0_groups_end_to_end(spark, tmp_table_dir, tmp_path):
     fdir = str(tmp_path / "feed_auto")
     feed.write.mode("overwrite").parquet(fdir)
     batch = spark.read.parquet(fdir)
-    m = merge_cdc_batch(t, batch, 0, "auto1", mode="raw",
+    m = merge_cdc_batch(t, batch, 0, "auto1",
                         auto_compact_deltas=10**6, l0_groups="auto")
     assert m.version >= 0
     hist = [h for h in t.history() if h.get("properties", {})
@@ -461,15 +464,17 @@ def test_read_matches_oracle_on_every_file_layout(spark, tmp_table_dir):
     are: all delta (raw L0), base plus delta, base only, and no files."""
     feed = change_feed(spark, n_events=3000, n_keys=120, n_epochs=3).cache()
     expected = expected_final_state(feed)
-    layouts = {"all_delta": ["raw", "raw", "raw"],
-               "mixed": ["cow", "raw", "raw"],
-               "base_only": ["cow", "cow", "cow"]}
-    for name, modes in layouts.items():
+    fold = {"auto_compact_deltas": 1, "l0_groups": 4}
+    keep = {"auto_compact_deltas": 10**6, "l0_groups": 1}
+    layouts = {"all_delta": [keep, keep, keep],
+               "mixed": [fold, keep, keep],
+               "base_only": [fold, fold, fold]}
+    for name, batches in layouts.items():
         t = LakeTable.create(spark, os.path.join(tmp_table_dir, name), SILVER,
                              key_cols=["repo", "path"], num_buckets=4)
-        for e, mode in enumerate(modes):
+        for e, kw in enumerate(batches):
             merge_cdc_batch(t, feed.filter(F.col("epoch") == e), e, name,
-                            mode=mode, auto_compact_deltas=10**6)
+                            **kw)
         kinds = {e.kind for e in t.snapshot().files.values()}
         assert kinds == {"all_delta": {"delta"}, "mixed": {"base", "delta"},
                          "base_only": {"base"}}[name]
@@ -500,8 +505,8 @@ def test_read_resolves_across_schema_ids_in_one_bucket(spark, tmp_table_dir):
         + [(20, 1, "D", "r", "p3", None, None)],
         "lsn long, epoch long, op string, repo string, path string, "
         "content string, stars long")
-    merge_cdc_batch(t, old, 0, "evo", mode="raw", auto_compact_deltas=10**6)
-    merge_cdc_batch(t, new, 1, "evo", mode="raw", auto_compact_deltas=10**6)
+    merge_cdc_batch(t, old, 0, "evo", auto_compact_deltas=10**6, l0_groups=1)
+    merge_cdc_batch(t, new, 1, "evo", auto_compact_deltas=10**6, l0_groups=1)
     files = t.snapshot().files.values()
     assert {e.schema_id for e in files} == {0, 1}
     assert t.buckets_of_entries(files) == {0}
@@ -525,7 +530,7 @@ def test_null_key_and_sentinel_string_key_stay_distinct(spark, tmp_table_dir):
          (3, 0, "U", None, "p", "null-v2")],
         "lsn long, epoch long, op string, repo string, path string, "
         "content string")
-    merge_cdc_batch(t, feed, 0, "nk", mode="raw", auto_compact_deltas=10**6)
+    merge_cdc_batch(t, feed, 0, "nk", auto_compact_deltas=10**6, l0_groups=1)
     want = {tuple(r) for r in expected_final_state(feed).collect()}
     assert want == {(None, "p", "null-v2"), ("\x00null", "p", "sentinel")}
     assert t.read().count() == 2
@@ -541,11 +546,10 @@ def _cow_then_mixed_l0(spark, tmp_table_dir, raw_epochs):
     t = make_table(spark, tmp_table_dir, buckets=8)
     feed = change_feed(spark, n_events=4000, n_keys=200,
                        n_epochs=1 + raw_epochs).cache()
-    merge_cdc_batch(t, feed.filter(F.col("epoch") == 0), 0, "mix",
-                    mode="cow")
+    merge_cdc_batch(t, feed.filter(F.col("epoch") == 0), 0, "mix")
     for e in range(1, 1 + raw_epochs):
         merge_cdc_batch(t, feed.filter(F.col("epoch") == e), e, "mix",
-                        mode="raw", l0_groups=1, auto_compact_deltas=10**6)
+                        l0_groups=1, auto_compact_deltas=10**6)
     assert any(e.bucket == MIXED_BUCKET for e in t.snapshot().files.values())
     return t, feed
 

@@ -108,7 +108,7 @@ def test_lsm_key_lookup_is_one_pushed_scan(spark, tmp_table_dir):
     feed = change_feed(spark, n_events=2000, n_keys=100, n_epochs=4)
     for e in range(4):
         merge_cdc_batch(t, feed.filter(F.col("epoch") == e), e, "plan",
-                        mode="raw", auto_compact_deltas=10**6)
+                        auto_compact_deltas=10**6, l0_groups=1)
     key = feed.select("repo", "path").first()
     b = (spark.createDataFrame([key], "repo string, path string")
          .select(t.bucket_expr().alias("b")).first().b)

@@ -1,6 +1,6 @@
 """Property-based testing (hypothesis): for ANY sequence of I/U/D envelopes
 over a small key space, split arbitrarily into micro-batches, the engine's
-final state equals the pure LWW oracle — in both COW and MOR modes.
+final state equals the pure LWW oracle — under both fold presets (cow, raw).
 
 This generalizes the hand-written semantic tests to adversarial orderings
 (interleaved deletes, re-inserts, duplicate LSNs across batch boundaries)."""
@@ -52,9 +52,8 @@ def prop_spark(spark):
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(seq=events_strategy, n_batches=splits_strategy,
        dup=st.booleans())
-@pytest.mark.parametrize("mode", ["cow", "raw"])
 def test_any_sequence_matches_oracle(spark, tmp_path_factory, seq, n_batches,
-                                     dup, mode):
+                                     dup, preset):
     rows = []
     for lsn, (ki, op, var) in enumerate(seq):
         repo, path = KEYS[ki]
@@ -71,6 +70,6 @@ def test_any_sequence_matches_oracle(spark, tmp_path_factory, seq, n_batches,
         batch = feed.filter(feed.epoch == b)
         if batch.isEmpty():
             continue
-        merge_cdc_batch(t, batch, batch_id=b, txn_app="prop", mode=mode)
+        merge_cdc_batch(t, batch, batch_id=b, txn_app="prop", **preset)
     assert_replay_match(t.read(), expected_final_state(feed),
                         key_cols=["repo", "path"])

@@ -118,7 +118,7 @@ def test_lineage_df(spark, tmp_table_dir):
                          key_cols=["repo", "path"], num_buckets=2)
     b = spark.createDataFrame([(1, 0, "I", "r", "p", "v")],
                               ["lsn", "epoch", "op", "repo", "path", "content"])
-    merge_cdc_batch(t, b, 0, "lin-app", mode="raw")
+    merge_cdc_batch(t, b, 0, "lin-app", auto_compact_deltas=16, l0_groups=1)
     lin = lineage_df(spark, t)
     rows = [r for r in lin.collect() if r.action == "merge_mor"]
     assert len(rows) == 1

@@ -205,12 +205,13 @@ def test_async_commit_stream_matches_oracle(spark, staged):
     assert all(m.skipped_fence or m.keys == 0 for m in m2)
 
 
-def test_repair_fence_gap_recovers_lost_async_commit(spark, staged):
+def test_repair_fence_gap_recovers_lost_async_commit(spark, staged,
+                                                     preset_mode):
     """The async-commit crash window: checkpoint committed batch N but the
     table commit never fsynced. Simulate by deleting the table's last commit
-    log entry after a clean drain, then restart with SYNC commits: the
-    restart still repairs from the checkpoint's file-source log, and the
-    final state matches the oracle."""
+    log entry after a clean drain, then restart with SYNC commits under
+    either preset: the restart still repairs from the checkpoint's
+    file-source log, and the final state matches the oracle."""
     feed, feed_dir, table, ckpt = staged
     r = CdcStreamRunner(spark, table, feed_dir, ckpt, txn_app="gap1",
                         mode="raw", async_commit=True)
@@ -225,13 +226,55 @@ def test_repair_fence_gap_recovers_lost_async_commit(spark, staged):
     fresh = LakeTable(spark, table.location)
     assert fresh.last_txn("gap1") == 4
     r2 = CdcStreamRunner(spark, fresh, feed_dir, ckpt, txn_app="gap1",
-                         mode="raw", async_commit=False)
+                         mode=preset_mode, async_commit=False)
     repaired = r2.run_available_now()
     assert [m.batch_id for m in repaired] == [5]
     assert not any(m.skipped_fence for m in repaired)
     assert_replay_match(fresh.read(), expected_final_state(feed))
     # and on a healthy table the repair is a no-op
     assert r2.repair_fence_gap() == []
+
+
+@pytest.mark.parametrize("mode", ["mor", "rwa"])
+def test_unknown_mode_rejected(spark, staged, mode):
+    """Only the cow and raw presets exist: any other mode fails before the
+    stream starts, leaving the table at version 0 and no checkpoint."""
+    feed, feed_dir, table, ckpt = staged
+    r = CdcStreamRunner(spark, table, feed_dir, ckpt, txn_app="um",
+                        mode=mode)
+    with pytest.raises(ValueError, match="unknown mode"):
+        r.run_available_now()
+    assert table.current_version() == 0 and table.last_txn("um") is None
+    assert not os.path.exists(ckpt)
+
+
+def test_cow_preset_folds_each_batch_touched_buckets(spark, staged):
+    """The cow preset commits, per batch, one bucket-pure merge_mor (the
+    fence and the lineage, ``m.version``) and then one compact_deltas of
+    exactly that batch's touched buckets ("all" when it touched every one),
+    whose removed rows are ``m.target_rows_read``; the drain matches the
+    oracle."""
+    from etl_api_bigquery_spark.lake.table import FileEntry
+
+    feed, feed_dir, table, ckpt = staged
+    r = CdcStreamRunner(spark, table, feed_dir, ckpt, txn_app="cow1",
+                        mode="cow")
+    applied = [m for m in r.run_available_now() if not m.skipped_fence]
+    docs = [table._read_doc(v) for v in range(1, table.current_version() + 1)]
+    assert [d["action"] for d in docs] == ["merge_mor", "compact_deltas"] * 6
+    nb = table.num_buckets
+    for m, app, fold in zip(applied, docs[::2], docs[1::2]):
+        touched = sorted(table.buckets_of_entries(
+            FileEntry.from_json(a) for a in app["adds"]))
+        assert app["version"] == m.version
+        assert app["properties"]["txn_batch"] == m.batch_id
+        assert app["properties"]["l0_groups"] == nb
+        assert fold["properties"]["compacted_delta_buckets"] == (
+            "all" if len(touched) == nb else touched)
+        prev = table.snapshot(fold["version"] - 1).files
+        assert m.target_rows_read == sum(prev[p].rows
+                                         for p in fold["removes"])
+    assert_replay_match(table.read(), expected_final_state(feed))
 
 
 def test_session_checkpoint_manager_default_and_override(spark):
@@ -252,9 +295,8 @@ def test_session_checkpoint_manager_default_and_override(spark):
         spark.conf.set(key, fs_mgr)
 
 
-@pytest.mark.parametrize("mode", ["raw", "cow"])
 def test_ingest_job_reports_live_rows(spark, tmp_path, monkeypatch, capsys,
-                                      mode):
+                                      preset_mode):
     """``jobs/ingest.py`` run in-process on a small generated feed reports
     ``rows`` as the table's live rows, the oracle's key count — not the
     manifest row count, which counts every L0 event of a raw table and the
@@ -270,7 +312,7 @@ def test_ingest_job_reports_live_rows(spark, tmp_path, monkeypatch, capsys,
     monkeypatch.setattr(session, "get_spark", lambda **kw: spark)
     monkeypatch.setattr(sys, "argv", [
         str(job), "--generate", "3000", "--num-buckets", "4",
-        "--mode", mode, "--feed-dir", str(tmp_path / "feed"),
+        "--mode", preset_mode, "--feed-dir", str(tmp_path / "feed"),
         "--table-dir", str(tmp_path / "t"),
         "--checkpoint", str(tmp_path / "ckpt"), "--verify"])
     try:
